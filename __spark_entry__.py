@@ -1016,10 +1016,8 @@ def q_jaro_winkler_pairs(spark, sf):
     (cross-engine libm ulp risk).
     PLUS (r4) the two-table fuzzy linkage (operators/linkage.py
     link_records): even-doc_id docs as the left table, odd as the
-    right, gram+word blocking with the hot-key cap AND the salt tier
-    exercised (salt_threshold < max_block_size so mid-size blocks take
-    the salted join — result-invariant, pytest-locked), length/Lev
-    gates, JW threshold, one_to_one mutual-best. 'link' rows carry
+    right, gram+word blocking with the union-count hot-key cap,
+    length/Lev gates, JW threshold, one_to_one mutual-best. 'link' rows carry
     (-1) sentinels in the FS columns; 'adj' rows in none."""
     from deezymatch_spark.operators import (
         comparison_vectors,
@@ -1098,7 +1096,7 @@ def q_jaro_winkler_pairs(spark, sf):
     sentinel = F.lit(-1).cast("long")
     link = link_records(
         lt, rt,
-        lev_max=4, max_block_size=100, salt_threshold=20, n_salt=4,
+        lev_max=4, max_block_size=100,
         jw_threshold=0.9, one_to_one=True,
         ngram=3, prefix_len=12, use_minhash=False, use_words=True,
     ).select(
@@ -1210,8 +1208,7 @@ def _jw_fs_oracle_sql() -> str:
                 left join nrm na on na.doc_id = cv.id1
                 left join nrm nb on nb.doc_id = cv.id2),
         -- two-table linkage twin (link_records): even docs = left,
-        -- odd = right; gram+word keys, union-count hot cap at 100
-        -- (the salt tier is result-invariant so the oracle omits it),
+        -- odd = right; gram+word keys, union-count hot cap at 100,
         -- length/lev gates, jw >= 0.82, directed mutual best
         nd as (select doc_id, lower(trim(text)) as t from documents),
         lt as (select doc_id as id, t as k from nd where doc_id % 2 = 0),

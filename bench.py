@@ -16,7 +16,7 @@ BASELINE.json: docs/sec efficiency >= 0.8 from N to 4N cores):
 
 The flagship ``pipeline`` query is the full entity-resolution job
 (generate pages -> extract -> NFKD normalize -> ngram+MinHash blocking,
-salted -> JW/Lev scoring -> threshold -> connected components) over a
+hot-key capped -> JW/Lev scoring -> threshold -> connected components) over a
 deterministically synthesized pages table sized by sf; its docs/sec is
 reported as ``pages_per_sec``.
 """

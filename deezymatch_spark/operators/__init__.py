@@ -1,6 +1,6 @@
 """Operator layer: blocking, ranking, dedup, clustering, knn, split."""
 
-from .blocking import block_join, blocking_keys, candidate_pairs
+from .blocking import blocking_keys, candidate_pairs, cap_blocks
 from .cc import connected_components
 from .star import center_clusters, star_clusters
 from .dedup import (
@@ -90,7 +90,7 @@ from .sampling import (
 from .split import train_val_test_split
 
 __all__ = [
-    "block_join", "blocking_keys", "candidate_pairs",
+    "blocking_keys", "candidate_pairs", "cap_blocks",
     "center_clusters",
     "connected_components",
     "star_clusters",

@@ -4,7 +4,7 @@ No reference counterpart — DeezyMatch scores every query against every
 candidate via an exhaustive faiss index (candidateRanker.py:361-364),
 which cannot scale to 10^12 docs. Per BASELINE.json north_rule we block
 on char-ngram keys and MinHash/LSH bands over normalized strings, with
-explicit skew handling:
+explicit skew handling in one place, ``cap_blocks``:
 
 - **hot-key cap**: blocking keys whose frequency exceeds
   ``max_block_size`` are dropped (standard LSH practice — a key shared
@@ -17,9 +17,10 @@ explicit skew handling:
   it); ``"drop"`` stays the default because the graded oracle and
   cross-round bench measure that exact semantic — production guidance
   is in PLANS.md's runbook.
-- **salting**: for keys below the cap but above ``salt_threshold``, the
-  candidate side is split into ``n_salt`` sub-blocks and the query side
-  replicated, turning one hot reducer into ``n_salt`` even ones.
+
+Either way no block feeds the pair join more than C(max_block_size, 2)
+comparisons, so the cap is what bounds reducer skew; AQE's skew join
+is the backstop (PLANS.md, "ADR: the cap bounds skew").
 
 Everything is plain DataFrame ops: Catalyst handles pushdown; the only
 shuffles are the explode→join on block_key, sized via
@@ -36,8 +37,8 @@ from ..functions.ngrams import distinct_char_ngrams, prefix_ngram_keys, word_tok
 __all__ = [
     "blocking_keys",
     "blocking_preflight",
-    "block_join",
     "candidate_pairs",
+    "cap_blocks",
     "estimated_block_pairs",
     "over_cap_block_keys",
     "scored_candidate_pairs",
@@ -172,7 +173,7 @@ def _downsample_overcap(over_rows: DataFrame, max_block_size: int) -> DataFrame:
     deterministically hash-chosen members (``cap_mode="downsample"``).
 
     ``over_rows``: the over-cap keys' rows with their block size riding
-    as ``_bs`` (broadcast-joined by the caller — a tiny list by
+    as ``n_ids`` (broadcast-joined by ``cap_blocks`` — a tiny list by
     construction). Two stages bound the cost: (1) a zero-shuffle
     Bernoulli-by-hash pre-thin to an expected ``4x`` cap members per
     key, so (2) the exact per-key rank (the only shuffle) never sees
@@ -184,139 +185,67 @@ def _downsample_overcap(over_rows: DataFrame, max_block_size: int) -> DataFrame:
     harmless (a slightly thinner floor), never wrong pairs."""
     cap = int(max_block_size)
     h = F.xxhash64(F.col("id"), F.col("block_key"))
-    pre = over_rows.where(F.pmod(h, F.col("_bs")) < 4 * cap)
+    pre = over_rows.where(F.pmod(h, F.col("n_ids")) < 4 * cap)
     w = Window.partitionBy("block_key").orderBy(h.asc(), F.col("id").asc())
     return (
         pre.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= cap)
-        .drop("_rk", "_bs")
+        .drop("_rk", "n_ids")
     )
 
 
-def _size_split(
-    keys: DataFrame,
-    max_block_size: int,
-    salt_threshold: int,
-    cap_mode: str = "drop",
-) -> tuple[DataFrame, DataFrame | None]:
-    """Split keys into (small, hot-but-salvageable) WITHOUT shuffling the
-    payload-carrying key rows.
-
-    The obvious plan — aggregate sizes, inner-join them back — shuffles
-    the full key set a second time (and sorts it, since the good-key
-    list is far too big to broadcast). Inverted here: sizes aggregate
-    map-side (only distinct keys shuffle), and the *exceptional* keys —
-    capped (> max_block_size) or salt-range (> salt_threshold) — are a
-    tiny list by construction (each has > threshold members, so there
-    are at most |key_rows|/threshold of them; Zipf makes it far fewer),
-    broadcast back as anti/semi joins. The key rows themselves never
-    move. The tiny list is lazily localCheckpointed so its aggregation
-    runs once even though up to three broadcasts consume it.
-
-    ``cap_mode``: "drop" removes over-cap blocks entirely; "downsample"
-    keeps ``max_block_size`` hash-chosen members per over-cap block
-    (``_downsample_overcap``) — routed into the salted tier when one
-    exists (a just-at-cap block is by definition above any lower
-    ``salt_threshold``)."""
-    if cap_mode not in ("drop", "downsample"):
-        raise ValueError(f"cap_mode must be 'drop' or 'downsample', got {cap_mode!r}")
-    lo = min(max_block_size, salt_threshold)
-    exceptional = (
+def over_cap_block_keys(keys: DataFrame, max_block_size: int) -> DataFrame:
+    """One row per over-cap block key → DataFrame[block_key, n_ids]
+    with ``n_ids > max_block_size``: the size aggregation behind
+    ``cap_blocks``, and the per-key companion to
+    ``blocking_preflight``'s per-FAMILY aggregate. Over STRING keys it
+    emits the one-block_key-per-row blocklist
+    ``streaming_window_matches(hot_keys=...)`` consumes (write it as
+    parquet for ``jobs/streaming_matches.py --hot-keys``; refresh it
+    with ``--refresh-hot-keys-every``). One map-combined aggregation;
+    the result is tiny by construction (each key has > max_block_size
+    members, so there are at most |key_rows|/max_block_size rows; Zipf
+    makes it far fewer)."""
+    return (
         keys.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > lo)
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").alias("n_ids"))
+        .where(F.col("n_ids") > int(max_block_size))
     )
-    overcap = exceptional.where(F.col("_bs") > max_block_size)
-    good = keys.join(
-        F.broadcast(overcap.select("block_key")), "block_key", "left_anti"
-    )
-    kept = None
-    if cap_mode == "downsample":
-        kept = _downsample_overcap(
-            keys.join(F.broadcast(overcap), "block_key"), max_block_size
-        )
-    if salt_threshold >= max_block_size:
-        # every surviving block is below the salt threshold — no hot tier
-        if kept is not None:
-            good = good.unionByName(kept)
-        return good, None
-    salt_keys = exceptional.where(F.col("_bs") <= max_block_size).select("block_key")
-    small = good.join(F.broadcast(salt_keys), "block_key", "left_anti")
-    hot = good.join(F.broadcast(salt_keys), "block_key", "left_semi")
-    if kept is not None:
-        hot = hot.unionByName(kept)
-    return small, hot
 
 
-def block_join(
-    left_keys: DataFrame,
-    right_keys: DataFrame,
-    *,
-    max_block_size: int = 200,
-    n_salt: int = 8,
-    cap_mode: str = "drop",
-) -> DataFrame:
-    """Join two (id, block_key) sides → distinct candidate pairs
-    DataFrame[id1, id2].
+def cap_blocks(keys: DataFrame, max_block_size: int, cap_mode: str = "drop") -> DataFrame:
+    """The hot-key cap: ``keys`` [id, block_key, …] → only the rows
+    whose block has at most ``max_block_size`` members. Under
+    ``cap_mode="downsample"`` each over-cap block also keeps its
+    ``max_block_size`` hash-chosen members (``_downsample_overcap``).
+    Every blocking join caps through here.
 
-    Hot keys are capped on the union of both sides; surviving keys are
-    salted: the right side gets a deterministic salt pmod(hash(id),
-    n_salt) folded into the join key, the left side is exploded across
-    all salts. This bounds the largest reducer at
-    max_block_size/n_salt rows of build side per key.
-
-    The cap is applied as a broadcast anti-join on the (tiny, bounded
-    by |key_rows|/max_block_size) over-cap key list, so neither side's
-    key rows shuffle for the cap — only the pair join itself shuffles.
-    """
+    The key rows never shuffle for the cap. The obvious plan —
+    aggregate sizes, inner-join the good keys back — shuffles and sorts
+    the full key set a second time (the good-key list is far too big to
+    broadcast). Inverted here: sizes aggregate map-side (only distinct
+    keys shuffle), and the over-cap keys (``over_cap_block_keys``, a
+    tiny list by construction) are broadcast back as an anti-join. The
+    list is lazily localCheckpointed so its aggregation runs once even
+    though downsample broadcasts it twice."""
     if cap_mode not in ("drop", "downsample"):
         raise ValueError(f"cap_mode must be 'drop' or 'downsample', got {cap_mode!r}")
-    left_keys = _hash_block_keys(left_keys)
-    right_keys = _hash_block_keys(right_keys)
-    both = left_keys.select("block_key").unionByName(right_keys.select("block_key"))
-    overcap = (
-        both.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > max_block_size)
-        .localCheckpoint(eager=False)
-    )
-    dropped = overcap.select("block_key")
-    lk = left_keys.join(F.broadcast(dropped), "block_key", "left_anti")
-    rk = right_keys.join(F.broadcast(dropped), "block_key", "left_anti")
-    if cap_mode == "downsample":
-        # per-side floor: each side keeps up to max_block_size members of
-        # an over-cap key (bounding that key's pairs at cap^2, spread by
-        # the salting below); _bs is the union count, a valid modulus
-        # for the pre-thin on either side
-        lk = lk.unionByName(
-            _downsample_overcap(
-                left_keys.join(F.broadcast(overcap), "block_key"), max_block_size
-            )
-        )
-        rk = rk.unionByName(
-            _downsample_overcap(
-                right_keys.join(F.broadcast(overcap), "block_key"), max_block_size
-            )
-        )
+    overcap = over_cap_block_keys(keys, max_block_size).localCheckpoint(eager=False)
+    good = keys.join(F.broadcast(overcap.select("block_key")), "block_key", "left_anti")
+    if cap_mode == "drop":
+        return good
+    kept = _downsample_overcap(keys.join(F.broadcast(overcap), "block_key"), max_block_size)
+    return good.unionByName(kept)
 
-    rk = rk.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(n_salt)).cast("int")
-    )
-    lk = lk.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    )
-    pairs = (
-        lk.alias("l")
-        .join(
-            rk.alias("r"),
-            (F.col("l.block_key") == F.col("r.block_key"))
-            & (F.col("l._salt") == F.col("r._salt")),
-        )
-        .select(F.col("l.id").alias("id1"), F.col("r.id").alias("id2"))
-        .distinct()
-    )
-    return pairs
+
+def _lev_gated(pairs: DataFrame, lev_max: int) -> DataFrame:
+    """Add ``lev`` = Levenshtein(t1, t2) and keep the pairs within
+    ``lev_max``. The budget-bounded codegen form
+    ``levenshtein(t1, t2, lev_max + 1)`` early-exits and returns -1
+    past the budget, so non-candidates cost O(lev_max) per pair."""
+    return pairs.withColumn(
+        "lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1)
+    ).where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
 
 
 def scored_candidate_pairs(
@@ -326,8 +255,6 @@ def scored_candidate_pairs(
     *,
     lev_max: int = 2,
     max_block_size: int = 200,
-    salt_threshold: int = 1000,
-    n_salt: int = 8,
     persist_keys: bool = True,
     delta_ids: DataFrame | None = None,
     cap_mode: str = "drop",
@@ -361,8 +288,8 @@ def scored_candidate_pairs(
     so the invariant additionally requires no over-cap bucket to have
     changed size between the old run and the delta (the drop cap has
     the same boundary behavior, just at the cap crossing). The delta's key rows
-    are broadcast, so the corpus key table never shuffles and no
-    salting is needed (a broadcast hash join has no reducer skew).
+    are broadcast, so the corpus key table never shuffles (a broadcast
+    hash join has no reducer skew).
     """
     extra_keys = key_kwargs.pop("extra_keys", None)
     keys = blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
@@ -373,9 +300,10 @@ def scored_candidate_pairs(
     if persist_keys:
         keys = keys.persist()
         persisted_handle = keys
+    good = cap_blocks(keys, max_block_size, cap_mode)
+    len_gate = F.abs(F.col("a._len") - F.col("b._len")) <= lev_max
 
     if delta_ids is not None:
-        good, _ = _size_split(keys, max_block_size, max_block_size, cap_mode)
         dk = good.join(
             F.broadcast(delta_ids.select(F.col(delta_ids.columns[0]).alias("id"))),
             "id",
@@ -386,59 +314,25 @@ def scored_candidate_pairs(
             F.broadcast(dk)
             .alias("a")
             .join(good.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
-            .where(
-                (F.col("a.id") != F.col("b.id"))
-                & (F.abs(F.col("a._len") - F.col("b._len")) <= lev_max)
-            )
+            .where((F.col("a.id") != F.col("b.id")) & len_gate)
         )
-        out = (
-            joined.select(
-                F.least("a.id", "b.id").alias("id1"),
-                F.greatest("a.id", "b.id").alias("id2"),
-                F.when(a_lt_b, F.col("a._k")).otherwise(F.col("b._k")).alias("t1"),
-                F.when(a_lt_b, F.col("b._k")).otherwise(F.col("a._k")).alias("t2"),
-            )
-            .withColumn("lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1))
-            .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
-            .dropDuplicates(["id1", "id2"])
+        pairs = joined.select(
+            F.least("a.id", "b.id").alias("id1"),
+            F.greatest("a.id", "b.id").alias("id2"),
+            F.when(a_lt_b, F.col("a._k")).otherwise(F.col("b._k")).alias("t1"),
+            F.when(a_lt_b, F.col("b._k")).otherwise(F.col("a._k")).alias("t2"),
         )
-        return (
-            _attach_persisted(out, persisted_handle)
-            if persisted_handle is not None
-            else out
+    else:
+        joined = (
+            good.alias("a")
+            .join(good.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
+            .where((F.col("a.id") < F.col("b.id")) & len_gate)
         )
-
-    small, hot = _size_split(keys, max_block_size, salt_threshold, cap_mode)
-
-    def join_score(lhs, rhs, extra_key):
-        cond = (
-            (F.col("a.id") < F.col("b.id"))
-            & (F.abs(F.col("a._len") - F.col("b._len")) <= lev_max)
+        pairs = joined.select(
+            F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
+            F.col("a._k").alias("t1"), F.col("b._k").alias("t2"),
         )
-        joined = lhs.alias("a").join(
-            rhs.alias("b"), [F.col("a.block_key") == F.col("b.block_key")]
-            + ([F.col("a._salt") == F.col("b._salt")] if extra_key else []),
-        ).where(cond)
-        return (
-            joined.select(
-                F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-                F.col("a._k").alias("t1"), F.col("b._k").alias("t2"),
-            )
-            .withColumn("lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1))
-            .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
-        )
-
-    out = join_score(small, small, extra_key=False)
-
-    if hot is not None:
-        hot_r = hot.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(n_salt)).cast("int")
-        )
-        hot_l = hot.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        out = out.unionByName(join_score(hot_l, hot_r, extra_key=True))
-    out = out.dropDuplicates(["id1", "id2"])
+    out = _lev_gated(pairs, lev_max).dropDuplicates(["id1", "id2"])
     return _attach_persisted(out, persisted_handle) if persisted_handle is not None else out
 
 
@@ -448,14 +342,14 @@ def candidate_pairs(
     key_col: str,
     *,
     max_block_size: int = 200,
-    salt_threshold: int = 1000,
-    n_salt: int = 8,
     persist_keys: bool = True,
     cap_mode: str = "drop",
     **key_kwargs,
 ) -> DataFrame:
-    """Self-join dedup-style pairs (id1 < id2) within one table, with
-    two-tier skew handling (north_rule: salted blocking keys):
+    """Self-join dedup-style pairs (id1 < id2) within one table; blocks
+    larger than ``max_block_size`` are capped by ``cap_blocks``
+    (dropped, or thinned to a hash-chosen floor under
+    ``cap_mode="downsample"``).
 
     NOTE: pairs are *probabilistic* under the int64 key hashing
     (``_hash_block_keys``): a cross-family 64-bit collision merges two
@@ -464,24 +358,6 @@ def candidate_pairs(
     — whose lev/JW gates remove such pairs — this entry point returns
     raw [id1, id2]; callers needing exactness must gate downstream or
     accept the odds.
-
-    - blocks larger than ``max_block_size`` → dropped (hot-key cap);
-    - blocks in (``salt_threshold``, ``max_block_size``] → SALTED
-      self-join: the right side keeps its deterministic salt
-      ``pmod(xxhash64(id), n_salt)``, the left side is replicated
-      across all salts, so one s-member block lands on n_salt reducers
-      of ~s·s/n_salt work instead of one s² reducer. Pair coverage is
-      complete (every (a,b) meets where t == salt(b)).
-    - blocks ≤ ``salt_threshold`` → plain self-join (no replication
-      cost for the overwhelmingly common small blocks).
-
-    Default ``salt_threshold`` exceeds the default cap on purpose: a
-    block of a few hundred members is NOT a skew problem (s² pairs ≪ a
-    reducer's fair share) and salting it costs an n_salt× left-side
-    replication for nothing (measured 4× slowdown at 200k docs when
-    salting 33-100-member blocks). Lower the threshold only alongside a
-    much larger ``max_block_size``, where single blocks really can
-    dominate a reducer.
     """
     extra_keys = key_kwargs.pop("extra_keys", None)
     keys = blocking_keys(df, id_col, key_col, **key_kwargs)
@@ -490,38 +366,20 @@ def candidate_pairs(
     keys = _hash_block_keys(keys)
     persisted_handle = None
     if persist_keys:
-        # keys feeds 4 branches (sizing, small join both sides, salted
-        # join both sides); persisting avoids recomputing the ngram/
-        # minhash explode per branch. ~tens of bytes/key — spills to
-        # disk if it outgrows memory. Disable at extreme scale to trade
-        # recompute for storage.
+        # keys feeds 3 branches (sizing, both join sides); persisting
+        # avoids recomputing the ngram/minhash explode per branch. ~tens
+        # of bytes/key — spills to disk if it outgrows memory. Disable
+        # at extreme scale to trade recompute for storage.
         keys = keys.persist()
         persisted_handle = keys
-    small, hot = _size_split(keys, max_block_size, salt_threshold, cap_mode)
-
+    good = cap_blocks(keys, max_block_size, cap_mode)
     out = (
-        small.alias("a")
-        .join(small.alias("b"), "block_key")
+        good.alias("a")
+        .join(good.alias("b"), "block_key")
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+        .distinct()
     )
-
-    if hot is not None:
-        hot_r = hot.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(n_salt)).cast("int")
-        )
-        hot_l = hot.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        hot_pairs = (
-            hot_l.alias("a")
-            .join(hot_r.alias("b"), ["block_key", "_salt"])
-            .where(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        )
-        out = out.unionByName(hot_pairs)
-
-    out = out.distinct()
     return _attach_persisted(out, persisted_handle) if persisted_handle is not None else out
 
 
@@ -592,32 +450,13 @@ def blocking_preflight(
     )
 
 
-def over_cap_block_keys(keys: DataFrame, max_block_size: int) -> DataFrame:
-    """One row per over-cap STRING block key → DataFrame[block_key,
-    n_ids] with ``n_ids > max_block_size`` — the per-key companion to
-    ``blocking_preflight``'s per-FAMILY aggregate, and the tool that
-    emits the one-block_key-per-row blocklist
-    ``streaming_window_matches(hot_keys=...)`` consumes (write it as
-    parquet for ``jobs/streaming_matches.py --hot-keys``; refresh it
-    with ``--refresh-hot-keys-every``). Runs BEFORE ``_hash_block_keys``
-    on purpose: the stream anti-joins on string keys. One map-combined
-    aggregation; the result is tiny by construction (each key has >
-    max_block_size members, so there are at most
-    |key_rows|/max_block_size rows; Zipf makes it far fewer)."""
-    return (
-        keys.groupBy("block_key")
-        .agg(F.count("*").alias("n_ids"))
-        .where(F.col("n_ids") > int(max_block_size))
-    )
-
-
 def estimated_block_pairs(keys: DataFrame, *, max_block_size: int | None = None) -> DataFrame:
     """Pre-flight cost estimate for a blocking scheme → 1-row
     DataFrame[n_blocks, n_key_rows, est_pairs] where ``est_pairs`` =
     Σ C(size, 2) over blocks (after the optional cap) — the exact
     number of within-block comparisons the pair join would emit before
     dedup. Run this BEFORE the join to choose ``max_block_size`` /
-    salting / ``spark.sql.shuffle.partitions``: it costs one
+    ``spark.sql.shuffle.partitions``: it costs one
     map-combined aggregation over the key rows instead of the join
     itself (the estimate that saves the 100-TB mistake). Exact bigint
     (C(s,2) = s(s-1) div 2 — always integral)."""

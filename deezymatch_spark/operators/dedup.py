@@ -23,6 +23,7 @@ from ..functions.expr import let_
 from ..functions.ngrams import distinct_char_ngrams, lower_ws_words, normalize_basic
 from ..functions.textstats import doc_fingerprint
 from ..functions.urls import canonical_url
+from .blocking import cap_blocks
 from .cc import connected_components
 
 __all__ = [
@@ -88,15 +89,12 @@ def _minhash_base_and_keys(
     max_block_size: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared front half of the minhash near-dup family: → (``base``
-    [id, grams], ``keys`` [id, bk] with over-cap buckets dropped).
+    [id, grams], ``keys`` [id, block_key] with over-cap buckets
+    dropped by ``blocking.cap_blocks`` — the key rows never shuffle for
+    the cap).
 
     Staged projections: base-hash array, signature, band keys each
-    evaluated exactly once (see minhash_from_base docstring). The
-    hot-bucket cap is a broadcast anti-join on the (tiny) over-cap
-    bucket list — the key rows themselves never shuffle for the cap
-    (same inversion as blocking._size_split; the obvious inner join
-    against the millions-of-good-buckets list costs a second full
-    shuffle + sort of the key set).
+    evaluated exactly once (see minhash_from_base docstring).
     """
     rows_per_band = num_hashes // bands
     norm = normalize_basic(F.col(text_col))
@@ -110,16 +108,12 @@ def _minhash_base_and_keys(
         .select("id", minhash_from_base(F.col("_bh"), num_hashes).alias("_mh"))
         .select(
             "id",
-            F.explode(lsh_band_keys(F.col("_mh"), bands, rows_per_band)).alias("bk"),
+            F.explode(lsh_band_keys(F.col("_mh"), bands, rows_per_band)).alias(
+                "block_key"
+            ),
         )
     )
-    dropped = (
-        keys.groupBy("bk")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > max_block_size)
-        .select("bk")
-    )
-    return base, keys.join(F.broadcast(dropped), "bk", "left_anti")
+    return base, cap_blocks(keys, max_block_size)
 
 
 def _verify_jaccard(
@@ -160,7 +154,7 @@ def minhash_dup_pairs(
     )
     cand = (
         keys.alias("a")
-        .join(keys.alias("b"), "bk")
+        .join(keys.alias("b"), "block_key")
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
         .distinct()
@@ -213,7 +207,7 @@ def minhash_delta_pairs(
         dk = F.broadcast(dk)
     cand = (
         dk.alias("a")
-        .join(keys.alias("b"), "bk")
+        .join(keys.alias("b"), "block_key")
         .where(F.col("a.id") != F.col("b.id"))
         .select(
             F.least("a.id", "b.id").alias("id1"),
@@ -478,7 +472,7 @@ def simhash_dup_pairs(
     such pair (no recall loss), and ``bit_count(a ^ b)`` verifies
     exactly. Shuffle profile matches ``minhash_dup_pairs``: only
     (id, band_key) rows move, the hot-bucket cap is a broadcast
-    anti-join on the tiny over-cap list (`blocking._size_split`), and
+    anti-join on the tiny over-cap list (``blocking.cap_blocks``), and
     the band rows carry the 8-byte fingerprint so verification needs
     no join-back.
     """
@@ -488,8 +482,6 @@ def simhash_dup_pairs(
         raise ValueError(
             "bands must exceed hamming_max for lossless pigeonhole bucketing"
         )
-    from ..operators.blocking import _size_split
-
     width = num_bits // bands
     mask = (1 << width) - 1
     base = df.select(
@@ -516,7 +508,7 @@ def simhash_dup_pairs(
             )
         ).alias("block_key"),
     )
-    good, _ = _size_split(keys, max_block_size, max_block_size)
+    good = cap_blocks(keys, max_block_size)
     cand = (
         good.alias("a")
         .join(good.alias("b"), "block_key")

@@ -100,7 +100,9 @@ def refine_centroids(
     at EQUAL n_probe each probe covers more of a query's true
     neighborhood — measured recall gain is pinned in
     tests/test_metrics_and_ann.py. Eager: runs ``iters`` tiny jobs at
-    plan-build time."""
+    plan-build time. A candidate vector whose length differs from the
+    centroids' raises ``ValueError`` (it would skew the per-dimension
+    means silently)."""
     import math
 
     dist_fn = _METRICS[metric]
@@ -113,15 +115,27 @@ def refine_centroids(
         assigned = candidates.withColumn(
             "_l",
             F.array_min(centroid_dist_array(F.col(vec_col), cur, dist_fn))["list_id"],
-        ).select("_l", F.posexplode(F.col(vec_col)).alias("_p", "_x"))
+        ).select(
+            "_l",
+            F.size(vec_col).alias("_d"),
+            F.posexplode(F.col(vec_col)).alias("_p", "_x"),
+        )
         cells = (
             assigned.groupBy("_l", "_p")
             .agg(
                 F.sum(F.col("_x").cast("double")).alias("_s"),
                 F.count("*").alias("_n"),
+                F.min("_d").alias("_dmin"),
+                F.max("_d").alias("_dmax"),
             )
             .collect()
         )
+        bad = next((d for r in cells for d in (r._dmin, r._dmax) if d != dim), None)
+        if bad is not None:
+            raise ValueError(
+                f"refine_centroids: a candidate vector has dimension {bad}, "
+                f"the centroids have dimension {dim}"
+            )
         sums = {}
         counts = {}
         for r in cells:

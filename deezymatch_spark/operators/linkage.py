@@ -94,8 +94,6 @@ def link_records(
     key_col: str = "key",
     lev_max: int = 2,
     max_block_size: int = 200,
-    salt_threshold: int = 1000,
-    n_salt: int = 8,
     jw_threshold: float = 0.0,
     one_to_one: bool = False,
     **key_kwargs,
@@ -114,12 +112,9 @@ def link_records(
     - blocking keys built PER SIDE (same g:/w:/m:/p: families via
       ``**key_kwargs``), unioned under a side tag and persisted once so
       sizing and both join branches reuse one computation;
-    - the hot-key cap and the salt tier are decided on the UNION
-      count of both sides (a key only a million LEFT rows share is just
-      as quadratic as a shared one); over-cap keys are dropped via a
-      broadcast anti-join, salt-range keys join salted (right side
-      keeps ``pmod(xxhash64(id), n_salt)``, left side replicates across
-      salts — every (l, r) meets exactly where the salt matches);
+    - the hot-key cap (``cap_blocks``, drop mode) is decided on the
+      UNION count of both sides (a key only a million LEFT rows share
+      is just as quadratic as a shared one);
     - the length gate rides in the join condition and the
       budget-bounded ``levenshtein(t1, t2, lev_max+1)`` gate runs
       map-side BEFORE the dedup shuffle, so the Python JW UDF sees only
@@ -130,7 +125,7 @@ def link_records(
     smaller partner id. Call ``release_persisted`` (operators.blocking)
     on the result when done, as with candidate_pairs."""
     from ..functions.udfs import jaro_winkler_udf
-    from .blocking import _attach_persisted, _hash_block_keys, blocking_keys
+    from .blocking import _attach_persisted, _hash_block_keys, _lev_gated, blocking_keys, cap_blocks
 
     def side_keys(df, tag):
         return (
@@ -142,65 +137,23 @@ def link_records(
         )
 
     keys = side_keys(left, 0).unionByName(side_keys(right, 1)).persist()
-    lo = min(max_block_size, salt_threshold)
-    exceptional = (
-        keys.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > lo)
-        .localCheckpoint(eager=False)
+    good = cap_blocks(keys, max_block_size)
+    lk = good.where(F.col("_side") == 0)
+    rk = good.where(F.col("_side") == 1)
+    pairs = (
+        lk.alias("a")
+        .join(rk.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
+        .where(F.abs(F.col("a._len") - F.col("b._len")) <= lev_max)
+        .select(
+            F.col("a.id").alias("left_id"),
+            F.col("b.id").alias("right_id"),
+            F.col("a._k").alias("t1"),
+            F.col("b._k").alias("t2"),
+        )
     )
-    dropped = exceptional.where(F.col("_bs") > max_block_size).select("block_key")
-    good = keys.join(F.broadcast(dropped), "block_key", "left_anti")
-    salt_keys = (
-        None
-        if salt_threshold >= max_block_size
-        else exceptional.where(F.col("_bs") <= max_block_size).select("block_key")
-    )
-
-    def join_score(lhs, rhs, salted):
-        cond = [F.col("a.block_key") == F.col("b.block_key")] + (
-            [F.col("a._salt") == F.col("b._salt")] if salted else []
-        )
-        return (
-            lhs.alias("a")
-            .join(rhs.alias("b"), cond)
-            .where(F.abs(F.col("a._len") - F.col("b._len")) <= lev_max)
-            .select(
-                F.col("a.id").alias("left_id"),
-                F.col("b.id").alias("right_id"),
-                F.col("a._k").alias("t1"),
-                F.col("b._k").alias("t2"),
-            )
-            .withColumn("lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1))
-            .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
-        )
-
-    if salt_keys is None:
-        lk = good.where(F.col("_side") == 0)
-        rk = good.where(F.col("_side") == 1)
-        pairs = join_score(lk, rk, salted=False)
-    else:
-        small = good.join(F.broadcast(salt_keys), "block_key", "left_anti")
-        hot = good.join(F.broadcast(salt_keys), "block_key", "left_semi")
-        pairs = join_score(
-            small.where(F.col("_side") == 0),
-            small.where(F.col("_side") == 1),
-            salted=False,
-        ).unionByName(
-            join_score(
-                hot.where(F.col("_side") == 0).withColumn(
-                    "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                ),
-                hot.where(F.col("_side") == 1).withColumn(
-                    "_salt",
-                    F.pmod(F.xxhash64(F.col("id")), F.lit(n_salt)).cast("int"),
-                ),
-                salted=True,
-            )
-        )
-
     scored = (
-        pairs.dropDuplicates(["left_id", "right_id"])
+        _lev_gated(pairs, lev_max)
+        .dropDuplicates(["left_id", "right_id"])
         .withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
         .where(F.col("jw") >= jw_threshold)
         .select("left_id", "right_id", "lev", "jw")

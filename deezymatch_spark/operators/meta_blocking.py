@@ -30,9 +30,9 @@ computed in micro units as ``sum(weight) div count`` (one 1-row
 aggregate, broadcast back via crossJoin), so the cut is exact and
 partitioning-independent.
 
-Scale shape: hot blocks are removed first via the broadcast anti-join
-cap (the over-cap key list is bounded by |key_rows|/cap — the
-blocking.py pattern), so the in-block self-join's largest reducer is
+Scale shape: hot blocks are removed first by ``blocking.cap_blocks``
+(a broadcast anti-join on the over-cap key list, bounded by
+|key_rows|/cap), so the in-block self-join's largest reducer is
 O(cap²) rows; pair weights then aggregate map-combined on the (id1,
 id2) key. The per-record degree table shuffles once on id for the js
 scheme's two joins. No driver collects, no windows, no UDFs.
@@ -41,6 +41,8 @@ scheme's two joins. No driver collects, no windows, no UDFs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .blocking import cap_blocks
 
 __all__ = ["meta_block_weights", "meta_blocked_pairs"]
 
@@ -66,13 +68,7 @@ def meta_block_weights(
         raise ValueError("meta_block_weights: max_block_size must be >= 2")
 
     k = keys.select(F.col(id_col).alias("id"), F.col(key_col).alias("block_key"))
-    dropped = (
-        k.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > max_block_size)
-        .select("block_key")
-    )
-    kept = k.join(F.broadcast(dropped), "block_key", "left_anti")
+    kept = cap_blocks(k, max_block_size)
 
     pairs = (
         kept.alias("a")

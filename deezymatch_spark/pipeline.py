@@ -4,7 +4,7 @@ north_rule:
 
     pages(url, warc_ts, html, text, lang)
       S0 extract + NFKD-normalize titles           [byte-identical gate]
-      S1 blocking: char-ngram + MinHash/LSH keys, hot-key cap + salting
+      S1 blocking: char-ngram + MinHash/LSH keys, hot-key cap
       S2 pair scoring: vectorized JW/Lev (+ optional GRU siamese p1)
       S3 match filter (threshold)
       S4 transitive closure: large-star/small-star connected components
@@ -24,7 +24,7 @@ duplicates (see :func:`_write_stage`).
 
 The reference has no pipeline like this (it is a single-process library,
 DeezyMatch/candidateRanker.py:355-578 scores exhaustively); the staging,
-blocking, salting and CC come from the north_rule spec + published
+blocking, hot-key cap and CC come from the north_rule spec + published
 large-star/small-star (Kiveris et al., "Connected Components in
 MapReduce and Beyond").
 """
@@ -467,7 +467,7 @@ def er_stages(
     # normalized title, so the fused join's gates still compare titles)
     anchor_keys = _anchor_key_rows(docs) if use_anchors else None
 
-    # S1+S2 fused — blocking (salted, hot-key capped) + length gate in
+    # S1+S2 fused — blocking (hot-key capped) + length gate in
     # the join condition + codegen Levenshtein gate BEFORE the dedup
     # shuffle (see scored_candidate_pairs: the unfused variant cost 3
     # full-size shuffles of the 40M-row blocked pair set). The Python

@@ -11,7 +11,7 @@ Entity clusters are known by construction: ``cluster_id = id //
 variants_per_entity``; each member is a deterministic perturbation of
 the cluster's base name, so labeled pairs (same cluster ↔ is_match)
 exist at any scale. The domain distribution is head-heavy (a few
-domains own ~half the rows) to exercise salted blocking.
+domains own ~half the rows) to exercise the hot-key cap.
 
 Generation runs distributed via ``mapInPandas`` over ``spark.range``
 (arrow-batched; scales linearly with partitions).

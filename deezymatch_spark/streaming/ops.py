@@ -11,11 +11,18 @@ against a static candidate table with exactly-once checkpointing.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.textstats import doc_fingerprint
 from ..functions.udfs import jaro_winkler_udf, normalize_udf
-from ..operators.blocking import _hash_block_keys, blocking_keys
+from ..operators.blocking import (
+    _hash_block_keys,
+    blocking_keys,
+    cap_blocks,
+    over_cap_block_keys,
+)
 from ..sources.pages import extract_title
 
 __all__ = [
@@ -102,7 +109,8 @@ def refresh_hot_keys(
     docstring: global key counts need a batch aggregation).
 
     Writes ``<blocklist_dir>/v_<n>`` (parquet, [block_key, n_ids] via
-    ``over_cap_block_keys``) fully, THEN swaps the ``_CURRENT`` pointer
+    ``over_cap_block_keys``; ``n`` is one past the highest snapshot on
+    disk) fully, THEN swaps the ``_CURRENT`` pointer
     with the pipeline's crash-safe tmp+rename pattern
     (``pipeline._write_text_atomic``) — a kill mid-refresh leaves the
     previous snapshot live, never a torn read. Old snapshots are kept
@@ -116,8 +124,7 @@ def refresh_hot_keys(
     key frequencies are what's hot NOW, not in 2019).
 
     Returns the published snapshot path."""
-    from ..operators.blocking import over_cap_block_keys
-    from ..pipeline import _read_text, _write_text_atomic
+    from ..pipeline import _fs_path, _write_text_atomic
 
     pages = spark.read.parquet(input_path)
     if slice_hours is not None:
@@ -129,15 +136,16 @@ def refresh_hot_keys(
             )
     docs = streaming_pages_normalize(pages)  # stateless projections: batch-safe
     keys = blocking_keys(docs, "id", "title_norm", ngram=ngram, use_minhash=use_minhash)
-    ptr = blocklist_dir.rstrip("/") + "/_CURRENT"
-    try:
-        prev = _read_text(spark, ptr).strip()
-        version = int(prev.rsplit("v_", 1)[-1]) + 1
-    except Exception:
-        version = 1
-    snap = blocklist_dir.rstrip("/") + f"/v_{version}"
+    root = blocklist_dir.rstrip("/")
+    # the next version comes from the snapshots on disk, not from
+    # _CURRENT: a kill between the pointer's delete and rename leaves
+    # no pointer, and restarting at v_1 would overwrite a live snapshot
+    fs, hdir = _fs_path(spark, root)
+    names = [st.getPath().getName() for st in fs.listStatus(hdir)] if fs.exists(hdir) else []
+    version = max((int(n[2:]) for n in names if re.fullmatch(r"v_\d+", n)), default=0) + 1
+    snap = f"{root}/v_{version}"
     over_cap_block_keys(keys, max_block_size).write.mode("overwrite").parquet(snap)
-    _write_text_atomic(spark, ptr, snap)
+    _write_text_atomic(spark, f"{root}/_CURRENT", snap)
     return snap
 
 
@@ -511,19 +519,19 @@ def streaming_entity_matches(
     # The hot-key cap is applied ONCE on the static candidate side (a
     # key hot among candidates is non-discriminative; stream keys in a
     # dropped block then simply find no match — same semantics as the
-    # batch cap), as a broadcast anti-join on the tiny over-cap list;
+    # batch cap), by ``cap_blocks``;
     # keys are int64-hashed (never emitted) and the capped static side
     # is persisted so micro-batches don't rebuild it.
-    cand_keys = _hash_block_keys(
-        blocking_keys(candidates, "id", "title_norm", use_minhash=use_minhash)
-    ).withColumnRenamed("id", "cand_id")
-    dropped = (
-        cand_keys.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
-        .where(F.col("_bs") > max_block_size)
-        .select("block_key")
+    cand_keys = (
+        cap_blocks(
+            _hash_block_keys(
+                blocking_keys(candidates, "id", "title_norm", use_minhash=use_minhash)
+            ),
+            max_block_size,
+        )
+        .withColumnRenamed("id", "cand_id")
+        .persist()
     )
-    cand_keys = cand_keys.join(F.broadcast(dropped), "block_key", "left_anti").persist()
     cand_titles = candidates.select(
         F.col("id").alias("cand_id"), F.col("title_norm").alias("cand_title")
     )

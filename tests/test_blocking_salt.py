@@ -1,6 +1,6 @@
-"""Salted blocking (north_rule skew handling): the two-tier salted
-self-join must produce EXACTLY the same pair set as a naive unsalted
-join, including on a pathological hot key."""
+"""Capped blocking (north_rule skew handling): the broadcast anti-join
+cap must produce EXACTLY the same pair set as a naive size-filtered
+join, including on a large block just under the cap."""
 
 from pyspark.sql import functions as F
 
@@ -21,28 +21,26 @@ def _naive_pairs(keys, max_block_size):
     )
 
 
-def test_salted_pairs_equal_naive(spark):
-    # head-heavy: 60 docs share the prefix "hotkey" (one mega-block,
-    # above salt_threshold, below cap), plus distinct tails
+def test_capped_pairs_equal_naive(spark):
+    # head-heavy: 60 docs share the prefix "hotkey" (one mega-block
+    # below the cap), plus distinct tails
     rows = [(i, f"hotkey block {i:03d}") for i in range(60)]
     rows += [(100 + i, f"unique{i:04d} title") for i in range(40)]
     df = spark.createDataFrame(rows, "id long, key string")
 
-    salted = {
+    capped = {
         (r.id1, r.id2)
-        for r in candidate_pairs(
-            df, "id", "key", max_block_size=100, salt_threshold=16, n_salt=4
-        ).collect()
+        for r in candidate_pairs(df, "id", "key", max_block_size=100).collect()
     }
     keys = blocking_keys(df, "id", "key")
     naive = {(r.id1, r.id2) for r in _naive_pairs(keys, 100).collect()}
-    assert salted == naive
+    assert capped == naive
     # the hot block really did produce pairs (not capped away)
-    assert sum(1 for a, b in salted if a < 60 and b < 60) >= 60 * 59 / 2 * 0.9
+    assert sum(1 for a, b in capped if a < 60 and b < 60) >= 60 * 59 / 2 * 0.9
 
 
 def test_cap_drops_mega_blocks(spark):
     rows = [(i, "same title everywhere") for i in range(50)]
     df = spark.createDataFrame(rows, "id long, key string")
-    pairs = candidate_pairs(df, "id", "key", max_block_size=10, salt_threshold=4)
+    pairs = candidate_pairs(df, "id", "key", max_block_size=10)
     assert pairs.count() == 0

@@ -6,8 +6,8 @@ dropping to zero (r4 exact-gold audit: the drop cap was the entire
 from pyspark.sql import functions as F
 
 from deezymatch_spark.operators.blocking import (
-    _size_split,
     blocking_preflight,
+    cap_blocks,
     scored_candidate_pairs,
 )
 
@@ -22,35 +22,27 @@ def _keys(spark, spec):
     return spark.createDataFrame(rows, "id long, block_key long")
 
 
-def test_size_split_downsample_exact_cap_and_determinism(spark):
+def test_cap_blocks_downsample_exact_cap_and_determinism(spark):
     keys = _keys(spark, {100: 40, 200: 5})
-    small, hot = _size_split(keys, 10, 1000, "downsample")
-    assert hot is None  # salt_threshold >= cap: no salted tier
+    kept = cap_blocks(keys, 10, "downsample")
     by_key = {
         r.block_key: r.n
-        for r in small.groupBy("block_key").agg(F.count("*").alias("n")).collect()
+        for r in kept.groupBy("block_key").agg(F.count("*").alias("n")).collect()
     }
     assert by_key == {100: 10, 200: 5}  # exactly cap members survive
 
-    kept1 = {r.id for r in small.where(F.col("block_key") == 100).collect()}
-    small2, _ = _size_split(keys.repartition(7), 10, 1000, "downsample")
-    kept2 = {r.id for r in small2.where(F.col("block_key") == 100).collect()}
+    kept1 = {r.id for r in kept.where(F.col("block_key") == 100).collect()}
+    kept2 = {
+        r.id
+        for r in cap_blocks(keys.repartition(7), 10, "downsample")
+        .where(F.col("block_key") == 100)
+        .collect()
+    }
     assert kept1 == kept2 and len(kept1) == 10  # partitioning-independent
 
     # drop mode still removes the block entirely
-    small_d, _ = _size_split(keys, 10, 1000, "drop")
-    assert small_d.where(F.col("block_key") == 100).count() == 0
-
-
-def test_size_split_downsample_routes_to_salted_tier(spark):
-    keys = _keys(spark, {100: 40, 200: 5, 300: 2})
-    small, hot = _size_split(keys, 10, 3, "downsample")
-    hot_keys = {r.block_key for r in hot.select("block_key").distinct().collect()}
-    # the downsampled at-cap block (10 > salt_threshold 3) salts; so
-    # does the 5-member block; the 2-member block joins plain
-    assert hot_keys == {100, 200}
-    assert hot.where(F.col("block_key") == 100).count() == 10
-    assert {r.block_key for r in small.select("block_key").distinct().collect()} == {300}
+    dropped = cap_blocks(keys, 10, "drop")
+    assert dropped.where(F.col("block_key") == 100).count() == 0
 
 
 def test_scored_pairs_downsample_recall_floor(spark):

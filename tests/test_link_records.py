@@ -1,5 +1,5 @@
 """Two-table linkage: gated-pair parity with a naive cross join,
-salting invariance, cap behavior, and the one-to-one property."""
+cap behavior, and the one-to-one property."""
 
 from pyspark.sql import functions as F
 
@@ -68,19 +68,6 @@ def test_link_records_matches_naive_gates(spark):
     assert got == _gated_truth()
     # the known fuzzy matches are all present
     assert {(1, 101), (2, 102), (3, 103), (5, 105), (1, 106)} <= got
-
-
-def test_salting_does_not_change_pairs(spark):
-    l, r = _tables(spark)
-    plain = link_records(l, r, max_block_size=100, use_minhash=False)
-    salted = link_records(
-        l, r, max_block_size=100, salt_threshold=1, n_salt=4, use_minhash=False
-    )
-    p = {(row.left_id, row.right_id, row.lev) for row in plain.collect()}
-    s = {(row.left_id, row.right_id, row.lev) for row in salted.collect()}
-    release_persisted(plain)
-    release_persisted(salted)
-    assert p == s and p
 
 
 def test_jw_scores_and_threshold(spark):

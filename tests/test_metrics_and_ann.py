@@ -288,3 +288,18 @@ def test_semantic_dedup_kept_monotone_in_eps(spark):
     # a larger eps can only drop MORE rows (drop predicate is monotone
     # and independent of other rows' kept status)
     assert kept_loose <= kept_tight
+
+
+def test_refine_centroids_rejects_ragged_vector(spark):
+    """One short candidate vector must fail loudly, naming both
+    dimensions, instead of silently skewing the per-dimension means."""
+    import pytest
+
+    from deezymatch_spark.operators import refine_centroids
+
+    c = spark.createDataFrame(
+        [([1.0, 0.0, 0.0],), ([0.0, 1.0, 0.0],), ([0.0, 0.0],)], "vec array<double>"
+    )
+    seed = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    with pytest.raises(ValueError, match="dimension 2.*dimension 3"):
+        refine_centroids(c, "vec", seed, iters=1)

@@ -113,3 +113,35 @@ def test_refresh_caps_newly_hot_key_and_preserves_prior_matches(spark, tmp_path)
     _run_once(spark, feed, out2, ckpt2, hot0)
     stale = {(r.id1, r.id2) for r in spark.read.parquet(out2).collect()}
     assert len(stale) > len(phase1)
+
+
+def test_refresh_after_lost_pointer_keeps_old_snapshot(spark, tmp_path):
+    """A kill between the pointer's delete and rename leaves no
+    ``_CURRENT``. The next refresh must still publish a NEW version,
+    not overwrite ``v_1`` that an in-flight reader may hold."""
+    import os
+
+    from deezymatch_spark.streaming.ops import refresh_hot_keys
+
+    feed = str(tmp_path / "feed")
+    bl = str(tmp_path / "blocklist")
+    _pages(spark, [
+        (f"u://h{i}", i, "alpha station one") for i in range(5)
+    ]).write.mode("append").parquet(feed)
+
+    v1 = refresh_hot_keys(spark, feed, bl, max_block_size=3)
+    assert v1.endswith("/v_1")
+
+    def snapshot(path):
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        return files, sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    before = snapshot(v1)
+    assert before[1]  # the flooded title's keys are over the cap
+    os.remove(os.path.join(bl, "_CURRENT"))
+
+    v2 = refresh_hot_keys(spark, feed, bl, max_block_size=3)
+    assert v2.endswith("/v_2")
+    assert snapshot(v1) == before  # v_1 untouched, same files and rows
+    with open(os.path.join(bl, "_CURRENT")) as f:
+        assert f.read().strip() == v2
