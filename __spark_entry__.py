@@ -548,22 +548,13 @@ def _conf_score_pairs(s1, s2) -> list[float]:
     pair set. The model is tiny (H=16, 1 layer) so per-row calls stay
     cheap; production scoring uses the batched ``make_pair_scorer_udf``
     path — this per-row variant exists for bit-exact oracling."""
-    import pandas as pd
-
-    from deezymatch_spark.model.scorer_udf import (
-        _batch_classify,
-        _encode_batch,
-        load_artifacts,
-    )
+    from deezymatch_spark.model.scorer_udf import load_artifacts, pair_p1
 
     model, vocab, cfg = load_artifacts(_ranker_conf_artifact())
-    out = []
-    for a, b in zip(s1, s2):
-        X1, l1 = _encode_batch(pd.Series([a if a is not None else ""]), vocab, cfg)
-        X2, l2 = _encode_batch(pd.Series([b if b is not None else ""]), vocab, cfg)
-        _, p1, _ = _batch_classify(model, X1, l1, X2, l2)
-        out.append(float(p1[0]))
-    return out
+    return [
+        float(pair_p1(model, vocab, cfg, pd.Series([a]), pd.Series([b]))[0])
+        for a, b in zip(s1, s2)
+    ]
 
 
 def _make_conf_scorer_udf():
@@ -658,7 +649,8 @@ def _ranker_full_expected():
             for y in cv:
                 dcc += y * y
             den = math.sqrt(dqq) * math.sqrt(dcc)
-            cos = 1.0 - dqc / den if den != 0.0 else float("nan")
+            # a zero-norm side has similarity 0, as in functions.distances
+            cos = 1.0 - dqc / den if den != 0.0 else 1.0
             scored.append((fd, cid, corig, cnorm, cos))
         scored.sort(key=lambda r: (r[0], r[1]))
 

@@ -25,11 +25,14 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.udfs import normalize_udf, tokenize_udf
 from .model.numpy_rnn import SiameseRNN
 from .model.scorer_udf import (
+    encode_vectors,
     load_artifacts,
     make_encode_vec_udf,
     make_missing_ratio_udf,
@@ -42,7 +45,7 @@ from .model.train_numpy import fit as _fit_encoder
 from .operators.ranker import candidate_ranker as _ranker
 from .operators.split import train_val_test_split
 from .sources.tsv import read_pairs_tsv
-from .text import Vocabulary, encode_tokens, pad_sequence, string_split
+from .text import Vocabulary, encode_tokens, normalize_string, pad_sequence, string_split
 
 SEED = 1364  # DeezyMatch.py:33
 
@@ -500,6 +503,26 @@ def combine_vecs(*_args, **_kwargs):
     )
 
 
+def _query_store(spark: SparkSession, artifact_path: str, keys: list) -> DataFrame:
+    """[id, key, key_norm, vec] for a short raw-string list, encoded on
+    the driver: normalize_udf's mapping, then the vect UDF's kernel.
+    Shipped as one Arrow batch, i.e. one partition that the JVM reads
+    without a Python worker (a row list would be re-pickled through
+    one)."""
+    norms = [normalize_string(x) if x is not None else None for x in keys]
+    model, vocab, cfg = load_artifacts(artifact_path)
+    vecs = encode_vectors(model, vocab, cfg, pd.Series(norms, dtype=object))
+    table = pa.table({
+        "id": pa.array(range(len(keys)), pa.int64()),
+        "key": pa.array(keys, pa.string()),
+        "key_norm": pa.array(norms, pa.string()),
+        "vec": pa.array(list(vecs), pa.list_(pa.float32())),
+    })
+    return spark.createDataFrame(
+        table, "id bigint, key string, key_norm string, vec array<float>"
+    )
+
+
 def candidate_ranker(
     spark: SparkSession,
     queries: DataFrame | None = None,
@@ -519,11 +542,12 @@ def candidate_ranker(
     without a pre-built query store (candidateRanker.py:326-334,
     utils_candidate_ranker.py:15-85). The reference spins up a temp
     scenario on disk (tokenize → test_model → combine_vecs → load);
-    here the same thing is one in-plan vect pass: a |query|-row
-    DataFrame through ``inference(mode='vect')`` with the artifact's
-    encoder, producing the identical [id, key, key_norm, vec] store
-    the scenario path would load. Takes precedence over ``queries``
-    (reference behavior: the ``query`` branch overrides
+    here the driver normalizes the short list and encodes it with the
+    same kernel as the ``inference(mode='vect')`` UDF
+    (``scorer_udf.encode_vectors``), producing the identical
+    [id, key, key_norm, vec] store as a one-partition DataFrame: no
+    Python worker starts for the query side. Takes precedence over
+    ``queries`` (reference behavior: the ``query`` branch overrides
     query_scenario). Requires ``artifact_path``. Query ids are the
     list positions 0..n-1, matching the reference's row order."""
     if query is not None:
@@ -535,12 +559,7 @@ def candidate_ranker(
         qlist = [query] if isinstance(query, str) else list(query)
         if not qlist:
             raise ValueError("query list is empty")
-        qdf = spark.createDataFrame(
-            [(i, s) for i, s in enumerate(qlist)], "id bigint, key string"
-        )
-        queries = inference(
-            spark, artifact_path, qdf, inference_mode="vect", key_col="key"
-        ).select("id", "key", "key_norm", "vec")
+        queries = _query_store(spark, artifact_path, qlist)
     if queries is None or candidates is None:
         raise ValueError("need candidates and either queries or query=[...]")
     scorer = None

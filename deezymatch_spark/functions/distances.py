@@ -44,9 +44,15 @@ def sq_l2(a: Column, b: Column) -> Column:
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine similarity; 0 when either vector has zero norm (the
+    sklearn ``cosine_similarity`` convention the reference's D2 uses).
+    Guarding the division also keeps ANSI mode from aborting the job
+    with DIVIDE_BY_ZERO on one zero vector."""
+    den = l2_norm(a) * l2_norm(b)
+    return F.when(den == 0.0, F.lit(0.0)).otherwise(dot(a, b) / den)
 
 
 def cosine_dist(a: Column, b: Column) -> Column:
-    """1 - cosine similarity (candidateRanker.py:426)."""
+    """1 - cosine similarity (candidateRanker.py:426); 1.0 against a
+    zero-norm vector."""
     return F.lit(1.0) - cosine_sim(a, b)

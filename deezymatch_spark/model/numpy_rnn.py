@@ -350,13 +350,19 @@ class SiameseRNN:
             v = np.concatenate([v, vb], axis=1)
         return v
 
-    def classify(self, X1, len1, X2, len2):
-        """Pair classification (N1-N4): → (p0, p1, pred) arrays.
-        Softmax over the 2 fc2 logits; p1 = match confidence."""
-        out1, h1, L1 = self._encode_all(X1, len1)
-        out2, h2, L2 = self._encode_all(X2, len2)
-        v1 = self._pool(out1, h1, L1)
-        v2 = self._pool(out2, h2, L2)
+    def pooled(self, X, lengths):
+        """One siamese side's pooled vector (the input to ``head``).
+
+        h-state poolings give each row a vector that does not depend on
+        the rest of the batch. average/max/attention pool over the
+        padded time axis, whose length is the batch max length, so a
+        row's vector depends on the longest row it is batched with."""
+        return self._pool(*self._encode_all(X, lengths))
+
+    def head(self, v1, v2):
+        """Combine two sides' pooled vectors and classify (N1-N4):
+        → (p0, p1, pred) arrays. Softmax over the 2 fc2 logits;
+        p1 = match confidence."""
         p = self.pooling
         if p in ("attention", "average", "max", "maximum", "hstates", "hstates_layers"):
             combined = np.concatenate([v1, v2, v1 * v2, v1 - v2], axis=1)
@@ -383,3 +389,7 @@ class SiameseRNN:
         e = np.exp(logits)
         sm = e / e.sum(axis=1, keepdims=True)
         return sm[:, 0], sm[:, 1], sm.argmax(axis=1)
+
+    def classify(self, X1, len1, X2, len2):
+        """Pair classification: ``head`` over both sides' ``pooled``."""
+        return self.head(self.pooled(X1, len1), self.pooled(X2, len2))

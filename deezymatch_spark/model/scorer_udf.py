@@ -8,6 +8,15 @@ the numpy siamese net (model/numpy_rnn.py). No per-row Python crosses
 the JVM boundary; padding lives inside the batch (never a table
 column), honoring SURVEY.md §1.1.
 
+The pair UDFs run the recurrence once per DISTINCT string of each side
+of an Arrow batch and gather the vectors back to the rows: a ranking
+batch pairs a few queries with many candidates, so the query side
+collapses to a handful of encodes. ``encode_vectors`` is the store
+vector kernel; the vect UDF calls it per batch, and
+``api.candidate_ranker(query=...)`` calls it on the driver for its
+short query list, so a rank request starts no Python worker for the
+query side.
+
 Artifacts: a directory with ``model.npz`` (weights), ``vocab.json``
 (token→index), ``config.json`` (tokenizer + maxlen + head coefs).
 Ship with ``spark-submit --files`` and resolve via SparkFiles, or any
@@ -29,12 +38,14 @@ from ..text import encode_tokens, pad_sequence, string_split
 from .numpy_rnn import SiameseRNN
 
 __all__ = [
+    "encode_vectors",
     "load_artifacts",
     "make_encode_vec_udf",
     "make_pair_scorer_udf",
     "make_pair_features_udf",
     "make_missing_ratio_udf",
     "make_score_and_ratio_udf",
+    "pair_p1",
     "save_artifacts",
 ]
 
@@ -116,41 +127,67 @@ _HSTATES_POOLINGS = frozenset({
 _CHUNK = 1024
 
 
-def _batch_encode(model, X, lens):
-    """Length-sorted chunked encode: recurrence cost is B×T_batchmax,
-    so sorting rows by length before chunking cuts padded steps ~2x on
-    mixed-length batches. encode() returns h_n only — per-row results
-    don't depend on batch composition, so this is semantics-free."""
+def _by_length(fn, X, lens):
+    """Length-sorted chunked ``fn(X, lens)`` for a per-row encoder:
+    recurrence cost is B×T_batchmax, so sorting rows by length before
+    chunking cuts padded steps ~2x on mixed-length batches. Only for
+    outputs that don't depend on batch composition (h_n-based)."""
     n = len(lens)
     if n <= _CHUNK:
-        return model.encode(X, lens)
+        return fn(X, lens)
     order = np.argsort(lens, kind="stable")
     out = None
     for s in range(0, n, _CHUNK):
         idx = order[s:s + _CHUNK]
-        v = model.encode(X[idx], lens[idx])
+        v = fn(X[idx], lens[idx])
         if out is None:
             out = np.empty((n, v.shape[1]), dtype=v.dtype)
         out[idx] = v
     return out
 
 
-def _batch_classify(model, X1, l1, X2, l2):
-    """Chunked pair classification for h-state poolings (see
-    _batch_encode); T-dependent poolings run unchunked to preserve the
-    reference's padded-pool semantics."""
-    n = len(l1)
-    if n <= _CHUNK or model.pooling not in _HSTATES_POOLINGS:
-        return model.classify(X1, l1, X2, l2)
-    order = np.argsort(np.maximum(l1, l2), kind="stable")
-    p0 = np.empty(n)
-    p1 = np.empty(n)
-    pred = np.empty(n, dtype=np.int64)
-    for s in range(0, n, _CHUNK):
-        idx = order[s:s + _CHUNK]
-        a, b, c = model.classify(X1[idx], l1[idx], X2[idx], l2[idx])
-        p0[idx], p1[idx], pred[idx] = a, b, c
-    return p0, p1, pred
+def _batch_encode(model, X, lens):
+    """Store vectors (encode() returns h_n only, so chunking is
+    semantics-free)."""
+    return _by_length(model.encode, X, lens)
+
+
+def _batch_pooled(model, X, lens):
+    """Pair-side pooled vectors; T-dependent poolings run unchunked to
+    preserve the reference's padded-pool semantics."""
+    if model.pooling in _HSTATES_POOLINGS:
+        return _by_length(model.pooled, X, lens)
+    return model.pooled(X, lens)
+
+
+def encode_vectors(model, vocab, cfg, s: pd.Series) -> np.ndarray:
+    """Normalized strings → float32 store vectors [n, 2H] (N5): the
+    one kernel behind the vect UDF and the driver-side query encoding
+    of ``api.candidate_ranker(query=...)``."""
+    X, lens = _encode_batch(s, vocab, cfg)
+    return np.asarray(_batch_encode(model, X, lens), dtype=np.float32)
+
+
+def _side(kernel, model, vocab, cfg, s: pd.Series, return_ratio: bool = False):
+    """``kernel(model, X, lens)`` over each distinct string of one pair
+    side, gathered back to the rows. A ranking batch repeats each query
+    once per candidate, so this skips most of the recurrence. Exact for
+    every pooling: the longest row survives the dedup, so the batch max
+    length T that average/max/attention pool over does not change."""
+    first: dict = {}
+    inv = np.fromiter(
+        (first.setdefault(x, len(first)) for x in s), dtype=np.int64, count=len(s)
+    )
+    enc = _encode_batch(pd.Series(list(first), dtype=object), vocab, cfg, return_ratio)
+    v = kernel(model, enc[0], enc[1])[inv]
+    return (v, enc[2][inv]) if return_ratio else v
+
+
+def pair_p1(model, vocab, cfg, s1: pd.Series, s2: pd.Series) -> np.ndarray:
+    """Siamese match probability p1 per (s1, s2) row."""
+    v1 = _side(_batch_pooled, model, vocab, cfg, s1)
+    v2 = _side(_batch_pooled, model, vocab, cfg, s2)
+    return np.asarray(model.head(v1, v2)[1], dtype=np.float64)
 
 
 def make_encode_vec_udf(artifact_path: str):
@@ -160,9 +197,7 @@ def make_encode_vec_udf(artifact_path: str):
     def encode_vec(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         model, vocab, cfg = load_artifacts(artifact_path)
         for s in batches:
-            X, lens = _encode_batch(s, vocab, cfg)
-            vecs = _batch_encode(model, X, lens)
-            yield pd.Series(list(np.asarray(vecs, dtype=np.float32)))
+            yield pd.Series(list(encode_vectors(model, vocab, cfg, s)))
 
     return encode_vec
 
@@ -181,13 +216,10 @@ def make_pair_scorer_udf(artifact_path: str, mode: str = "combined"):
     def score_pairs(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         model, vocab, cfg = load_artifacts(artifact_path)
         for s1, s2 in it:
-            X1, l1 = _encode_batch(s1, vocab, cfg)
-            X2, l2 = _encode_batch(s2, vocab, cfg)
             if mode == "siamese":
-                _, p1, _ = _batch_classify(model, X1, l1, X2, l2)
-                yield pd.Series(np.asarray(p1, dtype=np.float64))
+                yield pd.Series(pair_p1(model, vocab, cfg, s1, s2))
                 continue
-            feats = _pair_features(model, X1, l1, X2, l2, s1, s2)
+            feats = _pair_features(model, vocab, cfg, s1, s2)
             coefs = np.asarray(cfg["head"]["coef"], dtype=np.float64)
             b = float(cfg["head"]["intercept"])
             z = feats @ coefs + b
@@ -214,9 +246,9 @@ def make_score_and_ratio_udf(artifact_path: str):
     def score_and_ratio(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
         model, vocab, cfg = load_artifacts(artifact_path)
         for s1, s2 in it:
-            X1, l1, r1 = _encode_batch(s1, vocab, cfg, return_ratio=True)
-            X2, l2, r2 = _encode_batch(s2, vocab, cfg, return_ratio=True)
-            _, p1, _ = _batch_classify(model, X1, l1, X2, l2)
+            v1, r1 = _side(_batch_pooled, model, vocab, cfg, s1, return_ratio=True)
+            v2, r2 = _side(_batch_pooled, model, vocab, cfg, s2, return_ratio=True)
+            _, p1, _ = model.head(v1, v2)
             yield pd.DataFrame({
                 "p1": np.asarray(p1, dtype=np.float64),
                 "ratio1": r1,
@@ -237,10 +269,7 @@ def make_pair_features_udf(artifact_path: str):
     def pair_features(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         model, vocab, cfg = load_artifacts(artifact_path)
         for s1, s2 in it:
-            X1, l1 = _encode_batch(s1, vocab, cfg)
-            X2, l2 = _encode_batch(s2, vocab, cfg)
-            feats = _pair_features(model, X1, l1, X2, l2, s1, s2)
-            yield pd.Series(list(feats))
+            yield pd.Series(list(_pair_features(model, vocab, cfg, s1, s2)))
 
     return pair_features
 
@@ -277,12 +306,12 @@ def make_missing_ratio_udf(artifact_path: str):
     return missing_ratio
 
 
-def _pair_features(model, X1, l1, X2, l2, s1: pd.Series, s2: pd.Series) -> np.ndarray:
+def _pair_features(model, vocab, cfg, s1: pd.Series, s2: pd.Series) -> np.ndarray:
     """[gru_cos, jw, 1 - lev/maxlen, jaccard3] per pair."""
     from ..functions.udfs import jaro_winkler
 
-    v1 = _batch_encode(model, X1, l1)
-    v2 = _batch_encode(model, X2, l2)
+    v1 = _side(_batch_encode, model, vocab, cfg, s1)
+    v2 = _side(_batch_encode, model, vocab, cfg, s2)
     num = (v1 * v2).sum(axis=1)
     den = np.maximum(np.linalg.norm(v1, axis=1) * np.linalg.norm(v2, axis=1), 1e-10)
     cos = num / den
@@ -317,10 +346,3 @@ def _levenshtein(a: str, b: str) -> int:
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
-
-
-def pair_features_batch(model, vocab, cfg, s1: pd.Series, s2: pd.Series) -> np.ndarray:
-    """Driver/test helper: featurize pairs exactly as the UDF does."""
-    X1, l1 = _encode_batch(s1, vocab, cfg)
-    X2, l2 = _encode_batch(s2, vocab, cfg)
-    return _pair_features(model, X1, l1, X2, l2, s1, s2)

@@ -141,3 +141,98 @@ def test_num_all_searches_compat(spark):
     ).collect()
     for r in out2:
         assert r.num_all_searches == 10  # exhausted: capped at |C|
+
+
+def test_cosine_zero_norm_vector_is_distance_one(spark):
+    """A zero-norm vector has cosine similarity 0 (sklearn's
+    convention, the reference's D2) instead of aborting the query with
+    DIVIDE_BY_ZERO under ANSI mode."""
+    from deezymatch_spark.functions import cosine_dist
+
+    df = spark.createDataFrame(
+        [([0.0, 0.0], [1.0, 2.0]), ([3.0, 4.0], [0.0, 0.0]), ([1.0, 0.0], [2.0, 0.0])],
+        "a array<double>, b array<double>",
+    )
+    got = [r.d for r in df.select(cosine_dist("a", "b").alias("d")).collect()]
+    assert got == pytest.approx([1.0, 1.0, 0.0])
+
+    rows = [
+        (0, "a", "a", [1.0, 0.0]),
+        (1, "z", "z", [0.0, 0.0]),
+        (2, "b", "b", [1.0, 1.0]),
+    ]
+    t = spark.createDataFrame(rows, "id long, key string, key_norm string, vec array<float>")
+    out = candidate_ranker(
+        t, t, ranking_metric="cosine", selection_threshold=1.0, num_candidates=3,
+        calc_cosine=True,
+    ).collect()
+    dist = {(r.query_id, r.candidate_id): r.cosine_dist for r in out}
+    assert dist[(1, 1)] == 1.0 and dist[(0, 1)] == 1.0 and dist[(1, 0)] == 1.0
+    assert abs(dist[(0, 0)]) < 1e-12
+
+
+# --------------------------------------------- on-the-fly query= path
+
+_QKEYS = ["London", "  Zürich ", "ﬁeld Ⅻ", "londen", "paris", "Pariss", "berlin"]
+
+
+@pytest.fixture(scope="module")
+def seeded_artifact(tmp_path_factory):
+    from deezymatch_spark.api import DEFAULT_TOKENIZE
+    from deezymatch_spark.model.numpy_rnn import SiameseRNN
+    from deezymatch_spark.model.scorer_udf import save_artifacts
+
+    vocab = {c: i + 1 for i, c in enumerate("|abcdefghijklmnopqrstuvwxyz ")}
+    model = SiameseRNN.from_seed(
+        9, len(vocab) + 1, hidden_dim=12, embedding_dim=8, n_layers=2,
+        pooling_mode="hstates_layers_simple", fc1_out=16,
+    )
+    path = str(tmp_path_factory.mktemp("seeded") / "model")
+    save_artifacts(path, model, vocab, dict(DEFAULT_TOKENIZE))
+    return path
+
+
+def _vect_store(spark, artifact, keys):
+    from deezymatch_spark import api
+
+    df = spark.createDataFrame(list(enumerate(keys)), "id long, key string")
+    return api.inference(
+        spark, artifact, df, inference_mode="vect", key_col="key"
+    ).select("id", "key", "key_norm", "vec")
+
+
+def test_query_vectors_equal_vect_inference(spark, seeded_artifact):
+    """Driver-encoded query vectors equal the vect UDF's for ASCII,
+    NFKD-expanding non-ASCII, empty and None queries."""
+    from deezymatch_spark.api import _query_store
+
+    keys = _QKEYS + ["", None]
+    got = {r.id: r for r in _query_store(spark, seeded_artifact, keys).collect()}
+    want = {r.id: r for r in _vect_store(spark, seeded_artifact, keys).collect()}
+    assert got.keys() == want.keys() == set(range(len(keys)))
+    for i in want:
+        assert got[i].key == want[i].key and got[i].key_norm == want[i].key_norm
+        np.testing.assert_allclose(got[i].vec, want[i].vec, rtol=0, atol=1e-6)
+    assert got[1].key_norm == "zürich"  # NFKD lengthened it
+    assert got[len(keys) - 1].key_norm is None
+
+
+def test_query_path_self_match_and_calc_predict_invariance(spark, seeded_artifact):
+    from deezymatch_spark import api
+
+    store = _vect_store(spark, seeded_artifact, _QKEYS)
+    kw = dict(
+        candidates=store, query=_QKEYS, artifact_path=seeded_artifact,
+        ranking_metric="faiss", selection_threshold=1e9, num_candidates=3,
+    )
+    base = api.candidate_ranker(spark, **kw).collect()
+    for r in base:
+        if r.rank == 1:
+            assert r.candidate_id == r.query_id and abs(r.faiss_dist) < 1e-9
+    pred = api.candidate_ranker(spark, calc_predict=True, **kw).collect()
+    key = lambda r: (r.query_id, r.rank, r.candidate_id)  # noqa: E731
+    assert sorted(map(key, base)) == sorted(map(key, pred))
+    faiss = {key(r): r.faiss_dist for r in base}
+    for r in pred:
+        assert abs(r.faiss_dist - faiss[key(r)]) <= 1e-9
+        assert r.dl_match is not None and 0.0 <= r.dl_match <= 1.0
