@@ -2354,11 +2354,8 @@ def q_pipeline_entity_clusters(spark, sf):
 
     st = er_stages(_er_pages_from_docs(spark, sf), spark=spark)
     w = Window.partitionBy("entity_id")
-    # deliberately NO st["release"]() here: the returned plan is lazy
-    # and still depends on the persisted docs frame — releasing before
-    # the driver collects would recompute the Python source + NFKD UDF
-    # branch per consumer (the exact recompute the persist exists to
-    # stop). The pinned cache is 1k rows and dies with the session.
+    # every er_stages stage is already checkpointed: this plan reads the
+    # s5 checkpoint, so collecting it re-runs no Python UDF
     return st["clusters"].select("url", F.min("url").over(w).alias("entity"))
 
 

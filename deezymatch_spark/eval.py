@@ -103,5 +103,4 @@ def er_f1_eval(
     ).count()
     out["truth_pairs"] = n_true
     out["blocking_recall"] = round(n_blocked_true / max(n_true, 1), 6)
-    stages["release"]()
     return out

@@ -39,7 +39,6 @@ __all__ = [
     "blocking_preflight",
     "candidate_pairs",
     "cap_blocks",
-    "estimated_block_pairs",
     "over_cap_block_keys",
     "scored_candidate_pairs",
     "release_persisted",
@@ -394,7 +393,7 @@ def blocking_preflight(
     (+ over_cap_blocks, est_pairs_capped when ``max_block_size`` is
     given)], one row per family prefix (``g:`` grams, ``w:`` words,
     ``m:`` MinHash bands, ``p:`` phonetic, ``a:`` anchors) plus a
-    ``TOTAL`` rollup row.
+    ``TOTAL`` rollup row (present on empty input too, all zeros).
 
     ``est_pairs`` = Σ C(size, 2) is the number of within-block
     comparisons the pair join feeds the dedup/gates — the join's true
@@ -442,31 +441,8 @@ def blocking_preflight(
             .cast("long")
             .alias("est_pairs_capped"),
         ]
-    return (
-        sizes.rollup("family")
-        .agg(*aggs)
-        .withColumn("family", F.coalesce("family", F.lit("TOTAL")))
-        .orderBy("family")
-    )
+    # TOTAL is a global aggregate rather than a rollup level, so the
+    # row exists (all zeros) on empty input too
+    total = sizes.agg(*aggs).select(F.lit("TOTAL").alias("family"), "*")
+    return sizes.groupBy("family").agg(*aggs).unionByName(total).orderBy("family")
 
-
-def estimated_block_pairs(keys: DataFrame, *, max_block_size: int | None = None) -> DataFrame:
-    """Pre-flight cost estimate for a blocking scheme → 1-row
-    DataFrame[n_blocks, n_key_rows, est_pairs] where ``est_pairs`` =
-    Σ C(size, 2) over blocks (after the optional cap) — the exact
-    number of within-block comparisons the pair join would emit before
-    dedup. Run this BEFORE the join to choose ``max_block_size`` /
-    ``spark.sql.shuffle.partitions``: it costs one
-    map-combined aggregation over the key rows instead of the join
-    itself (the estimate that saves the 100-TB mistake). Exact bigint
-    (C(s,2) = s(s-1) div 2 — always integral)."""
-    sizes = keys.groupBy("block_key").agg(F.count("*").alias("_bs"))
-    if max_block_size is not None:
-        sizes = sizes.where(F.col("_bs") <= int(max_block_size))
-    return sizes.agg(
-        F.count("*").cast("long").alias("n_blocks"),
-        F.coalesce(F.sum("_bs"), F.lit(0)).cast("long").alias("n_key_rows"),
-        F.coalesce(F.sum(F.expr("(_bs * (_bs - 1)) div 2")), F.lit(0))
-        .cast("long")
-        .alias("est_pairs"),
-    )

@@ -7,20 +7,28 @@ north_rule:
       S1 blocking: char-ngram + MinHash/LSH keys, hot-key cap
       S2 pair scoring: vectorized JW/Lev (+ optional GRU siamese p1)
       S3 match filter (threshold)
-      S4 transitive closure: large-star/small-star connected components
+      S4 cluster formation: connected components (or center/star)
+      S5 assignment: every doc gets its cluster's entity id
 
-Every stage is a pure DataFrame -> DataFrame function. When ``work_dir``
-is given, each stage persists its output as Parquet and writes
-per-partition lineage metrics ``(partition_id, rows, ts)`` as the
-``stage=<name>`` partition of ``<work_dir>/metrics`` — a killed job
-re-run with the same work_dir resumes from the last completed stage
-(checkpoint/lineage requirement of the north rule; stands in for
-Iceberg tables, which need a runtime jar this sandbox doesn't ship —
-the write pattern is identical). The metrics write is fenced by a
-per-stage marker and uses dynamic partition overwrite, so a kill
-between a stage's _SUCCESS and its metrics commit heals on resume and
-a re-executed stage replaces its lineage rows instead of appending
-duplicates (see :func:`_write_stage`).
+Every stage is a pure DataFrame -> DataFrame function, and every stage
+output passes through ONE boundary, :func:`_materialize`, which cuts
+the lineage so downstream branches read the stage's rows instead of
+re-running its plan (the S0 Python UDF, the JW Arrow UDF):
+
+- with ``work_dir``, each stage is written as Parquet plus
+  per-partition lineage metrics ``(partition_id, rows, ts)`` as the
+  ``stage=<name>`` partition of ``<work_dir>/metrics``; a killed job
+  re-run with the same work_dir resumes from the last completed stage
+  (checkpoint/lineage requirement of the north rule; stands in for
+  Iceberg tables, which need a runtime jar the engine does not bundle —
+  the write pattern is identical). The metrics write is fenced by a
+  per-stage marker and uses dynamic partition overwrite, so a kill
+  between a stage's _SUCCESS and its metrics commit heals on resume
+  and a re-executed stage replaces its lineage rows instead of
+  appending duplicates (see :func:`_write_stage`);
+- without one, each stage is an eager ``localCheckpoint`` in executor
+  storage, freed when the returned frames are garbage-collected —
+  callers hold no cache handles and release nothing.
 
 The reference has no pipeline like this (it is a single-process library,
 DeezyMatch/candidateRanker.py:355-578 scores exhaustively); the staging,
@@ -67,10 +75,7 @@ def _is_done(spark: SparkSession, path: str) -> bool:
     """_SUCCESS probe via the Hadoop FileSystem API so resume works on
     s3a://, hdfs://, etc. — a plain os.path.exists silently never
     matches on object stores and every stage would recompute."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_SUCCESS"))
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    return _marker_exists(spark, os.path.join(path, "_SUCCESS"))
 
 
 def _fs_path(spark: SparkSession, path: str):
@@ -159,12 +164,8 @@ def _write_stage(spark: SparkSession, d, work_dir: str, path: str, name: str) ->
         # the stage (re)executes: its old lineage rows are stale
         _drop_marker(spark, mmark)
         d = d() if callable(d) else d
-        t0 = time.time()
         d.write.mode("overwrite").parquet(path)
-        if os.environ.get("DZM_STAGE_TIMING"):
-            print(f"[stage {name}] {time.time() - t0:.1f}s")
     if not _marker_exists(spark, mmark):
-        _purge_flat_metrics(spark, metrics_dir)
         (
             stage_metrics(spark.read.parquet(path), name)
             .write.mode("overwrite")
@@ -176,31 +177,35 @@ def _write_stage(spark: SparkSession, d, work_dir: str, path: str, name: str) ->
     return spark.read.parquet(path)
 
 
-def _purge_flat_metrics(spark: SparkSession, metrics_dir: str) -> None:
-    """Migrate a pre-partition-layout metrics dir: older versions
-    APPENDED flat part files (with ``stage`` as a data column) to the
-    metrics root; mixing those with the ``stage=<name>`` partition dirs
-    breaks partition discovery ('conflicting directory structures') and
-    preserves the old duplicate rows. Deleting the flat files is
-    lossless: every stage whose per-stage marker is absent (all of
-    them, on a pre-upgrade dir) rewrites its lineage partition from the
-    stage parquet as the resume touches it."""
-    fs, hdir = _fs_path(spark, metrics_dir)
-    if not fs.exists(hdir):
-        return
-    for st in fs.listStatus(hdir):
-        if st.isFile():
-            fs.delete(st.getPath(), False)
-
-
 def _materialize(
     spark: SparkSession, df: DataFrame, work_dir: str | None, name: str
 ) -> DataFrame:
-    """Checkpoint a stage: write Parquet + metrics, read back (cuts
-    lineage, enables resume). No-op pass-through without work_dir."""
+    """The one stage boundary: run the stage once and cut its lineage.
+    With ``work_dir``: Parquet + lineage metrics, read back (resumable,
+    :func:`_write_stage`). Without: an eager ``localCheckpoint``."""
     if work_dir is None:
-        return df
+        return df.localCheckpoint()
     return _write_stage(spark, df, work_dir, _stage_path(work_dir, name), name)
+
+
+def _s0_docs(pages: DataFrame, *keep: str, anchors: bool = False) -> DataFrame:
+    """S0 — extract + NFKD-normalize: pages → [id, *keep, title,
+    (anchors,) title_norm] with ``id = xxhash64(url)``. The html is
+    pruned right after the regexp extract; ``keep`` names pass-through
+    page columns. The one S0 builder, shared by er_stages,
+    preflight_report, incremental_er's delta ingest and
+    streaming.ops.streaming_pages_normalize, so every path keys the
+    same ids and normalizes the same titles."""
+    cols = [
+        F.xxhash64("url").alias("id"),
+        *keep,
+        extract_title(F.col("html")).alias("title"),
+    ]
+    if anchors:
+        cols.append(
+            F.array_distinct(extract_anchor_texts(F.col("html"))).alias("anchors")
+        )
+    return pages.select(*cols).withColumn("title_norm", normalize_udf(F.col("title")))
 
 
 def _anchor_key_rows(docs: DataFrame) -> DataFrame:
@@ -218,23 +223,6 @@ def _anchor_key_rows(docs: DataFrame) -> DataFrame:
             F.concat(F.lit("a:"), F.col("_a")).alias("block_key"),
             F.col("title_norm").alias("_k"),
         )
-    )
-
-
-def _phonetic_key_rows(docs: DataFrame) -> DataFrame:
-    """``p:<soundex>`` key rows [id, block_key, _k] over the normalized
-    title's ASCII-alpha tokens. Shared by er_stages and
-    preflight_report (same reason as _anchor_key_rows)."""
-    from .functions.phonetic import soundex_token_keys
-
-    return docs.select(
-        "id",
-        F.explode(soundex_token_keys(F.col("title_norm"))).alias("_sx"),
-        "title_norm",
-    ).select(
-        "id",
-        F.concat(F.lit("p:"), F.col("_sx")).alias("block_key"),
-        F.col("title_norm").alias("_k"),
     )
 
 
@@ -264,24 +252,13 @@ def preflight_report(
     paying for the join (jobs/er_pipeline.py --preflight)."""
     from .operators.blocking import blocking_keys, blocking_preflight
 
-    s0_cols = [
-        F.xxhash64("url").alias("id"),
-        extract_title(F.col("html")).alias("title"),
-    ]
-    if use_anchors:
-        s0_cols.append(
-            F.array_distinct(extract_anchor_texts(F.col("html"))).alias("anchors")
-        )
-    docs = pages.select(*s0_cols).withColumn(
-        "title_norm", normalize_udf(F.col("title"))
-    )
+    docs = _s0_docs(pages, anchors=use_anchors)
     keys = blocking_keys(
-        docs, "id", "title_norm", ngram=ngram, use_minhash=use_minhash
+        docs, "id", "title_norm", ngram=ngram, use_minhash=use_minhash,
+        use_phonetic=use_phonetic,
     ).select("id", "block_key")
     if use_anchors:
         keys = keys.unionByName(_anchor_key_rows(docs).select("id", "block_key"))
-    if use_phonetic:
-        keys = keys.unionByName(_phonetic_key_rows(docs).select("id", "block_key"))
     return blocking_preflight(keys, max_block_size=max_block_size, cap_mode=cap_mode)
 
 
@@ -360,8 +337,15 @@ def er_stages(
     spark: SparkSession | None = None,
     work_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Build (and optionally checkpoint) all stages; returns each stage's
-    DataFrame keyed by name. ``pages`` needs the input_hint 5 columns.
+    """Run every stage through the one stage boundary
+    (:func:`_materialize`: parquet + lineage under ``work_dir``, an
+    eager ``localCheckpoint`` without one) and return each stage's
+    DataFrame keyed by name: ``docs`` (S0), ``scored`` (S2),
+    ``matches`` (S3), ``components`` (S4), ``clusters`` (S5), plus the
+    lazy eval-only ``pairs`` (the unfused blocked-pair universe over
+    the same key families). Every returned frame reads a checkpoint,
+    so no Python UDF re-runs downstream and there is nothing to
+    release. ``pages`` needs the input_hint 5 columns.
 
     ``use_minhash``: add the MinHash-band key family to the blocking.
     OFF by default for this pipeline — measured at 200k pages
@@ -436,56 +420,29 @@ def er_stages(
         )
     if not 0.0 < fs_fit_fraction <= 1.0:
         raise ValueError("er_stages: fs_fit_fraction must be in (0, 1]")
-    fs_cv_cache = None
     spark = spark or pages.sparkSession
 
-    # S0 — extract + normalize. html is pruned immediately after the
-    # regexp extract; downstream stages carry only (id, url, title*
-    # [, anchors]).
-    s0_cols = [
-        F.xxhash64("url").alias("id"),
-        F.col("url"),
-        extract_title(F.col("html")).alias("title"),
-    ]
-    if use_anchors:
-        s0_cols.append(
-            F.array_distinct(extract_anchor_texts(F.col("html"))).alias("anchors")
-        )
-    docs = pages.select(*s0_cols).withColumn(
-        "title_norm", normalize_udf(F.col("title"))
+    # S0 — extract + normalize; downstream stages carry only
+    # (id, url, title*[, anchors]). The checkpoint is what keeps the 6+
+    # branches reading docs (key building, block sizing, both sides of
+    # the scoring joins) from each re-running the NFKD UDF.
+    docs = _materialize(
+        spark, _s0_docs(pages, "url", anchors=use_anchors), work_dir, "s0_extract"
     )
-    docs = _materialize(spark, docs, work_dir, "s0_extract")
-    if work_dir is None:
-        # docs is referenced by 6+ downstream branches (key building,
-        # block sizing, both sides of the scoring joins); without a
-        # materialization each branch re-runs the Python source + NFKD
-        # UDF (measured: 48 ArrowEvalPython nodes in the pair plan).
-        # work_dir mode gets this for free from the parquet checkpoint.
-        docs = docs.persist()
-
-    # optional a: anchor-text key family (payload = the page's OWN
-    # normalized title, so the fused join's gates still compare titles)
-    anchor_keys = _anchor_key_rows(docs) if use_anchors else None
 
     # S1+S2 fused — blocking (hot-key capped) + length gate in
     # the join condition + codegen Levenshtein gate BEFORE the dedup
     # shuffle (see scored_candidate_pairs: the unfused variant cost 3
     # full-size shuffles of the 40M-row blocked pair set). The Python
     # JW UDF then only sees the ~2% of pairs that survive the gates.
-    extra_keys = anchor_keys
-    if use_phonetic:
-        phonetic_keys = _phonetic_key_rows(docs)
-        extra_keys = (
-            phonetic_keys
-            if extra_keys is None
-            else extra_keys.unionByName(phonetic_keys)
-        )
-
-    scored_raw = scored_candidate_pairs(
-        docs, "id", "title_norm",
-        lev_max=lev_max, max_block_size=max_block_size, ngram=ngram,
-        use_minhash=use_minhash, extra_keys=extra_keys, cap_mode=cap_mode,
+    # Optional a: anchor-text keys carry the page's OWN normalized
+    # title as payload, so the fused join's gates still compare titles.
+    key_kw = dict(
+        max_block_size=max_block_size, ngram=ngram, use_minhash=use_minhash,
+        use_phonetic=use_phonetic, cap_mode=cap_mode,
+        extra_keys=_anchor_key_rows(docs) if use_anchors else None,
     )
+    scored_raw = scored_candidate_pairs(docs, "id", "title_norm", lev_max=lev_max, **key_kw)
     if scorer == "fs":
         from .operators.fs_linkage import (
             collect_pattern_counts,
@@ -525,11 +482,10 @@ def er_stages(
     # doubles the checkpoint's bytes for inspection-only value
     scored = scored.drop("t1", "t2")
     scored = _materialize(spark, scored, work_dir, "s2_scored")
-    if work_dir is not None:
-        # the stage parquet is durable — drop blocking's persisted keys
-        # cache now so eval loops calling er_stages repeatedly don't
-        # accumulate dead RDD storage
-        release_persisted(scored_raw)
+    # s2 holds the pairs now — drop blocking's persisted keys cache so
+    # eval loops calling er_stages repeatedly don't accumulate dead
+    # RDD storage
+    release_persisted(scored_raw)
     if scorer == "fs":
         # Splink's two-step estimation, because blocked+lev-gated pairs
         # are nearly all matches and a free two-class EM over them
@@ -540,17 +496,10 @@ def er_stages(
         #     are the non-match distributions;
         # (2) EM on the blocked-pair contingency with u held fixed
         #     learns only m and lambda.
-        # Both contingencies are map-combined 27-cell aggregates; in
-        # work_dir mode the blocked one reads the checkpointed parquet
-        # instead of re-running the pair join. The fitted weights fold
-        # into the plan as literals — scoring is a pure projection.
-        if work_dir is None:
-            # the fit is an action over the gated pairs and the match
-            # stage consumes them again — persist the (small,
-            # post-Levenshtein-gate) cv frame so the pair join runs
-            # once, matching the jw path's single pass
-            scored = scored.persist()
-            fs_cv_cache = scored
+        # Both contingencies are map-combined 27-cell aggregates; the
+        # blocked one reads the s2 checkpoint instead of re-running the
+        # pair join. The fitted weights fold into the plan as literals
+        # — scoring is a pure projection.
         u_src = docs.select("id", F.col("title_norm").alias("t1"))
         rp = random_pairs(u_src, "id", ["t1"]).select(
             F.col("t1_1").alias("t1"), F.col("t1_2").alias("t2")
@@ -574,11 +523,7 @@ def er_stages(
     # unfused blocked-pair universe, built lazily for eval/inspection
     # (er_f1_eval scores F1 over ALL blocked pairs, pre-lev-gate);
     # not materialized — computed only if a caller runs an action on it
-    pairs = candidate_pairs(
-        docs, "id", "title_norm", max_block_size=max_block_size, ngram=ngram,
-        use_minhash=use_minhash, persist_keys=False, extra_keys=anchor_keys,
-        cap_mode=cap_mode,
-    )
+    pairs = candidate_pairs(docs, "id", "title_norm", persist_keys=False, **key_kw)
 
     # S3 — match filter
     if scorer == "fs":
@@ -612,23 +557,8 @@ def er_stages(
         )
     comps = _materialize(spark, comps, work_dir, "s4_components")
 
-    clusters = docs.join(comps, docs.id == comps.node, "left").select(
-        "url",
-        "title",
-        F.coalesce(F.col("component"), F.col("id")).alias("entity_id"),
-    )
-    clusters = _materialize(spark, clusters, work_dir, "s5_clusters")
-
-    def release():
-        """Drop every cache this call pinned (docs persist + blocking
-        keys + the fs cv frame). Call once the caller is done with the
-        returned frames — required in work_dir=None mode where stages
-        stay lazy and the caches must outlive this function."""
-        release_persisted(scored_raw)
-        if work_dir is None:
-            docs.unpersist()
-            if fs_cv_cache is not None:
-                fs_cv_cache.unpersist()
+    # S5 — assignment
+    clusters = _materialize(spark, _er_assignment(docs, comps), work_dir, "s5_clusters")
 
     return {
         "docs": docs,
@@ -637,7 +567,6 @@ def er_stages(
         "matches": matches,
         "components": comps,
         "clusters": clusters,
-        "release": release,
     }
 
 
@@ -728,6 +657,8 @@ def incremental_er(
             raise ValueError("incremental_er: no state to refresh and no pages to bootstrap from")
         if deleted_ids is not None:
             raise ValueError("incremental_er: deleted_ids needs an existing state (nothing ingested yet)")
+        # every er_stages stage is checkpointed, so the three table
+        # writes read stage outputs: blocking and JW run once
         st = er_stages(
             pages_new, spark=spark, jw_threshold=jw_threshold, lev_max=lev_max,
             max_block_size=max_block_size, ngram=ngram, pair_scorer=pair_scorer,
@@ -742,14 +673,11 @@ def incremental_er(
         st["docs"].select("id", "url", "title", "title_norm").write.mode(
             "overwrite"
         ).parquet(docs_path)
-        st["release"]()
         # a fresh bootstrap has complete lineage and no ingest in
         # flight — clear stale markers from any previous life of the dir
         for m in (partial_marker, pending_marker):
             _drop_marker(spark, m)
-        return _er_assignment(
-            spark.read.parquet(docs_path), spark.read.parquet(clusters_path)
-        )
+        return st["clusters"]
 
     if deleted_ids is not None:
         if not _is_done(spark, edges_path):
@@ -807,11 +735,7 @@ def incremental_er(
         )
 
     docs_prev = spark.read.parquet(docs_path)
-    new_docs = pages_new.select(
-        F.xxhash64("url").alias("id"),
-        F.col("url"),
-        extract_title(F.col("html")).alias("title"),
-    ).withColumn("title_norm", normalize_udf(F.col("title")))
+    new_docs = _s0_docs(pages_new, "url")
     new_ids = new_docs.select("id")
     # already-ingested ids: semi-join the (big) corpus against the
     # broadcast delta id list → tiny list → broadcast anti-join back.
@@ -882,14 +806,13 @@ def _swap_in(spark: SparkSession, path: str) -> None:
     via the recoverable three-step swap (see incremental_er docstring).
     Hadoop rename reports failure by RETURNING false, not raising —
     ignoring it would silently serve the stale table."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    old = jvm.org.apache.hadoop.fs.Path(path + "_old")
+    fs, hp = _fs_path(spark, path)
+    _, old = _fs_path(spark, path + "_old")
+    _, nxt = _fs_path(spark, path + "_next")
     fs.delete(old, True)  # stale _old from a crash after a completed swap
     if not fs.rename(hp, old):
         raise RuntimeError(f"table swap: rename {path} -> _old failed")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(path + "_next"), hp):
+    if not fs.rename(nxt, hp):
         raise RuntimeError(f"table swap: rename {path}_next -> {path} failed")
     fs.delete(old, True)
 
@@ -905,11 +828,9 @@ def _finish_cluster_swap(spark: SparkSession, clusters_path: str) -> None:
     up."""
     if _is_done(spark, clusters_path):
         return
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(clusters_path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    nxt = jvm.org.apache.hadoop.fs.Path(clusters_path + "_next")
-    old = jvm.org.apache.hadoop.fs.Path(clusters_path + "_old")
+    fs, hp = _fs_path(spark, clusters_path)
+    _, nxt = _fs_path(spark, clusters_path + "_next")
+    _, old = _fs_path(spark, clusters_path + "_old")
     if _is_done(spark, clusters_path + "_next"):
         fs.delete(hp, True)  # partial/un-stamped clusters dir, if any
         if not fs.rename(nxt, hp):

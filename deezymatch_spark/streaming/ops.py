@@ -16,14 +16,13 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.textstats import doc_fingerprint
-from ..functions.udfs import jaro_winkler_udf, normalize_udf
+from ..functions.udfs import jaro_winkler_udf
 from ..operators.blocking import (
     _hash_block_keys,
     blocking_keys,
     cap_blocks,
     over_cap_block_keys,
 )
-from ..sources.pages import extract_title
 
 __all__ = [
     "load_hot_keys",
@@ -84,13 +83,11 @@ def streaming_exact_dedup(
 
 def streaming_pages_normalize(pages_stream: DataFrame) -> DataFrame:
     """Stateless extract + NFKD-normalize on a pages stream — the exact
-    batch S0 expressions; works unchanged on a streaming DataFrame."""
-    return pages_stream.select(
-        F.xxhash64("url").alias("id"),
-        "url",
-        "warc_ts",
-        extract_title(F.col("html")).alias("title"),
-    ).withColumn("title_norm", normalize_udf(F.col("title")))
+    batch S0 (``pipeline._s0_docs``) plus ``warc_ts``; works unchanged
+    on a streaming DataFrame."""
+    from ..pipeline import _s0_docs
+
+    return _s0_docs(pages_stream, "url", "warc_ts")
 
 
 def refresh_hot_keys(

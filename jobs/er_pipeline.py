@@ -187,42 +187,39 @@ def main() -> None:
             fs_fit_fraction=args.fs_fit_fraction,
             clustering=args.clustering,
         )
-        try:
-            stages["clusters"].write.mode("overwrite").parquet(args.output)
-            if args.stats_output:
-                from pyspark.sql import functions as F
+        stages["clusters"].write.mode("overwrite").parquet(args.output)
+        if args.stats_output:
+            from pyspark.sql import functions as F
 
-                from deezymatch_spark.operators.metrics import cluster_graph_stats
+            from deezymatch_spark.operators.metrics import cluster_graph_stats
 
-                stats = cluster_graph_stats(
-                    stages["matches"].select(
-                        F.col("id1").alias("src"), F.col("id2").alias("dst")
-                    ),
-                    stages["components"].select(
-                        "node", F.col("component").alias("cluster")
-                    ),
-                )
-                stats.write.mode("overwrite").parquet(args.stats_output)
-                n_tree = spark.read.parquet(args.stats_output).where("is_tree").count()
-                print(f"cluster stats written to {args.stats_output} "
-                      f"({n_tree} tree-like chain-risk clusters)")
-            if args.audit_recall:
-                from deezymatch_spark.pipeline import exact_recall_audit
+            stats = cluster_graph_stats(
+                stages["matches"].select(
+                    F.col("id1").alias("src"), F.col("id2").alias("dst")
+                ),
+                stages["components"].select(
+                    "node", F.col("component").alias("cluster")
+                ),
+            )
+            stats.write.mode("overwrite").parquet(args.stats_output)
+            n_tree = spark.read.parquet(args.stats_output).where("is_tree").count()
+            print(f"cluster stats written to {args.stats_output} "
+                  f"({n_tree} tree-like chain-risk clusters)")
+        if args.audit_recall:
+            from deezymatch_spark.pipeline import exact_recall_audit
 
-                audit = exact_recall_audit(
-                    stages["docs"], stages["pairs"],
-                    lev_max=args.lev_max,
-                    sample_fraction=args.audit_recall,
-                ).collect()[0]
-                print(
-                    "blocking recall audit (exact lev<="
-                    f"{args.lev_max} gold, fraction={args.audit_recall}): "
-                    f"pair_completeness_micro={audit['pair_completeness_micro']} "
-                    f"gold={audit['n_gold']} cand={audit['n_cand']} "
-                    f"found={audit['n_found']}"
-                )
-        finally:
-            stages["release"]()
+            audit = exact_recall_audit(
+                stages["docs"], stages["pairs"],
+                lev_max=args.lev_max,
+                sample_fraction=args.audit_recall,
+            ).collect()[0]
+            print(
+                "blocking recall audit (exact lev<="
+                f"{args.lev_max} gold, fraction={args.audit_recall}): "
+                f"pair_completeness_micro={audit['pair_completeness_micro']} "
+                f"gold={audit['n_gold']} cand={audit['n_cand']} "
+                f"found={audit['n_found']}"
+            )
         print(
             f"clusters written to {args.output}: "
             f"{spark.read.parquet(args.output).count()} rows"

@@ -31,12 +31,10 @@ def _matches(spark, pages_rows, **kwargs):
         pages_rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     st = er_stages(pages, spark=spark, **kwargs)
-    got = {
+    return {
         tuple(sorted((r.id1, r.id2)))
         for r in st["matches"].select("id1", "id2").collect()
     }
-    st["release"]()
-    return got
 
 
 def test_anchor_keys_recover_short_title_pair(spark):

@@ -1,16 +1,13 @@
-"""Pre-flight diagnostics: estimated_block_pairs must equal the exact
-within-block comparison count the pair join would emit, and the LSH
-S-curve helpers must match the closed form p(s) = 1 - (1 - s^r)^b."""
+"""Pre-flight diagnostics: blocking_preflight's TOTAL row must equal
+the exact within-block comparison count the pair join would emit, and
+the LSH S-curve helpers must match the closed form
+p(s) = 1 - (1 - s^r)^b."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from deezymatch_spark.functions.hashing import lsh_detection_curve, lsh_threshold
-from deezymatch_spark.operators.blocking import (
-    blocking_keys,
-    blocking_preflight,
-    estimated_block_pairs,
-)
+from deezymatch_spark.operators.blocking import blocking_keys, blocking_preflight
 
 
 def _keys_fixture(spark):
@@ -24,14 +21,23 @@ def _keys_fixture(spark):
     return blocking_keys(df, "id", "key")
 
 
-def test_estimated_block_pairs_exact(spark):
+def _total(keys, **kw):
+    rows = [r for r in blocking_preflight(keys, **kw).collect() if r.family == "TOTAL"]
+    assert len(rows) == 1
+    return rows[0]
+
+
+def _block_sizes(keys):
+    return [r.n for r in keys.groupBy("block_key").agg(F.count("*").alias("n")).collect()]
+
+
+def test_preflight_total_matches_join_count(spark):
     keys = _keys_fixture(spark)
-    est = estimated_block_pairs(keys).collect()[0]
-    sizes = {r.block_key: r.n for r in keys.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    want_pairs = sum(n * (n - 1) // 2 for n in sizes.values())
-    assert est.n_blocks == len(sizes)
-    assert est.n_key_rows == sum(sizes.values())
-    assert est.est_pairs == want_pairs
+    tot = _total(keys)
+    sizes = _block_sizes(keys)
+    assert tot.n_blocks == len(sizes)
+    assert tot.n_key_rows == sum(sizes)
+    assert tot.est_pairs == sum(n * (n - 1) // 2 for n in sizes)
     # and it matches the join the estimate stands in for
     joined = (
         keys.alias("a")
@@ -39,26 +45,39 @@ def test_estimated_block_pairs_exact(spark):
         .where(F.col("a.id") < F.col("b.id"))
         .count()
     )
-    assert est.est_pairs == joined
+    assert tot.est_pairs == joined
 
 
-def test_estimated_block_pairs_cap(spark):
+def test_preflight_total_cap_excludes_over_cap_blocks(spark):
     keys = _keys_fixture(spark)
     cap = 3
-    est = estimated_block_pairs(keys, max_block_size=cap).collect()[0]
-    # over-cap blocks are excluded entirely (rows AND pairs)
-    sizes = [r.n for r in keys.groupBy("block_key").agg(F.count("*").alias("n")).collect()]
+    tot = _total(keys, max_block_size=cap)
+    # over-cap blocks are excluded from the capped price entirely, and
+    # the capped price is the join count over the surviving blocks
+    sizes = _block_sizes(keys)
     kept = [n for n in sizes if n <= cap]
     assert len(kept) < len(sizes)  # the fixture really has an over-cap block
-    assert est.n_blocks == len(kept)
-    assert est.n_key_rows == sum(kept)
-    assert est.est_pairs == sum(n * (n - 1) // 2 for n in kept)
+    assert tot.over_cap_blocks == len(sizes) - len(kept)
+    assert tot.est_pairs_capped == sum(n * (n - 1) // 2 for n in kept)
+    small = keys.join(
+        keys.groupBy("block_key").count().where(F.col("count") <= cap), "block_key", "left_semi"
+    )
+    joined = (
+        small.alias("a")
+        .join(small.alias("b"), "block_key")
+        .where(F.col("a.id") < F.col("b.id"))
+        .count()
+    )
+    assert tot.est_pairs_capped == joined
 
 
-def test_estimated_block_pairs_empty(spark):
+def test_preflight_total_on_empty_input(spark):
     empty = spark.createDataFrame([], "block_key string, id long")
-    est = estimated_block_pairs(empty).collect()[0]
-    assert (est.n_blocks, est.n_key_rows, est.est_pairs) == (0, 0, 0)
+    tot = _total(empty, max_block_size=3)
+    assert (
+        tot.n_blocks, tot.n_key_rows, tot.max_block, tot.est_pairs,
+        tot.over_cap_blocks, tot.est_pairs_capped,
+    ) == (0, 0, 0, 0, 0, 0)
 
 
 def test_lsh_curve_shape():
@@ -101,18 +120,17 @@ def test_blocking_preflight_rollup(spark):
         assert getattr(tot, col) == sum(getattr(rows[f], col) for f in fams), col
     assert tot.est_pairs_capped <= tot.est_pairs
     assert tot.over_cap_blocks >= 1  # the size-4 gram block is over cap
-    # capped total agrees with the single-number estimator
-    est = estimated_block_pairs(keys, max_block_size=cap).collect()[0]
-    assert tot.est_pairs_capped == est.est_pairs
-    assert tot.max_block == max(
-        r.n for r in keys.groupBy("block_key").agg(F.count("*").alias("n")).collect()
-    )
+    # capped total = the within-cap blocks' C(n, 2) sum
+    sizes = _block_sizes(keys)
+    assert tot.est_pairs_capped == sum(n * (n - 1) // 2 for n in sizes if n <= cap)
+    assert tot.max_block == max(sizes)
 
 
 def test_pipeline_preflight_prices_the_real_keys(spark):
-    from deezymatch_spark.pipeline import preflight_report, _phonetic_key_rows
-    from deezymatch_spark.sources.pages import generate_pages, extract_title
+    from deezymatch_spark.functions.phonetic import soundex_token_keys
     from deezymatch_spark.functions.udfs import normalize_udf
+    from deezymatch_spark.pipeline import preflight_report
+    from deezymatch_spark.sources.pages import generate_pages, extract_title
 
     pages = generate_pages(spark, 300, with_truth=False)
     cap = 50
@@ -130,7 +148,12 @@ def test_pipeline_preflight_prices_the_real_keys(spark):
     keys = blocking_keys(docs, "id", "title_norm", use_minhash=False).select(
         "id", "block_key"
     )
-    keys = keys.unionByName(_phonetic_key_rows(docs).select("id", "block_key"))
+    # p: keys built here from the soundex codes, not through the
+    # blocking_keys(use_phonetic=True) path the report itself uses
+    keys = keys.unionByName(
+        docs.select("id", F.explode(soundex_token_keys(F.col("title_norm"))).alias("sx"))
+        .select("id", F.concat(F.lit("p:"), "sx").alias("block_key"))
+    )
     sizes = [r.n for r in keys.groupBy("block_key").agg(F.count("*").alias("n")).collect()]
     want = sum(n * (n - 1) // 2 for n in sizes if n <= cap)
     assert rows["TOTAL"].est_pairs_capped == want
@@ -179,11 +202,6 @@ def test_exact_recall_audit_on_real_pipeline(spark):
     from deezymatch_spark.sources.pages import generate_pages
 
     stages = er_stages(generate_pages(spark, 400, with_truth=False), spark=spark)
-    try:
-        row = exact_recall_audit(
-            stages["docs"], stages["pairs"], lev_max=2
-        ).collect()[0]
-    finally:
-        stages["release"]()
+    row = exact_recall_audit(stages["docs"], stages["pairs"], lev_max=2).collect()[0]
     assert row.n_gold > 0
     assert row.pair_completeness_micro == 1_000_000

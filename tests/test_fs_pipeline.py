@@ -38,7 +38,6 @@ def test_fs_scoring_stage_is_udf_free(spark, tmp_path):
     # weight column is exact micro-integer under the hood
     mw = st["scored"].select("match_weight_micro").schema[0].dataType.simpleString()
     assert mw == "bigint"
-    st["release"]()
 
 
 def test_fs_scorer_arg_validation(spark):

@@ -155,7 +155,6 @@ def test_incremental_er_pipeline_matches_batch(spark, tmp_path):
 
     st = er_stages(pages, spark=spark, **kw)
     batch = {(r.url, r.entity_id) for r in st["clusters"].collect()}
-    st["release"]()
     assert inc == batch
 
     a3 = incremental_er(spark, second, state, **kw)
@@ -276,7 +275,6 @@ def test_incremental_er_delete_then_reingest_equals_batch(spark, tmp_path):
 
     st = er_stages(pages.where(h != 1), spark=spark, **kw)
     batch_survivors = {(r.url, r.entity_id) for r in st["clusters"].collect()}
-    st["release"]()
     assert got == batch_survivors
 
     # idempotent: deleting the same ids again changes nothing
@@ -287,7 +285,6 @@ def test_incremental_er_delete_then_reingest_equals_batch(spark, tmp_path):
     a_back = incremental_er(spark, doomed, state, **kw)
     st2 = er_stages(pages, spark=spark, **kw)
     batch_all = {(r.url, r.entity_id) for r in st2["clusters"].collect()}
-    st2["release"]()
     assert {(r.url, r.entity_id) for r in a_back.collect()} == batch_all
 
 

@@ -60,34 +60,20 @@ def test_stage_metrics_shape(spark):
     assert all(r.stage == "unit" for r in m)
 
 
-def test_pre_partition_layout_metrics_dir_migrates(spark, tmp_path):
-    """A work dir whose metrics table was APPENDED flat by a pre-upgrade
-    version (stage as a data column, possibly duplicated) must migrate
-    on resume: the flat files go away (each stage rewrites its lineage
-    partition from its checkpoint) instead of colliding with the
-    stage=<name> partition layout."""
+def test_lost_metrics_markers_leave_one_row_set_per_partition(spark, tmp_path):
+    """A resume that finds every per-stage ``_metrics_done`` marker gone
+    — some stages still checkpointed, the rest re-executed — rewrites
+    each stage's lineage partition instead of appending: the metrics
+    table ends with exactly one row set per (stage, partition_id)."""
     wd = str(tmp_path / "wd")
     run_er_pipeline(spark, n_pages=300, work_dir=wd)
-    mdir = os.path.join(wd, "metrics")
-
-    # forge the legacy state: flatten today's partitioned rows into
-    # root-level part files (duplicated, like an old append-on-retry),
-    # drop the partition dirs and every per-stage fence marker
-    legacy = spark.read.parquet(mdir).select(
-        "stage", "partition_id", "rows", "ts"
-    )
-    legacy = legacy.unionAll(legacy)  # old duplicate rows
-    tmp_flat = str(tmp_path / "flat")
-    legacy.coalesce(1).write.parquet(tmp_flat)
-    shutil.rmtree(mdir)
-    shutil.move(tmp_flat, mdir)
     shutil.rmtree(os.path.join(wd, "_metrics_done"))
-    assert any(f.startswith("part-") for f in os.listdir(mdir))
+    for name in ("stage_s3_matches", "stage_s4_components", "stage_s5_clusters"):
+        shutil.rmtree(os.path.join(wd, name))
 
     out2 = run_er_pipeline(spark, n_pages=300, work_dir=wd)
     assert out2.count() == 300
-    # readable, partitioned, exactly one row set per stage (no dups)
-    m = spark.read.parquet(mdir)
+    m = spark.read.parquet(os.path.join(wd, "metrics"))
     assert set(r.stage for r in m.select("stage").distinct().collect()) == {
         "s0_extract", "s2_scored", "s3_matches",
         "s4_components", "s5_clusters",
@@ -97,4 +83,21 @@ def test_pre_partition_layout_metrics_dir_migrates(spark, tmp_path):
         .where(F.col("count") > 1).count()
     )
     assert dup == 0
-    assert not any(f.startswith("part-") for f in os.listdir(mdir))
+    total_docs = (
+        m.where(F.col("stage") == "s0_extract").agg(F.sum("rows")).collect()[0][0]
+    )
+    assert total_docs == 300
+
+
+def test_lazy_stages_run_jw_once(spark):
+    """Without a work_dir every stage is still cut at the stage boundary:
+    the match stage reads the s2 checkpoint, so its executed plan holds
+    no Python evaluation node — the JW UDF ran once, inside s2."""
+    from deezymatch_spark.pipeline import er_stages
+    from deezymatch_spark.sources.pages import generate_pages
+
+    st = er_stages(generate_pages(spark, 300, with_truth=False), spark=spark)
+    plan = st["matches"]._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert st["matches"].count() > 0
+    assert "release" not in st

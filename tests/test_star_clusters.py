@@ -115,23 +115,15 @@ def test_er_pipeline_clustering_modes(spark):
     pages = generate_pages(spark, 400, with_truth=False)
     cc_st = er_stages(pages, spark=spark)
     star_st = er_stages(pages, spark=spark, clustering="star")
-    try:
-        cc_cl = {
-            r.url: r.entity_id for r in cc_st["clusters"].collect()
-        }
-        star_cl = {
-            r.url: r.entity_id for r in star_st["clusters"].collect()
-        }
-        assert set(cc_cl) == set(star_cl)
-        # star refines closure: any star cluster sits inside ONE cc
-        # component (members connect through their center)
-        star_to_cc = {}
-        for url, sid in star_cl.items():
-            star_to_cc.setdefault(sid, set()).add(cc_cl[url])
-        assert all(len(v) == 1 for v in star_to_cc.values())
-        assert len(set(star_cl.values())) >= len(set(cc_cl.values()))
-    finally:
-        cc_st["release"]()
-        star_st["release"]()
+    cc_cl = {r.url: r.entity_id for r in cc_st["clusters"].collect()}
+    star_cl = {r.url: r.entity_id for r in star_st["clusters"].collect()}
+    assert set(cc_cl) == set(star_cl)
+    # star refines closure: any star cluster sits inside ONE cc
+    # component (members connect through their center)
+    star_to_cc = {}
+    for url, sid in star_cl.items():
+        star_to_cc.setdefault(sid, set()).add(cc_cl[url])
+    assert all(len(v) == 1 for v in star_to_cc.values())
+    assert len(set(star_cl.values())) >= len(set(cc_cl.values()))
     with pytest.raises(ValueError, match="clustering"):
         er_stages(pages, spark=spark, clustering="bogus")

@@ -240,6 +240,21 @@ def test_streaming_window_matches_parity_with_batch_twin(spark, tmp_path):
     assert len(got) > 0
     assert got == want
 
+    # the stream's S0 rows are the batch pipeline's S0 rows on the same
+    # pages (same ids, titles and NFKD normalization)
+    from deezymatch_spark.pipeline import er_stages
+
+    q = (
+        streaming_pages_normalize(stream).writeStream.format("memory")
+        .queryName("ss_s0").outputMode("append").trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+    cols = ["id", "url", "title", "title_norm"]
+    streamed = sorted(spark.sql("select * from ss_s0").select(cols).collect())
+    batch_s0 = er_stages(spark.read.parquet(src), spark=spark)["docs"]
+    assert streamed == sorted(batch_s0.select(cols).collect())
+    assert len(streamed) == 600
+
 
 def test_streaming_window_matches_hot_key_filter(spark, tmp_path):
     """A static hot-key blocklist removes those keys from BOTH sides
