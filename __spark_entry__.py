@@ -700,18 +700,19 @@ def _ranker_full_expected():
 def q_ranker_blocked(spark, sf):
     """Scale path: ngram-blocked pair generation feeds candidate_ranker
     via ``pairs=`` — no cross join anywhere in the plan."""
-    from deezymatch_spark.operators.blocking import blocking_keys
+    from deezymatch_spark.operators.blocking import _pair_join, blocking_keys
 
     q, c = _ranker_tables(spark, sf)
-    qk = blocking_keys(
-        q.select("id", "key_norm"), "id", "key_norm",
-        ngram=3, prefix_len=12, use_minhash=False, use_words=False,
-    ).withColumnRenamed("id", "query_id")
-    ck = blocking_keys(
-        c.select("id", "key_norm"), "id", "key_norm",
-        ngram=3, prefix_len=12, use_minhash=False, use_words=False,
-    ).withColumnRenamed("id", "candidate_id")
-    pairs = qk.join(ck, "block_key").select("query_id", "candidate_id").distinct()
+    qk, ck = (
+        blocking_keys(
+            t.select("id", "key_norm"), "id", "key_norm",
+            ngram=3, prefix_len=12, use_minhash=False, use_words=False,
+        )
+        for t in (q, c)
+    )
+    pairs = _pair_join(qk, ck).select(
+        F.col("id1").alias("query_id"), F.col("id2").alias("candidate_id")
+    ).distinct()
     r = candidate_ranker(
         q, c,
         ranking_metric="faiss",

@@ -22,6 +22,13 @@ Either way no block feeds the pair join more than C(max_block_size, 2)
 comparisons, so the cap is what bounds reducer skew; AQE's skew join
 is the backstop (PLANS.md, "ADR: the cap bounds skew").
 
+The capped key rows become candidate id pairs in one place too,
+``_pair_join``: every blocked matcher (here, in ``dedup``,
+``meta_blocking``, ``linkage`` and ``streaming``) calls it, and it only
+decides how a pair is oriented — ``id1 < id2`` for a self-join,
+``least``/``greatest`` around a broadcast delta, or left/right for two
+tables. Dedup and gates stay with each caller.
+
 Everything is plain DataFrame ops: Catalyst handles pushdown; the only
 shuffles are the explode→join on block_key, sized via
 ``spark.sql.shuffle.partitions`` by the caller.
@@ -29,7 +36,7 @@ shuffles are the explode→join on block_key, sized via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.hashing import lsh_band_keys, minhash_base, minhash_from_base
 from ..functions.ngrams import distinct_char_ngrams, prefix_ngram_keys, word_tokens
@@ -224,12 +231,12 @@ def cap_blocks(keys: DataFrame, max_block_size: int, cap_mode: str = "drop") -> 
     the full key set a second time (the good-key list is far too big to
     broadcast). Inverted here: sizes aggregate map-side (only distinct
     keys shuffle), and the over-cap keys (``over_cap_block_keys``, a
-    tiny list by construction) are broadcast back as an anti-join. The
-    list is lazily localCheckpointed so its aggregation runs once even
-    though downsample broadcasts it twice."""
+    tiny list by construction) are broadcast back as an anti-join.
+    Building the frame runs no job: the list is aggregated when the
+    result is first executed."""
     if cap_mode not in ("drop", "downsample"):
         raise ValueError(f"cap_mode must be 'drop' or 'downsample', got {cap_mode!r}")
-    overcap = over_cap_block_keys(keys, max_block_size).localCheckpoint(eager=False)
+    overcap = over_cap_block_keys(keys, max_block_size)
     good = keys.join(F.broadcast(overcap.select("block_key")), "block_key", "left_anti")
     if cap_mode == "drop":
         return good
@@ -237,14 +244,81 @@ def cap_blocks(keys: DataFrame, max_block_size: int, cap_mode: str = "drop") -> 
     return good.unionByName(kept)
 
 
+def _pair_join(
+    a: DataFrame,
+    b: DataFrame | None = None,
+    *,
+    delta_ids: DataFrame | None = None,
+    carry: tuple[str, ...] = (),
+    on: Column | None = None,
+) -> DataFrame:
+    """The one pair join: capped key rows ``[id, block_key, *carry]`` →
+    ``[id1, id2, c1, c2 for c in carry]``, one row per shared block.
+
+    It decides only how a pair is oriented:
+
+    - self-join (``b`` None): ``id1 < id2``;
+    - ``delta_ids`` [id] (self-join only): the probe side is
+      ``a ⋉ broadcast(delta_ids)``, itself broadcast, so the corpus key
+      table never shuffles (a broadcast hash join has no reducer
+      skew). Pairs are ``a.id != b.id`` folded to ``least``/``greatest``,
+      and each carried column swaps with its id;
+    - two tables (``b`` given): every ``a`` × ``b`` pair, with the roles
+      kept (``id1`` and ``c1`` come from ``a``).
+
+    ``on``: an extra predicate inside the join condition, over the two
+    sides aliased ``a`` and ``b`` (e.g. the length gate). No dedup: a
+    pair sharing k blocks comes out k times, and each caller keeps its
+    own step (``distinct``, ``dropDuplicates``, a gate, or a per-pair
+    ``count``)."""
+    a_id, b_id = F.col("a.id"), F.col("b.id")
+    delta = b is None and delta_ids is not None
+    cond = on
+    if b is None:
+        b = a
+        cond = (a_id != b_id) if delta else (a_id < b_id)
+        if on is not None:
+            cond &= on
+    if delta:
+        ids = delta_ids.select(F.col(delta_ids.columns[0]).alias("id"))
+        a = F.broadcast(a.join(F.broadcast(ids), "id", "left_semi"))
+        lo = a_id < b_id
+        cols = [F.least(a_id, b_id).alias("id1"), F.greatest(a_id, b_id).alias("id2")]
+        for c in carry:
+            cols += [
+                F.when(lo, F.col(f"a.{c}")).otherwise(F.col(f"b.{c}")).alias(f"{c}1"),
+                F.when(lo, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}")).alias(f"{c}2"),
+            ]
+    else:
+        cols = [a_id.alias("id1"), b_id.alias("id2")]
+        for c in carry:
+            cols += [F.col(f"a.{c}").alias(f"{c}1"), F.col(f"b.{c}").alias(f"{c}2")]
+    joined = a.alias("a").join(b.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
+    if cond is not None:
+        # one filter over the key equi-join: Catalyst folds it into the
+        # join condition AHEAD of any filter the caller adds later (the
+        # Levenshtein gate), so the cheap id and length tests run first
+        joined = joined.where(cond)
+    return joined.select(*cols)
+
+
+def _len_gate(lev_max: int) -> Column:
+    """``_pair_join``'s ``on`` for key rows carrying ``_len``: lossless,
+    since an edit distance of k changes the length by at most k."""
+    return F.abs(F.col("a._len") - F.col("b._len")) <= lev_max
+
+
 def _lev_gated(pairs: DataFrame, lev_max: int) -> DataFrame:
-    """Add ``lev`` = Levenshtein(t1, t2) and keep the pairs within
-    ``lev_max``. The budget-bounded codegen form
+    """``_pair_join`` output carrying the key string ``_k`` → the pairs
+    within ``lev_max`` edits, with the strings as ``t1``/``t2`` and
+    ``lev`` = Levenshtein(t1, t2). The budget-bounded codegen form
     ``levenshtein(t1, t2, lev_max + 1)`` early-exits and returns -1
     past the budget, so non-candidates cost O(lev_max) per pair."""
-    return pairs.withColumn(
-        "lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1)
-    ).where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
+    return (
+        pairs.withColumnsRenamed({"_k1": "t1", "_k2": "t2"})
+        .withColumn("lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1))
+        .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
+    )
 
 
 def scored_candidate_pairs(
@@ -287,8 +361,8 @@ def scored_candidate_pairs(
     so the invariant additionally requires no over-cap bucket to have
     changed size between the old run and the delta (the drop cap has
     the same boundary behavior, just at the cap crossing). The delta's key rows
-    are broadcast, so the corpus key table never shuffles (a broadcast
-    hash join has no reducer skew).
+    are broadcast (``_pair_join``'s delta mode), so the corpus key
+    table never shuffles.
     """
     extra_keys = key_kwargs.pop("extra_keys", None)
     keys = blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
@@ -300,37 +374,7 @@ def scored_candidate_pairs(
         keys = keys.persist()
         persisted_handle = keys
     good = cap_blocks(keys, max_block_size, cap_mode)
-    len_gate = F.abs(F.col("a._len") - F.col("b._len")) <= lev_max
-
-    if delta_ids is not None:
-        dk = good.join(
-            F.broadcast(delta_ids.select(F.col(delta_ids.columns[0]).alias("id"))),
-            "id",
-            "left_semi",
-        )
-        a_lt_b = F.col("a.id") < F.col("b.id")
-        joined = (
-            F.broadcast(dk)
-            .alias("a")
-            .join(good.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
-            .where((F.col("a.id") != F.col("b.id")) & len_gate)
-        )
-        pairs = joined.select(
-            F.least("a.id", "b.id").alias("id1"),
-            F.greatest("a.id", "b.id").alias("id2"),
-            F.when(a_lt_b, F.col("a._k")).otherwise(F.col("b._k")).alias("t1"),
-            F.when(a_lt_b, F.col("b._k")).otherwise(F.col("a._k")).alias("t2"),
-        )
-    else:
-        joined = (
-            good.alias("a")
-            .join(good.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
-            .where((F.col("a.id") < F.col("b.id")) & len_gate)
-        )
-        pairs = joined.select(
-            F.col("a.id").alias("id1"), F.col("b.id").alias("id2"),
-            F.col("a._k").alias("t1"), F.col("b._k").alias("t2"),
-        )
+    pairs = _pair_join(good, delta_ids=delta_ids, carry=("_k",), on=_len_gate(lev_max))
     out = _lev_gated(pairs, lev_max).dropDuplicates(["id1", "id2"])
     return _attach_persisted(out, persisted_handle) if persisted_handle is not None else out
 
@@ -372,13 +416,7 @@ def candidate_pairs(
         keys = keys.persist()
         persisted_handle = keys
     good = cap_blocks(keys, max_block_size, cap_mode)
-    out = (
-        good.alias("a")
-        .join(good.alias("b"), "block_key")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
+    out = _pair_join(good).distinct()
     return _attach_persisted(out, persisted_handle) if persisted_handle is not None else out
 
 

@@ -23,7 +23,7 @@ from ..functions.expr import let_
 from ..functions.ngrams import distinct_char_ngrams, lower_ws_words, normalize_basic
 from ..functions.textstats import doc_fingerprint
 from ..functions.urls import canonical_url
-from .blocking import cap_blocks
+from .blocking import _pair_join, cap_blocks
 from .cc import connected_components
 
 __all__ = [
@@ -152,14 +152,7 @@ def minhash_dup_pairs(
         gram=gram, num_hashes=num_hashes, bands=bands,
         max_block_size=max_block_size,
     )
-    cand = (
-        keys.alias("a")
-        .join(keys.alias("b"), "block_key")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
-    )
-    return _verify_jaccard(cand, base, jaccard_threshold)
+    return _verify_jaccard(_pair_join(keys).distinct(), base, jaccard_threshold)
 
 
 def minhash_delta_pairs(
@@ -173,7 +166,6 @@ def minhash_delta_pairs(
     bands: int = 8,
     jaccard_threshold: float = 0.5,
     max_block_size: int = 500,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs that touch a delta: → [id1, id2, jaccard]
     (id1 < id2) where at least one side is in ``delta_ids`` [id].
@@ -187,34 +179,19 @@ def minhash_delta_pairs(
     overflow). Feed the result to ``incremental.update_clusters``.
 
     Scale shape: the delta's key rows are a delta-sized fraction of the
-    corpus key table, so with ``broadcast_delta`` the bucket join is a
-    BroadcastHashJoin — the corpus key table never shuffles. At 10^12
-    docs the corpus ``keys``/``grams`` tables would be read from state
-    parquet rather than recomputed (they're pure per-row projections of
-    the text, so recompute-vs-store is a cost knob, not semantics).
+    corpus key table, so the bucket join (``blocking._pair_join``'s
+    delta mode) is a BroadcastHashJoin — the corpus key table never
+    shuffles. At 10^12 docs the corpus ``keys``/``grams`` tables would
+    be read from state parquet rather than recomputed (they're pure
+    per-row projections of the text, so recompute-vs-store is a cost
+    knob, not semantics).
     """
     base, keys = _minhash_base_and_keys(
         df, id_col, text_col,
         gram=gram, num_hashes=num_hashes, bands=bands,
         max_block_size=max_block_size,
     )
-    dk = keys.join(
-        F.broadcast(delta_ids.select(F.col(delta_ids.columns[0]).alias("id"))),
-        "id",
-        "left_semi",
-    )
-    if broadcast_delta:
-        dk = F.broadcast(dk)
-    cand = (
-        dk.alias("a")
-        .join(keys.alias("b"), "block_key")
-        .where(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.least("a.id", "b.id").alias("id1"),
-            F.greatest("a.id", "b.id").alias("id2"),
-        )
-        .distinct()
-    )
+    cand = _pair_join(keys, delta_ids=delta_ids).distinct()
     return _verify_jaccard(cand, base, jaccard_threshold)
 
 
@@ -508,20 +485,14 @@ def simhash_dup_pairs(
             )
         ).alias("block_key"),
     )
-    good = cap_blocks(keys, max_block_size)
-    cand = (
-        good.alias("a")
-        .join(good.alias("b"), "block_key")
-        .where(F.col("a.id") < F.col("b.id"))
+    return (
+        _pair_join(cap_blocks(keys, max_block_size), carry=("sh",))
         .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
+            "id1", "id2", F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).alias("hamming")
         )
         .where(F.col("hamming") <= hamming_max)
         .dropDuplicates(["id1", "id2"])
     )
-    return cand
 
 
 def word_ngram_hashes(text_col, n: int) -> F.Column:

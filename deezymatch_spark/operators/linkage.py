@@ -106,8 +106,8 @@ def link_records(
     Both tables need (``id_col``, ``key_col``); ids should come from
     disjoint spaces (an accidental left_id == right_id pair is treated
     as a self-pair and dropped by the one-to-one step). The join is the
-    fused shape of ``scored_candidate_pairs``, generalized to two
-    sides:
+    fused shape of ``scored_candidate_pairs`` through
+    ``blocking._pair_join``'s two-table mode:
 
     - blocking keys built PER SIDE (same g:/w:/m:/p: families via
       ``**key_kwargs``), unioned under a side tag and persisted once so
@@ -125,7 +125,10 @@ def link_records(
     smaller partner id. Call ``release_persisted`` (operators.blocking)
     on the result when done, as with candidate_pairs."""
     from ..functions.udfs import jaro_winkler_udf
-    from .blocking import _attach_persisted, _hash_block_keys, _lev_gated, blocking_keys, cap_blocks
+    from .blocking import (
+        _attach_persisted, _hash_block_keys, _len_gate, _lev_gated, _pair_join,
+        blocking_keys, cap_blocks,
+    )
 
     def side_keys(df, tag):
         return (
@@ -138,19 +141,10 @@ def link_records(
 
     keys = side_keys(left, 0).unionByName(side_keys(right, 1)).persist()
     good = cap_blocks(keys, max_block_size)
-    lk = good.where(F.col("_side") == 0)
-    rk = good.where(F.col("_side") == 1)
-    pairs = (
-        lk.alias("a")
-        .join(rk.alias("b"), F.col("a.block_key") == F.col("b.block_key"))
-        .where(F.abs(F.col("a._len") - F.col("b._len")) <= lev_max)
-        .select(
-            F.col("a.id").alias("left_id"),
-            F.col("b.id").alias("right_id"),
-            F.col("a._k").alias("t1"),
-            F.col("b._k").alias("t2"),
-        )
-    )
+    pairs = _pair_join(
+        good.where(F.col("_side") == 0), good.where(F.col("_side") == 1),
+        carry=("_k",), on=_len_gate(lev_max),
+    ).withColumnsRenamed({"id1": "left_id", "id2": "right_id"})
     scored = (
         _lev_gated(pairs, lev_max)
         .dropDuplicates(["left_id", "right_id"])

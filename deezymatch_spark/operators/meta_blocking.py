@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .blocking import cap_blocks
+from .blocking import _pair_join, cap_blocks
 
 __all__ = ["meta_block_weights", "meta_blocked_pairs"]
 
@@ -70,13 +70,7 @@ def meta_block_weights(
     k = keys.select(F.col(id_col).alias("id"), F.col(key_col).alias("block_key"))
     kept = cap_blocks(k, max_block_size)
 
-    pairs = (
-        kept.alias("a")
-        .join(kept.alias("b"), "block_key")
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count("*").cast("long").alias("cbs"))
-    )
+    pairs = _pair_join(kept).groupBy("id1", "id2").agg(F.count("*").cast("long").alias("cbs"))
     if scheme == "cbs":
         return pairs.select(
             "id1", "id2", "cbs", (F.col("cbs") * _SCALE).alias("weight_micro")

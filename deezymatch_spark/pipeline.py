@@ -662,7 +662,7 @@ def incremental_er(
         st = er_stages(
             pages_new, spark=spark, jw_threshold=jw_threshold, lev_max=lev_max,
             max_block_size=max_block_size, ngram=ngram, pair_scorer=pair_scorer,
-            conf_threshold=conf_threshold, use_minhash=use_minhash,
+            conf_threshold=conf_threshold, use_minhash=use_minhash, cap_mode=cap_mode,
         )
         st["components"].write.mode("overwrite").parquet(clusters_path)
         st["matches"].select(

@@ -19,6 +19,9 @@ from ..functions.textstats import doc_fingerprint
 from ..functions.udfs import jaro_winkler_udf
 from ..operators.blocking import (
     _hash_block_keys,
+    _len_gate,
+    _lev_gated,
+    _pair_join,
     blocking_keys,
     cap_blocks,
     over_cap_block_keys,
@@ -497,15 +500,17 @@ def streaming_entity_matches(
     output_dir: str,
 ):
     """Continuously match incoming pages against a static candidate
-    table (id, title_norm): per micro-batch, reuse the batch blocking +
-    scoring operators via ``foreachBatch`` (the idiomatic pattern for
-    stream-static pipelines that need multi-stage joins), writing
-    matches to Parquet partitioned by ``batch_id`` with DYNAMIC
-    partition overwrite — foreachBatch alone is only at-least-once (a
-    batch retried after a partial append but before the checkpoint
-    commit would duplicate rows); overwriting exactly the retried
-    batch's partition makes the sink idempotent, so end-to-end the
-    output is effectively exactly-once.
+    table (id, title_norm): per micro-batch (``foreachBatch``), the
+    fused blocking + scoring join of ``scored_candidate_pairs`` in
+    ``_pair_join``'s two-table mode (key rows carry the titles, so
+    nothing joins back), then the JW gate, writing
+    ``[cand_id, id, title_norm, cand_title, lev, jw]`` to Parquet
+    partitioned by ``batch_id`` with DYNAMIC partition overwrite —
+    foreachBatch alone is only at-least-once (a batch retried after a
+    partial append but before the checkpoint commit would duplicate
+    rows); overwriting exactly the retried batch's partition makes the
+    sink idempotent, so end-to-end the output is effectively
+    exactly-once.
 
     → StreamingQuery (caller awaits/stops it). The capped candidate-key
     table stays persisted for the query's lifetime; call
@@ -516,43 +521,28 @@ def streaming_entity_matches(
     # The hot-key cap is applied ONCE on the static candidate side (a
     # key hot among candidates is non-discriminative; stream keys in a
     # dropped block then simply find no match — same semantics as the
-    # batch cap), by ``cap_blocks``;
-    # keys are int64-hashed (never emitted) and the capped static side
-    # is persisted so micro-batches don't rebuild it.
-    cand_keys = (
-        cap_blocks(
-            _hash_block_keys(
-                blocking_keys(candidates, "id", "title_norm", use_minhash=use_minhash)
-            ),
-            max_block_size,
-        )
-        .withColumnRenamed("id", "cand_id")
-        .persist()
-    )
-    cand_titles = candidates.select(
-        F.col("id").alias("cand_id"), F.col("title_norm").alias("cand_title")
-    )
+    # batch cap), by ``cap_blocks``; keys are int64-hashed (never
+    # emitted), carry the title, and the capped static side is
+    # persisted so micro-batches don't rebuild it.
+    def keys(df: DataFrame) -> DataFrame:
+        return _hash_block_keys(
+            blocking_keys(df, "id", "title_norm", use_minhash=use_minhash, payload=True)
+        ).withColumn("_len", F.length("_k"))
+
+    cand_keys = cap_blocks(keys(candidates), max_block_size).persist()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df
-        keys = _hash_block_keys(
-            blocking_keys(docs, "id", "title_norm", use_minhash=use_minhash)
-        )
-        pairs = (
-            keys.join(cand_keys, "block_key")
-            .select("id", "cand_id")
-            .distinct()
-        )
+        pairs = _pair_join(keys(batch_df), cand_keys, carry=("_k",), on=_len_gate(lev_max))
         scored = (
-            pairs.join(docs.select("id", "title_norm"), "id")
-            .join(cand_titles, "cand_id")
-            .withColumn(
-                "lev", F.levenshtein(F.col("title_norm"), F.col("cand_title"), lev_max + 1)
-            )
-            .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
-            .withColumn("jw", jaro_winkler_udf(F.col("title_norm"), F.col("cand_title")))
+            _lev_gated(pairs, lev_max)
+            .dropDuplicates(["id1", "id2"])
+            .withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
             .where(F.col("jw") >= jw_threshold)
-            .withColumn("batch_id", F.lit(batch_id))
+            .select(
+                F.col("id2").alias("cand_id"), F.col("id1").alias("id"),
+                F.col("t1").alias("title_norm"), F.col("t2").alias("cand_title"),
+                "lev", "jw", F.lit(batch_id).alias("batch_id"),
+            )
         )
         # idempotent on retry: dynamic overwrite replaces ONLY the
         # partitions present in this batch (batch_id=<id>), never the

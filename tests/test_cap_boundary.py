@@ -86,3 +86,22 @@ CALLERS = [
 def test_block_at_cap_kept_and_one_over_dropped(spark, pairs, expected):
     assert pairs(spark, CAP) == expected(CAP) > 0
     assert pairs(spark, CAP + 1) == 0
+
+
+@pytest.mark.parametrize("build", [candidate_pairs, scored_candidate_pairs])
+def test_building_capped_pairs_runs_no_job(spark, build):
+    """The cap is lazy: building a capped pair frame runs no Spark job.
+    The over-cap aggregation runs when the result is executed, so a
+    frame that is built but never read (``er_stages``' eval-only
+    ``pairs``) costs nothing."""
+    sc = spark.sparkContext
+    group = f"build-{build.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build(_docs(spark, CAP + 1), "id", "key", max_block_size=CAP)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    release_persisted(out)
+    assert jobs == []

@@ -161,6 +161,37 @@ def test_incremental_er_pipeline_matches_batch(spark, tmp_path):
     assert {(r.url, r.entity_id) for r in a3.collect()} == batch
 
 
+def test_incremental_er_bootstrap_honours_cap_mode(spark, tmp_path):
+    """The bootstrap blocks with the caller's ``cap_mode``: on a corpus
+    with over-cap blocks, its downsample clusters equal
+    ``er_stages(cap_mode="downsample")``'s, which differ from the drop
+    cap's."""
+    from deezymatch_spark.pipeline import er_stages, incremental_er
+    from deezymatch_spark.sources.pages import generate_pages
+
+    base = generate_pages(spark, 300, with_truth=False)
+    # 30 more copies of one page under new urls: every key of that
+    # title has at least 31 members, over the cap of 8, so only the
+    # downsample floor can pair the copies
+    copies = spark.range(30).crossJoin(base.orderBy("url").limit(1)).select(
+        F.concat("url", F.lit("#"), F.col("id").cast("string")).alias("url"),
+        "warc_ts", "html", "text", "lang",
+    )
+    pages = base.unionByName(copies)
+    kw = dict(max_block_size=8)
+
+    def assignment(df):
+        return {(r.url, r.entity_id) for r in df.collect()}
+
+    got = assignment(
+        incremental_er(spark, pages, str(tmp_path / "er_state"), cap_mode="downsample", **kw)
+    )
+    down = assignment(er_stages(pages, spark=spark, cap_mode="downsample", **kw)["clusters"])
+    drop = assignment(er_stages(pages, spark=spark, cap_mode="drop", **kw)["clusters"])
+    assert down != drop
+    assert got == down
+
+
 def test_incremental_er_recovers_half_done_swap(spark, tmp_path):
     """A job killed between the clusters→clusters_old and
     clusters_next→clusters renames leaves NO clusters table; the next

@@ -187,3 +187,62 @@ def test_edit_distance_join_no_python_no_cartesian(spark):
     ops = _ops(out)
     assert _python(ops) == [], ops
     assert not any("Cartesian" in o or "NestedLoop" in o for o in ops), ops
+
+
+@contextlib.contextmanager
+def _no_size_broadcast(spark):
+    """Plan as for a corpus too big to broadcast: only explicit
+    broadcast hints stay broadcast."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _titles(spark):
+    return _docs(spark).select(
+        F.col("doc_id").alias("id"), F.lower(F.substring("text", 1, 40)).alias("t")
+    )
+
+
+def test_scored_candidate_pairs_batch_plan(spark):
+    """The fused blocking self-join stays JVM-only and shuffles five
+    times: the key rows once per pair-join side, the over-cap key-size
+    aggregation once per side (map-combined, so only distinct keys
+    move; the list itself is broadcast), and the pair dedup."""
+    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+
+    out = scored_candidate_pairs(_titles(spark), "id", "t")
+    with _no_size_broadcast(spark):
+        ops = _ops(out)
+    release_persisted(out)
+    assert not _python(ops), ops
+    assert _shuffles(ops) == 5, ops
+
+
+def test_scored_candidate_pairs_delta_never_shuffles_the_corpus_keys(spark):
+    """``delta_ids`` mode: the pair join is a broadcast hash join whose
+    build side is the delta's key rows (the corpus keys semi-joined with
+    the broadcast delta ids), so the corpus key table never shuffles.
+    Only the over-cap aggregation and the pair dedup shuffle."""
+    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+
+    titles = _titles(spark)
+    delta = titles.where(F.pmod("id", F.lit(10)) == 0).select("id")
+    out = scored_candidate_pairs(titles, "id", "t", delta_ids=delta)
+    with _no_size_broadcast(spark):
+        ops = _ops(out)
+        plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    release_persisted(out)
+    assert "SortMergeJoin" not in ops, ops
+    assert not _python(ops), ops
+    assert _shuffles(ops) == 3, ops
+    inner = [i for i, line in enumerate(plan) if "BroadcastHashJoin" in line and ", Inner, " in line]
+    assert len(inner) == 1, plan
+    assert ", BuildLeft, " in plan[inner[0]], plan[inner[0]]
+    # the build (left) subtree is printed first: the delta semi-join
+    below = [line for line in plan[inner[0] + 1:] if "Join" in line]
+    assert ", LeftSemi, " in below[0], below[0]

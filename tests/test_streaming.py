@@ -103,6 +103,71 @@ def test_streaming_entity_matches_parity_with_batch(spark, tmp_path):
         assert not h.storageLevel.useMemory
 
 
+def test_streaming_entity_matches_rows_equal_blocked_cross_join(spark, tmp_path):
+    """The written ``(id, cand_id, lev, jw)`` rows equal a reference
+    built without the pair join: the full cross join of pages ×
+    candidates, kept when the two share a blocking key that is not over
+    the cap among the candidates, with lev <= lev_max and
+    jw >= jw_threshold. Each pair is written once."""
+    from deezymatch_spark.functions import normalize_udf
+    from deezymatch_spark.functions.udfs import jaro_winkler
+    from deezymatch_spark.operators.blocking import blocking_keys
+    from deezymatch_spark.sources.pages import extract_title
+    from deezymatch_spark.streaming import release_query_caches
+
+    src = str(tmp_path / "pages_in")
+    outd = str(tmp_path / "matches_out")
+    generate_pages(spark, 200, with_truth=False).write.parquet(src)
+    static = (
+        spark.read.parquet(src)
+        .select(F.xxhash64("url").alias("id"), "html")
+        .select("id", normalize_udf(extract_title(F.col("html"))).alias("title_norm"))
+    )
+    # at cap 3 the cap removes matches on this fixture (from cap 4 on,
+    # every match also shares a key under the cap)
+    cap, lev_max, jw_threshold = 3, 2, 0.82
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = streaming_entity_matches(
+        stream, static, max_block_size=cap, lev_max=lev_max, jw_threshold=jw_threshold,
+        checkpoint_dir=str(tmp_path / "ckpt"), output_dir=outd,
+    )
+    q.awaitTermination(180)
+    release_query_caches(q)
+    got = [(r.id, r.cand_id, r.lev, r.jw) for r in spark.read.parquet(outd).collect()]
+
+    keys = blocking_keys(static, "id", "title_norm", use_minhash=False)
+    hot = {
+        r.block_key
+        for r in keys.groupBy("block_key").count().where(F.col("count") > cap).collect()
+    }
+    docs = static.join(keys.groupBy("id").agg(F.collect_set("block_key").alias("k")), "id")
+    ref = (
+        docs.alias("s")
+        .crossJoin(docs.alias("c"))
+        .select(
+            F.col("s.id").alias("id"),
+            F.col("c.id").alias("cand_id"),
+            F.levenshtein("s.title_norm", "c.title_norm").alias("lev"),
+            F.col("s.title_norm").alias("t1"),
+            F.col("c.title_norm").alias("t2"),
+            F.col("s.k").alias("ks"),
+            F.col("c.k").alias("kc"),
+        )
+        .where(F.col("lev") <= lev_max)
+    )
+    shared, want = set(), set()
+    for r in ref.collect():
+        jw = jaro_winkler(r.t1, r.t2)
+        if jw >= jw_threshold and set(r.ks) & set(r.kc):
+            shared.add((r.id, r.cand_id, r.lev, jw))
+            if set(r.ks) & (set(r.kc) - hot):
+                want.add((r.id, r.cand_id, r.lev, jw))
+    assert len(want) > 200  # more than the self-matches
+    assert want != shared  # the cap removes some matches
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
 def test_streaming_sink_idempotent_on_batch_redelivery(spark, tmp_path):
     """Exactly-once claim: redelivering an already-written micro-batch
     (fresh checkpoint, same output dir — the worst-case 'retry after
