@@ -362,7 +362,11 @@ def scored_candidate_pairs(
     changed size between the old run and the delta (the drop cap has
     the same boundary behavior, just at the cap crossing). The delta's key rows
     are broadcast (``_pair_join``'s delta mode), so the corpus key
-    table never shuffles.
+    table never shuffles. Delta mode ignores ``persist_keys``: the
+    corpus key rows feed only the over-cap aggregation and the two join
+    sides once each, and left uncached they let AQE reuse the one
+    aggregation exchange for both sides (a cache is one more job and
+    hides the reuse). ``release_persisted`` is a no-op on the result.
     """
     extra_keys = key_kwargs.pop("extra_keys", None)
     keys = blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
@@ -370,7 +374,14 @@ def scored_candidate_pairs(
         keys = keys.unionByName(extra_keys)
     keys = _hash_block_keys(keys).withColumn("_len", F.length("_k"))
     persisted_handle = None
-    if persist_keys:
+    if delta_ids is not None:
+        # uncached, so AQE can reuse the over-cap aggregation between
+        # the join sides. The one-row explode hides the key families'
+        # union from the optimizer, which would otherwise push the cap's
+        # anti-join into every family branch and plan the aggregation
+        # once per family and side
+        keys = keys.select(F.explode(F.array(F.struct(*keys.columns))).alias("_r")).select("_r.*")
+    elif persist_keys:
         keys = keys.persist()
         persisted_handle = keys
     good = cap_blocks(keys, max_block_size, cap_mode)

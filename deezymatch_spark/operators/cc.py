@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["connected_components"]
 
+# canonical edges a closure takes on the driver (~16 bytes/edge)
+DRIVER_THRESHOLD = 2_000_000
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     return (
@@ -65,30 +68,29 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph escape hatch: collect the canonical edge list and
-    resolve components on the driver, parallelize the result back.
+def _union_find(src, dst):
+    """The driver kernel: edge arrays → ``(node, component)`` arrays,
+    component = min node id reachable. Self-loops add their node.
 
     Numeric ids take a vectorized numpy hash-to-min iteration (dense
-    relabel via np.unique, then alternate edge-min scatter with pointer
-    doubling until no edge crosses components — O(E log n) with ~10
-    numpy passes, ~0.3s at 1.2M edges where a per-edge Python
-    union-find loop costs ~4s of driver time, which is pure Amdahl
-    overhead in a scaling measurement). Non-numeric ids fall back to
-    classic path-compressed union-find."""
+    relabel, then alternate edge-min scatter with pointer doubling
+    until no edge crosses components — O(E log n) with ~10 numpy
+    passes, ~0.3s at 1.2M edges where a per-edge Python union-find
+    loop costs ~4s of driver time, which is pure Amdahl overhead in a
+    scaling measurement). Non-numeric ids fall back to classic
+    path-compressed union-find."""
     import numpy as np
     import pandas as pd
 
-    pdf = e.toPandas()
-    src, dst = pdf["src"].values, pdf["dst"].values
-    if len(pdf) and np.issubdtype(np.asarray(src).dtype, np.number):
+    src, dst = np.asarray(src), np.asarray(dst)
+    if len(src) and np.issubdtype(src.dtype, np.number):
         # dense relabel via hash-based factorize (first-seen order) —
         # ~6x faster than sorted np.unique at millions of ids; the
         # iteration below only needs SOME total order on labels, and a
         # final min-value-per-root pass restores the "component = min
         # node id" contract afterwards
         codes, uniq = pd.factorize(np.concatenate([src, dst]))
-        s, d = codes[: len(pdf)], codes[len(pdf):]
+        s, d = codes[: len(src)], codes[len(src):]
         parent = np.arange(len(uniq))
         while True:
             rs, rd = parent[s], parent[d]
@@ -121,35 +123,59 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
         first[1:] = root_s[1:] != root_s[:-1]
         comp_min = np.empty(len(uniq), dtype=uniq.dtype)
         comp_min[root_s[first]] = val_s[first]
-        out = pd.DataFrame({"node": uniq, "component": comp_min[parent]})
-    else:
-        parent_map: dict = {}
+        return uniq, comp_min[parent]
 
-        def find(x):
-            r = x
-            while parent_map.get(r, r) != r:
-                r = parent_map[r]
-            while parent_map.get(x, x) != x:
-                parent_map[x], x = r, parent_map[x]
-            return r
+    parent_map: dict = {}
 
-        for a, b in zip(src, dst):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so component = min reachable node id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent_map[hi] = lo
-        nodes = set(src)
-        nodes.update(dst)
-        out = pd.DataFrame({"node": list(nodes)})
-        out["component"] = [find(n) for n in out["node"]]
-    # explicit schema (node/component share src's type): handles the
-    # empty-edge frame, where pandas can't infer types
+    def find(x):
+        r = x
+        while parent_map.get(r, r) != r:
+            r = parent_map[r]
+        while parent_map.get(x, x) != x:
+            parent_map[x], x = r, parent_map[x]
+        return r
+
+    for a, b in zip(src.tolist(), dst.tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min so component = min reachable node id
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent_map[hi] = lo
+    nodes = list(dict.fromkeys(src.tolist() + dst.tolist()))
+    return nodes, [find(n) for n in nodes]
+
+
+def _driver_sized(edges: DataFrame, driver_threshold: int = DRIVER_THRESHOLD):
+    """The one driver-vs-distributed rule for a closure: ``edges``'
+    rows as one Arrow table when there are at most ``driver_threshold``
+    of them, else None (close them with the distributed rounds). One
+    job both sizes the list and fetches it (a ``limit(driver_threshold
+    + 1)`` collect); ``driver_threshold=0`` answers None without one."""
+    if not driver_threshold:
+        return None
+    local = edges.limit(driver_threshold + 1).toArrow()
+    return local if local.num_rows <= driver_threshold else None
+
+
+def _driver_components(edges: DataFrame, local) -> DataFrame:
+    """Close ``local`` — the collected ``[src, dst]`` rows of ``edges``
+    (see :func:`_driver_sized`) — with :func:`_union_find`, self-loops
+    dropped as ``connected_components`` drops them, and ship the
+    components back as one Arrow batch (one partition the JVM reads
+    without a Python worker). ``node``/``component`` take the type of
+    ``edges.src``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
-    t = e.schema["src"].dataType
+    local = local.filter(pc.not_equal(local["src"], local["dst"]))
+    node, comp = _union_find(local["src"].to_numpy(), local["dst"].to_numpy())
+    t = edges.schema["src"].dataType
+    at = to_arrow_type(t)
+    table = pa.table({"node": pa.array(node, at), "component": pa.array(comp, at)})
     schema = StructType([StructField("node", t), StructField("component", t)])
-    return e.sparkSession.createDataFrame(out, schema)
+    return edges.sparkSession.createDataFrame(table, schema)
 
 
 def connected_components(
@@ -159,7 +185,7 @@ def connected_components(
     dst: str = "dst",
     max_iterations: int = 20,
     checkpoint: bool = True,
-    driver_threshold: int = 2_000_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """→ DataFrame[node, component] — component = min node id reachable.
 
@@ -169,25 +195,31 @@ def connected_components(
     their own components — callers union them back if needed.
 
     Size-adaptive execution (same principle as Spark's broadcast-join
-    threshold): the canonical edge count is known from the checkpoint
-    materialization anyway, and when it is under ``driver_threshold``
-    (~16 bytes/edge → tens of MB) the distributed rounds are pure
-    scheduling latency — ~10 jobs x log n rounds on a graph that fits
-    in one task. Such graphs run path-compressed union-find on the
-    driver instead (measured: 12s → ~1s at 300k edges). Graphs above
-    the threshold — the 10^12-doc regime this module targets — take
-    the large-star/small-star rounds, whose per-round cost is two
-    bounded map-combined shuffles. ``driver_threshold=0`` forces the
-    distributed path (used by tests to cover both).
+    threshold): the canonical edges are checkpointed (when
+    ``checkpoint``), then one job collects at most ``driver_threshold +
+    1`` of them (~16 bytes/edge → tens of MB). If that is all of them,
+    the distributed rounds would be pure scheduling latency — ~10 jobs
+    x log n rounds on a graph that fits in one task — so the collected
+    edges close on the driver instead (:func:`_driver_components`;
+    measured: 12s → ~1s at 300k edges). Graphs above the threshold —
+    the 10^12-doc regime this module targets — take the
+    large-star/small-star rounds, whose per-round cost is two bounded
+    map-combined shuffles; the edges are computed once for them too,
+    and the probe reads ``driver_threshold + 1`` rows of the
+    checkpoint. ``driver_threshold=0`` forces the distributed path
+    without a probe (used by tests to cover both).
+    :func:`_driver_sized` is the one driver-vs-distributed rule;
+    ``incremental.update_clusters`` applies it to its touched
+    neighbourhood too.
     """
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    if checkpoint or driver_threshold:
-        # materialize before count(): the size probe plus the follow-up
-        # consumer (driver toPandas or round 1) must not compute the
-        # canonical-edge plan twice over un-checkpointed lineage
+    if checkpoint:
+        # materialize before the size probe: the probe and the rounds
+        # after it must not compute the canonical-edge plan twice
         e = e.localCheckpoint()
-    if driver_threshold and e.count() <= driver_threshold:
-        return _driver_union_find(e)
+    local = _driver_sized(e, driver_threshold)
+    if local is not None:
+        return _driver_components(e, local)
 
     prev_sig = None
     for _ in range(max_iterations):

@@ -13,8 +13,8 @@ operator bounds every shuffle by the delta's neighborhood:
   touched members and excluding them from the pass-through side are
   both map-side (BroadcastHashJoin semi/anti — no corpus shuffle);
 - the CC rerun sees only |touched members| star edges + |delta| new
-  edges — star graphs re-converge in one round, so the cost is the
-  delta neighborhood, not the corpus;
+  edges, and under ``driver_threshold`` it closes on the driver — the
+  cost is the delta neighborhood, not the corpus;
 - the untouched corpus rows stream through unchanged.
 
 Equivalence contract (tested in tests/test_incremental.py):
@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .cc import connected_components
+from .cc import DRIVER_THRESHOLD, _driver_components, _driver_sized, connected_components
 
 __all__ = ["clusters_at_thresholds", "remove_nodes", "update_clusters"]
 
@@ -113,34 +113,52 @@ def update_clusters(
     ``clusters_prev`` (brand-new documents) may appear in ``new_edges``
     and are clustered from scratch. As with ``connected_components``,
     edgeless singletons never appear — callers coalesce to self-id.
+
+    Scale shape: ``new_edges`` (read twice; pass a materialized or
+    driver-built frame) and the components they touch are delta-sized,
+    so the corpus-sized ``clusters_prev`` is only ever on the probe side
+    of a broadcast join (no corpus shuffle). The closure's input — the
+    touched members' star edges plus ``new_edges`` — goes through
+    ``connected_components``' own driver-vs-distributed rule
+    (``cc._driver_sized`` at its ``driver_threshold``): under it, one
+    job collects the input, the union-find kernel closes it on the
+    driver, and the pass-through side excludes the refreshed nodes, a
+    driver-side batch; above it, ``connected_components`` closes the
+    touched neighbourhood in the distributed rounds without probing it
+    again, so the probe's ``driver_threshold + 1`` rows are the one
+    extra pass that path pays.
     """
     prev = clusters_prev.select(
         F.col(node_col).alias("node"), F.col(component_col).alias("component")
     )
     edges = new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-
-    endpoints = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    endpoints = edges.select(F.col("src").alias("node")).unionAll(
+        edges.select(F.col("dst").alias("node"))
     )
     # components the delta touches — delta-sized by construction, so it
     # broadcasts (as does the endpoint list feeding it); every corpus-
     # sized join in this plan is a BroadcastHashJoin, never a shuffle
-    touched = (
-        prev.join(F.broadcast(endpoints), "node", "left_semi")
-        .select("component")
-        .distinct()
+    touched = F.broadcast(
+        prev.join(F.broadcast(endpoints), "node", "left_semi").select("component")
     )
-    members = prev.join(F.broadcast(touched), "component", "left_semi")
+    members = prev.join(touched, "component", "left_semi")
     # star edges carry each touched member to its (min-id) center; the
     # center's own (c, c) self-loop is dropped by CC canonicalization
     # but the center re-enters via every other member's edge, and a
     # touched singleton center is itself a delta endpoint
     star = members.select(F.col("node").alias("src"), F.col("component").alias("dst"))
-    refreshed = connected_components(star.unionByName(edges), **cc_kwargs)
+    closure = star.unionByName(edges)
 
-    untouched = prev.join(F.broadcast(touched), "component", "left_anti")
+    local = _driver_sized(closure, cc_kwargs.get("driver_threshold", DRIVER_THRESHOLD))
+    if local is None:
+        # already sized above the threshold: no second probe
+        refreshed = connected_components(closure, **{**cc_kwargs, "driver_threshold": 0})
+        untouched = prev.join(touched, "component", "left_anti").select("node", "component")
+        return untouched.unionByName(refreshed)
+    # every touched member is a node of the closure, so the untouched
+    # rows are the ones whose node the driver did not refresh
+    refreshed = _driver_components(closure, local)
+    untouched = prev.join(F.broadcast(refreshed.select("node")), "node", "left_anti")
     return untouched.unionByName(refreshed)
 
 

@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.udfs import jaro_winkler_udf, normalize_udf
@@ -570,6 +571,13 @@ def er_stages(
     }
 
 
+# The state tables' fixed schemas (layout: incremental_er's docstring).
+# Reading with them skips the footer-inference job a bare read runs.
+DOCS_SCHEMA = "id bigint, url string, title string, title_norm string"
+EDGES_SCHEMA = "src bigint, dst bigint"
+CLUSTERS_SCHEMA = "node bigint, component bigint"
+
+
 def incremental_er(
     spark: SparkSession,
     pages_new: DataFrame | None,
@@ -591,22 +599,44 @@ def incremental_er(
     corpus (same schema as run_er_pipeline).
 
     State layout under ``state_dir`` (parquet; at production scale
-    these would be Iceberg tables — same access pattern):
+    these would be Iceberg tables — same access pattern), each read
+    with its fixed schema (``DOCS_SCHEMA``, ``EDGES_SCHEMA``,
+    ``CLUSTERS_SCHEMA``) so no read runs a schema-inference job:
     - ``docs``     — (id, url, title, title_norm), append-only;
     - ``edges``    — (src, dst) match-edge lineage, append-only; kept
       because retracting a node can SPLIT a component, which is only
       decidable on the real edges (see ``remove_nodes``);
     - ``clusters`` — (node, component) from connected_components.
 
-    First call bootstraps via the batch pipeline. Subsequent calls:
-    S0-extract the delta, drop already-ingested ids (broadcast-inverted
-    anti-join — the corpus table streams map-side), append the rest to
-    ``docs``, block+score only pairs touching the delta
-    (``scored_candidate_pairs(delta_ids=...)``: the delta's key rows
-    broadcast against the corpus key table — no corpus shuffle), append
-    the new match edges to ``edges`` (deduped against re-runs), and
-    fold them into ``clusters`` with ``update_clusters`` (only touched
-    components recluster).
+    First call bootstraps via the batch pipeline. Subsequent calls fold
+    the delta in about one Spark job per step, because every
+    delta-sized frame is computed once, collected to the driver, and
+    read back by the later steps as one Arrow batch:
+    1. the delta's S0 rows (``_s0_docs``, as the batch path builds
+       them) are collected;
+    2. one job collects the already-ingested delta ids and the known
+       edges incident to the delta (``docs`` and ``edges`` probe the
+       broadcast delta id list and never shuffle); the other rows are
+       appended to ``docs``, a url the state already holds keeps its
+       stored row, and blocking then reads the stored title;
+    3. the delta's match edges are collected as ``[src, dst]`` from
+       ``scored_candidate_pairs(delta_ids=...)`` (the delta's key rows
+       broadcast against the corpus key rows — no corpus shuffle), with
+       ``jaro_winkler_udf`` and the optional ``pair_scorer`` applied in
+       the same job, as the batch path applies them;
+    4. the match edges not among the known ones are appended to
+       ``edges`` (the set difference runs on the driver);
+    5. ``update_clusters`` collects the touched members with the delta
+       edges, closes them (on the driver below
+       ``connected_components``' ``driver_threshold``, distributed
+       above it), and ``clusters_next`` is written as the untouched
+       rows plus the refreshed ones.
+    Size bound: the driver holds the delta's S0 rows, its already-
+    ingested ids, its match edges (two ids each) and the known edges
+    incident to it. That assumes a delta the driver can hold, as the
+    delta id list broadcast to every join already does; a crawl too
+    big for that is a batch re-run, not a fold. The touched
+    neighbourhood is collected only up to ``driver_threshold`` edges.
 
     ``deleted_ids`` (one id column): retract documents — real crawl
     refreshes expire pages as well as adding them. Deletions apply
@@ -705,9 +735,9 @@ def incremental_er(
             deleted_ids.select(F.col(deleted_ids.columns[0]).alias("id"))
             .distinct()
         )
-        docs_prev = spark.read.parquet(docs_path)
-        edges_prev = spark.read.parquet(edges_path)
-        clusters_prev = spark.read.parquet(clusters_path)
+        docs_prev = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
+        edges_prev = spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
+        clusters_prev = spark.read.schema(CLUSTERS_SCHEMA).parquet(clusters_path)
         # all three _next tables are WRITTEN (from the still-unswapped
         # prev tables) before any rename happens, then swapped edges →
         # clusters → docs; a crash in any window re-heals because the
@@ -731,54 +761,65 @@ def incremental_er(
 
     if pages_new is None:
         return _er_assignment(
-            spark.read.parquet(docs_path), spark.read.parquet(clusters_path)
+            spark.read.schema(DOCS_SCHEMA).parquet(docs_path),
+            spark.read.schema(CLUSTERS_SCHEMA).parquet(clusters_path),
         )
 
-    docs_prev = spark.read.parquet(docs_path)
-    new_docs = _s0_docs(pages_new, "url")
-    new_ids = new_docs.select("id")
-    # already-ingested ids: semi-join the (big) corpus against the
-    # broadcast delta id list → tiny list → broadcast anti-join back.
-    # The corpus never shuffles (same inversion as the hot-key cap).
-    dup_ids = docs_prev.join(F.broadcast(new_ids), "id", "left_semi").select("id")
-    new_docs.join(F.broadcast(dup_ids), "id", "left_anti").write.mode(
-        "append"
-    ).parquet(docs_path)
+    # every delta-sized frame is computed once and held on the driver;
+    # later steps read it back as one Arrow batch (no Python worker),
+    # so no lineage back to pages_new is re-derived
+    new_docs = _s0_docs(pages_new, "url").toArrow()
+    new_ids = spark.createDataFrame(new_docs.select(["id"]))
+    # one job looks up both delta-neighbourhood lists: the delta ids the
+    # corpus already holds (rows with a null dst) and the known edges
+    # incident to the delta. The big tables probe the broadcast id list
+    # and never shuffle (same inversion as the hot-key cap)
+    ids = F.broadcast(new_ids)
+    docs_prev = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
+    lookup = docs_prev.join(ids, "id", "left_semi").select(
+        F.col("id").alias("src"), F.lit(None).cast("bigint").alias("dst")
+    )
+    has_edges = _is_done(spark, edges_path)
+    if has_edges:
+        eprev = spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
+        lookup = lookup.unionByName(
+            eprev.join(ids, eprev.src == new_ids.id, "left_semi")
+        ).unionByName(eprev.join(ids, eprev.dst == new_ids.id, "left_semi"))
+    found = lookup.toArrow()
+    is_doc = pc.is_null(found["dst"])
+    dup_ids = found.filter(is_doc)["src"].combine_chunks()
+    known = found.filter(pc.invert(is_doc))
 
-    docs_all = spark.read.parquet(docs_path)
-    clusters_prev = spark.read.parquet(clusters_path)
-    scored_raw = scored_candidate_pairs(
+    fresh_docs = new_docs.filter(pc.invert(pc.is_in(new_docs["id"], value_set=dup_ids)))
+    # one file per append, as the delta's own single-file read gave:
+    # a driver-built frame splits into one partition per core
+    spark.createDataFrame(fresh_docs, DOCS_SCHEMA).coalesce(1).write.mode("append").parquet(
+        docs_path
+    )
+
+    docs_all = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
+    clusters_prev = spark.read.schema(CLUSTERS_SCHEMA).parquet(clusters_path)
+    # the delta's match edges are collected once (JW and the optional
+    # pair_scorer run in the same job) and feed both the lineage append
+    # and the cluster fold
+    scored = scored_candidate_pairs(
         docs_all, "id", "title_norm",
         lev_max=lev_max, max_block_size=max_block_size, ngram=ngram,
         use_minhash=use_minhash, delta_ids=new_ids, cap_mode=cap_mode,
-    )
-    scored = scored_raw.withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
+    ).withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
     matches = scored.where(F.col("jw") >= jw_threshold)
     if pair_scorer is not None:
         matches = matches.withColumn(
             "p1", pair_scorer(F.col("t1"), F.col("t2"))
         ).where(F.col("p1") >= conf_threshold)
-    # the delta's match edges feed BOTH the lineage append and the
-    # cluster fold; persisting the (delta-sized) frame keeps the
-    # blocking/scoring join from running twice
-    delta_edges = matches.select(
-        F.col("id1").alias("src"), F.col("id2").alias("dst")
-    ).persist()
+    delta_edges = matches.select(F.col("id1").alias("src"), F.col("id2").alias("dst")).toArrow()
 
     # append to the edge lineage, deduped against a crashed re-run of
     # the same batch: any already-present edge incident to a delta id
-    # (delta-neighborhood-sized → broadcast) is skipped, so re-running
-    # the call can't grow the table
-    if _is_done(spark, edges_path):
-        eprev = spark.read.parquet(edges_path)
-        known = (
-            eprev.join(F.broadcast(new_ids), eprev.src == new_ids.id, "left_semi")
-            .unionByName(
-                eprev.join(F.broadcast(new_ids), eprev.dst == new_ids.id, "left_semi")
-            )
-            .distinct()
-        )
-        fresh = delta_edges.join(F.broadcast(known), ["src", "dst"], "left_anti")
+    # (the known list looked up above) is skipped, so re-running the
+    # call can't grow the table
+    if has_edges:
+        fresh = delta_edges.join(known, ["src", "dst"], join_type="left anti")
     else:
         # pre-lineage state: start the table from this delta onward.
         # Such a state is non-deletable until re-bootstrapped — the
@@ -790,15 +831,15 @@ def incremental_er(
     # (set before the append, cleared after the swap) fences deletions
     # out of the crashed window in between
     _touch_marker(spark, pending_marker)
-    fresh.write.mode("append").parquet(edges_path)
+    spark.createDataFrame(fresh, EDGES_SCHEMA).coalesce(1).write.mode("append").parquet(
+        edges_path
+    )
 
-    updated = update_clusters(clusters_prev, delta_edges)
+    updated = update_clusters(clusters_prev, spark.createDataFrame(delta_edges, EDGES_SCHEMA))
     updated.write.mode("overwrite").parquet(clusters_path + "_next")
-    release_persisted(scored_raw)
-    delta_edges.unpersist()
     _swap_in(spark, clusters_path)
     _drop_marker(spark, pending_marker)
-    return _er_assignment(docs_all, spark.read.parquet(clusters_path))
+    return _er_assignment(docs_all, spark.read.schema(CLUSTERS_SCHEMA).parquet(clusters_path))
 
 
 def _swap_in(spark: SparkSession, path: str) -> None:

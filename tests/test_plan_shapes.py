@@ -246,3 +246,26 @@ def test_scored_candidate_pairs_delta_never_shuffles_the_corpus_keys(spark):
     # the build (left) subtree is printed first: the delta semi-join
     below = [line for line in plan[inner[0] + 1:] if "Join" in line]
     assert ", LeftSemi, " in below[0], below[0]
+
+
+def test_scored_candidate_pairs_delta_reuses_the_over_cap_aggregation(spark):
+    """``delta_ids`` mode caches nothing: the corpus key rows are not
+    persisted (there is nothing to release), so once the plan has run,
+    AQE serves every join side's over-cap key list from one aggregation
+    (a ``ReusedExchange``) instead of aggregating again per side over an
+    in-memory scan. The cap of 20 leaves over-cap keys in this corpus;
+    with none, AQE drops the empty anti-joins and there is nothing to
+    reuse."""
+    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+
+    titles = _titles(spark)
+    delta = titles.where(F.pmod("id", F.lit(10)) == 0).select("id")
+    out = scored_candidate_pairs(titles, "id", "t", delta_ids=delta, max_block_size=20)
+    assert getattr(out, "_dzm_persisted", None) is None
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    release_persisted(out)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "InMemoryTableScan" not in final, final
+    assert final.count("functions=[count(1)]") == 1, final
+    assert any("ReusedExchange [block_key" in line for line in final.splitlines()), final
