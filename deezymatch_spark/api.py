@@ -29,23 +29,23 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.udfs import normalize_udf, tokenize_udf
+from .functions.udfs import normalize_series, normalize_udf, tokenize_udf
 from .model.numpy_rnn import SiameseRNN
 from .model.scorer_udf import (
     encode_vectors,
     load_artifacts,
-    make_encode_vec_udf,
     make_missing_ratio_udf,
     make_pair_features_udf,
     make_pair_scorer_udf,
     make_score_and_ratio_udf,
+    make_store_udf,
     save_artifacts,
 )
 from .model.train_numpy import fit as _fit_encoder
 from .operators.ranker import candidate_ranker as _ranker
 from .operators.split import train_val_test_split
 from .sources.tsv import read_pairs_tsv
-from .text import Vocabulary, encode_tokens, normalize_string, pad_sequence, string_split
+from .text import Vocabulary, encode_tokens, pad_sequence, string_split
 
 SEED = 1364  # DeezyMatch.py:33
 
@@ -448,6 +448,14 @@ def inference(
     mode='test': pair predictions [s1, s2, prediction, p0, p1, label]
     (S7 sink format, rnn_networks.py:640-667).
 
+    Each mode runs ONE Python UDF (one ``ArrowEvalPython`` node, so one
+    Python runner per partition) that takes the raw strings, normalizes
+    them and runs the model on the same Arrow batch:
+    ``scorer_udf.make_store_udf`` for vect, ``make_score_and_ratio_udf``
+    for test. The results equal ``normalize_udf`` chained into
+    ``make_encode_vec_udf`` (vect) or into the siamese scorer and the
+    missing-char ratio (test), row for row.
+
     P4 (test mode): rows whose missing-char ratio vs the artifact
     vocabulary exceeds ``missing_char_threshold`` on either side are
     dropped (data_processing.py:368-397). Pass None to disable.
@@ -457,23 +465,22 @@ def inference(
     Input order = ``original_index`` when present.
     """
     if inference_mode == "vect":
-        enc = make_encode_vec_udf(artifact_path)
-        return df.withColumn("key_norm", normalize_udf(F.col(key_col))).withColumn(
-            "vec", enc(F.col("key_norm"))
-        )
+        kv = df.withColumn("_kv", make_store_udf(artifact_path)(F.col(key_col)))
+        return kv.withColumns(
+            {"key_norm": F.col("_kv.key_norm"), "vec": F.col("_kv.vec")}
+        ).drop("_kv")
     ordered = df
     if cutoff is not None:
         if "original_index" in df.columns:
             ordered = df.orderBy("original_index")
         ordered = ordered.limit(cutoff * 2)
-    out = (
-        ordered.withColumn("s1_norm", normalize_udf(F.col("s1")))
-        .withColumn("s2_norm", normalize_udf(F.col("s2")))
-    )
-    # score + P4 ratios in ONE fused Arrow pass (a separate ratio UDF
-    # re-tokenizes both strings — measured 2x slower end-to-end)
-    sr = make_score_and_ratio_udf(artifact_path)
-    out = out.withColumn("_sr", sr(F.col("s1_norm"), F.col("s2_norm")))
+    # normalize + score + P4 ratios in ONE fused Arrow pass (a separate
+    # ratio UDF re-tokenizes both strings — measured 2x slower end-to-end).
+    # Nondeterministic only so the optimizer keeps it in its own Project:
+    # a deterministic UDF is copied into the pushed-down ratio filter and
+    # the GRU then runs twice per row, in two ArrowEvalPython nodes.
+    sr = make_score_and_ratio_udf(artifact_path).asNondeterministic()
+    out = ordered.withColumn("_sr", sr(F.col("s1"), F.col("s2")))
     if missing_char_threshold is not None:
         out = out.where(
             (F.col("_sr.ratio1") <= missing_char_threshold)
@@ -505,17 +512,17 @@ def combine_vecs(*_args, **_kwargs):
 
 def _query_store(spark: SparkSession, artifact_path: str, keys: list) -> DataFrame:
     """[id, key, key_norm, vec] for a short raw-string list, encoded on
-    the driver: normalize_udf's mapping, then the vect UDF's kernel.
-    Shipped as one Arrow batch, i.e. one partition that the JVM reads
-    without a Python worker (a row list would be re-pickled through
-    one)."""
-    norms = [normalize_string(x) if x is not None else None for x in keys]
+    the driver: ``normalize_series`` then ``encode_vectors``, the two
+    steps of the store UDF. Shipped as one Arrow batch, i.e. one
+    partition that the JVM reads without a Python worker (a row list
+    would be re-pickled through one)."""
+    norms = normalize_series(pd.Series(keys, dtype=object))
     model, vocab, cfg = load_artifacts(artifact_path)
-    vecs = encode_vectors(model, vocab, cfg, pd.Series(norms, dtype=object))
+    vecs = encode_vectors(model, vocab, cfg, norms)
     table = pa.table({
         "id": pa.array(range(len(keys)), pa.int64()),
         "key": pa.array(keys, pa.string()),
-        "key_norm": pa.array(norms, pa.string()),
+        "key_norm": pa.array(norms.tolist(), pa.string()),
         "vec": pa.array(list(vecs), pa.list_(pa.float32())),
     })
     return spark.createDataFrame(

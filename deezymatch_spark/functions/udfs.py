@@ -28,6 +28,7 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType
 from ..text import encode_tokens, normalize_string, string_split
 
 __all__ = [
+    "normalize_series",
     "normalize_udf",
     "tokenize_udf",
     "make_encode_udf",
@@ -36,9 +37,16 @@ __all__ = [
 ]
 
 
+def normalize_series(s: pd.Series) -> pd.Series:
+    """``normalize_string`` per row, None kept as None: the mapping
+    behind ``normalize_udf`` and the UDFs that normalize inside their
+    own Arrow pass."""
+    return s.map(lambda x: normalize_string(x) if x is not None else None)
+
+
 @pandas_udf(StringType())
 def normalize_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: normalize_string(x) if x is not None else None)
+    return normalize_series(s)
 
 
 def tokenize_udf(

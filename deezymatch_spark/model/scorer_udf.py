@@ -12,10 +12,17 @@ The pair UDFs run the recurrence once per DISTINCT string of each side
 of an Arrow batch and gather the vectors back to the rows: a ranking
 batch pairs a few queries with many candidates, so the query side
 collapses to a handful of encodes. ``encode_vectors`` is the store
-vector kernel; the vect UDF calls it per batch, and
+vector kernel; the store UDF calls it per batch, and
 ``api.candidate_ranker(query=...)`` calls it on the driver for its
 short query list, so a rank request starts no Python worker for the
 query side.
+
+The UDFs behind ``api.inference`` take the RAW strings and normalize
+inside their own Arrow pass (``normalize_series``), so a store build or
+a test-mode scoring runs one Python runner per partition instead of a
+``normalize_udf`` runner chained to a scorer runner: each runner costs
+a fixed per-task start-up before it sees a row (PLANS.md, "one Python
+pass per partition").
 
 Artifacts: a directory with ``model.npz`` (weights), ``vocab.json``
 (token→index), ``config.json`` (tokenizer + maxlen + head coefs).
@@ -32,8 +39,16 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, FloatType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from ..functions.udfs import normalize_series
 from ..text import encode_tokens, pad_sequence, string_split
 from .numpy_rnn import SiameseRNN
 
@@ -45,6 +60,7 @@ __all__ = [
     "make_pair_features_udf",
     "make_missing_ratio_udf",
     "make_score_and_ratio_udf",
+    "make_store_udf",
     "pair_p1",
     "save_artifacts",
 ]
@@ -162,8 +178,8 @@ def _batch_pooled(model, X, lens):
 
 def encode_vectors(model, vocab, cfg, s: pd.Series) -> np.ndarray:
     """Normalized strings → float32 store vectors [n, 2H] (N5): the
-    one kernel behind the vect UDF and the driver-side query encoding
-    of ``api.candidate_ranker(query=...)``."""
+    one kernel behind the store and vect UDFs and the driver-side query
+    encoding of ``api.candidate_ranker(query=...)``."""
     X, lens = _encode_batch(s, vocab, cfg)
     return np.asarray(_batch_encode(model, X, lens), dtype=np.float32)
 
@@ -202,6 +218,32 @@ def make_encode_vec_udf(artifact_path: str):
     return encode_vec
 
 
+def make_store_udf(artifact_path: str):
+    """(key) → struct<key_norm string, vec array<float>>: the embedding
+    store's two derived columns from ONE Arrow pass — ``normalize_series``
+    then ``encode_vectors`` on the same batch. Equal, row for row, to
+    ``normalize_udf`` chained into ``make_encode_vec_udf``, which costs
+    two Python runners per partition and ships every key across the
+    JVM↔Python boundary twice. A None key keeps key_norm None and gets
+    the empty string's vector, as in the chained form."""
+    schema = StructType([
+        StructField("key_norm", StringType()),
+        StructField("vec", ArrayType(FloatType())),
+    ])
+
+    @pandas_udf(schema)
+    def store_vec(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        model, vocab, cfg = load_artifacts(artifact_path)
+        for s in batches:
+            norm = normalize_series(s)
+            yield pd.DataFrame({
+                "key_norm": norm.to_numpy(),
+                "vec": list(encode_vectors(model, vocab, cfg, norm)),
+            })
+
+    return store_vec
+
+
 def make_pair_scorer_udf(artifact_path: str, mode: str = "combined"):
     """(s1_norm, s2_norm) → double match probability p1.
 
@@ -229,13 +271,13 @@ def make_pair_scorer_udf(artifact_path: str, mode: str = "combined"):
 
 
 def make_score_and_ratio_udf(artifact_path: str):
-    """(s1_norm, s2_norm) → struct<p1 double, ratio1 double,
+    """(s1, s2) RAW strings → struct<p1 double, ratio1 double,
     ratio2 double>: siamese match probability plus both sides' P4
-    missing-char ratios from ONE tokenization pass. The inference test
-    path filters on the ratios and keeps p1 — fusing avoids a second
-    Arrow round-trip + re-tokenization (2x end-to-end)."""
-    from pyspark.sql.types import StructField, StructType
-
+    missing-char ratios, normalized (``normalize_series``, the mapping
+    of ``normalize_udf``) and tokenized in ONE pass per Arrow batch.
+    The inference test path filters on the ratios and keeps p1 — fusing
+    avoids a second tokenization (2x end-to-end) and the separate
+    ``normalize_udf`` runner per partition."""
     schema = StructType([
         StructField("p1", DoubleType()),
         StructField("ratio1", DoubleType()),
@@ -246,8 +288,9 @@ def make_score_and_ratio_udf(artifact_path: str):
     def score_and_ratio(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
         model, vocab, cfg = load_artifacts(artifact_path)
         for s1, s2 in it:
-            v1, r1 = _side(_batch_pooled, model, vocab, cfg, s1, return_ratio=True)
-            v2, r2 = _side(_batch_pooled, model, vocab, cfg, s2, return_ratio=True)
+            n1, n2 = normalize_series(s1), normalize_series(s2)
+            v1, r1 = _side(_batch_pooled, model, vocab, cfg, n1, return_ratio=True)
+            v2, r2 = _side(_batch_pooled, model, vocab, cfg, n2, return_ratio=True)
             _, p1, _ = model.head(v1, v2)
             yield pd.DataFrame({
                 "p1": np.asarray(p1, dtype=np.float64),

@@ -86,6 +86,18 @@ def candidate_ranker(
     ``pair_scorer``: expression/UDF (s1_norm, s2_norm) → match
     probability p1 (the numpy-GRU siamese scorer; D3). Required when
     calc_predict or ranking_metric='conf'.
+
+    When ``dl_match`` is computed, per metric:
+
+    - ``conf``: on every scored pair, before the windows — the
+      threshold filter, ``num_all_searches`` and the final order all
+      read it, so the scorer runs |Q|×|C| times (|pairs| with ``pairs=``).
+    - ``faiss`` / ``cosine`` with ``calc_predict``: after the final
+      ``rank <= num_candidates`` cut. Nothing before that cut reads
+      ``dl_match``, so the output is the same as scoring every pair, and
+      the scorer runs at most |Q|·``num_candidates`` times, on the rows
+      that reach the output.
+    - otherwise it is null.
     """
     metric = ranking_metric.lower()
     validate_ranker_args(metric, selection_threshold)
@@ -119,12 +131,16 @@ def candidate_ranker(
         scored = scored.withColumn("cosine_dist", cosine_dist(F.col("_qv"), F.col("_cv")))
     else:
         scored = scored.withColumn("cosine_dist", F.lit(None).cast("double"))
-    if (calc_predict or metric == "conf") and pair_scorer is not None:
-        scored = scored.withColumn(
-            "dl_match", pair_scorer(F.col("query"), F.col("candidate"))
-        )
-    else:
-        scored = scored.withColumn("dl_match", F.lit(None).cast("double"))
+    # conf filters and ranks on dl_match, so it is scored on every pair;
+    # under faiss/cosine it is a pure projection, scored after the top-k
+    # cut below (at most |Q|·num_candidates scorer rows)
+    dl_match = (
+        pair_scorer(F.col("query"), F.col("candidate"))
+        if (calc_predict or metric == "conf") and pair_scorer is not None
+        else F.lit(None).cast("double")
+    )
+    if metric == "conf":
+        scored = scored.withColumn("dl_match", dl_match)
 
     # faiss ordering — the arrival order of the reference's windows.
     # Every window below partitions by query_id, so the whole post-score
@@ -223,6 +239,8 @@ def candidate_ranker(
         deduped.withColumn("rank", F.row_number().over(w_rank))
         .where(F.col("rank") <= num_candidates)
     )
+    if metric != "conf":
+        ranked = ranked.withColumn("dl_match", dl_match)
 
     return ranked.select(
         "query_id",

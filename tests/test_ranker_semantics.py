@@ -176,22 +176,6 @@ def test_cosine_zero_norm_vector_is_distance_one(spark):
 _QKEYS = ["London", "  Zürich ", "ﬁeld Ⅻ", "londen", "paris", "Pariss", "berlin"]
 
 
-@pytest.fixture(scope="module")
-def seeded_artifact(tmp_path_factory):
-    from deezymatch_spark.api import DEFAULT_TOKENIZE
-    from deezymatch_spark.model.numpy_rnn import SiameseRNN
-    from deezymatch_spark.model.scorer_udf import save_artifacts
-
-    vocab = {c: i + 1 for i, c in enumerate("|abcdefghijklmnopqrstuvwxyz ")}
-    model = SiameseRNN.from_seed(
-        9, len(vocab) + 1, hidden_dim=12, embedding_dim=8, n_layers=2,
-        pooling_mode="hstates_layers_simple", fc1_out=16,
-    )
-    path = str(tmp_path_factory.mktemp("seeded") / "model")
-    save_artifacts(path, model, vocab, dict(DEFAULT_TOKENIZE))
-    return path
-
-
 def _vect_store(spark, artifact, keys):
     from deezymatch_spark import api
 
@@ -236,3 +220,177 @@ def test_query_path_self_match_and_calc_predict_invariance(spark, seeded_artifac
     for r in pred:
         assert abs(r.faiss_dist - faiss[key(r)]) <= 1e-9
         assert r.dl_match is not None and 0.0 <= r.dl_match <= 1.0
+
+
+# ------------------------------- pair-scorer bound (dl_match after top-k)
+
+
+def _counting_scorer(spark):
+    """→ (accumulator, pair_scorer, toy): ``pair_scorer`` is a pandas
+    UDF applying ``toy``, a deterministic stand-in for the siamese
+    scorer, and adds each evaluated row to the accumulator. ``toy`` is
+    nested so the worker unpickles it by value."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def toy(a, b):
+        import difflib
+
+        return difflib.SequenceMatcher(None, a or "", b or "").ratio()
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("double")
+    def score(a: pd.Series, b: pd.Series) -> pd.Series:
+        acc.add(len(a))
+        return pd.Series([toy(x, y) for x, y in zip(a, b)], dtype="float64")
+
+    return acc, lambda a, b: score(a, b), toy
+
+
+_BOUND_KEYS = [f"{w}{i}" for i in range(6) for w in ("lon", "par", "ber", "tok")]
+
+
+@pytest.mark.parametrize("metric", ["faiss", "cosine"])
+@pytest.mark.parametrize("blocked", [False, True], ids=["cross", "pairs"])
+def test_pair_scorer_sees_at_most_q_times_k_rows(spark, metric, blocked):
+    """Under faiss/cosine dl_match is a pure projection: the scorer runs
+    after the rank cut, on at most |Q|·num_candidates rows, and each
+    dl_match is the scorer applied to that row's (query, candidate)."""
+    t = _emb_table(spark, _BOUND_KEYS, seed=3)
+    q = t.where(F.col("id") < 5)
+    pairs = q.select(F.col("id").alias("query_id")).crossJoin(
+        t.select(F.col("id").alias("candidate_id"))
+    ).where((F.col("query_id") + F.col("candidate_id")) % 2 == 0)
+    acc, scorer, toy = _counting_scorer(spark)
+    out = candidate_ranker(
+        q, t, ranking_metric=metric, selection_threshold=1e9 if metric == "faiss" else 1.0,
+        num_candidates=3, calc_predict=True, pair_scorer=scorer,
+        pairs=pairs if blocked else None,
+    ).collect()
+    assert len(out) == 5 * 3
+    assert 0 < acc.value <= 5 * 3, acc.value
+    for r in out:
+        assert abs(r.dl_match - toy(r.query, r.candidate)) <= 1e-6
+
+
+def _conf_reference(qrows, crows, k, threshold, score):
+    """The conf ranking computed on the driver: faiss order, threshold
+    on the score, dedup by candidate original spelling (best faiss rank
+    kept), then score desc / faiss rank asc, top k."""
+    out = set()
+    for qid, _, qn, qv in qrows:
+        cands = sorted(
+            (float(np.sum((np.asarray(qv, np.float64) - np.asarray(cv, np.float64)) ** 2)), cid, ck, cn)
+            for cid, ck, cn, cv in crows
+        )
+        seen, kept = set(), []
+        for pos, (_, cid, ck, cn) in enumerate(cands):
+            s = score(qn, cn)
+            if s >= threshold and ck not in seen:
+                seen.add(ck)
+                kept.append((-s, pos, cid))
+        for rank, (_, _, cid) in enumerate(sorted(kept)[:k], start=1):
+            out.add((qid, rank, cid))
+    return out
+
+
+def test_conf_scores_every_pair_and_matches_the_reference(spark):
+    """conf keeps scoring before the windows: the scorer sees all
+    |Q|×|C| rows and the output equals the driver-side reference,
+    including the dedup of repeated original spellings."""
+    keys = _BOUND_KEYS + ["lon0", "par1"]  # two repeated original spellings
+    t = _emb_table(spark, keys, seed=5)
+    rows = [tuple(r) for r in t.collect()]
+    q = t.where(F.col("id") < 4)
+    acc, scorer, toy = _counting_scorer(spark)
+    out = candidate_ranker(
+        q, t, ranking_metric="conf", selection_threshold=0.4, num_candidates=4,
+        pair_scorer=scorer,
+    ).collect()
+    assert acc.value >= 4 * len(keys)
+    got = {(r.query_id, r.rank, r.candidate_id) for r in out}
+    assert got == _conf_reference(rows[:4], rows, 4, 0.4, toy)
+    for r in out:
+        assert abs(r.dl_match - toy(r.query, r.candidate)) <= 1e-6
+
+
+# ------------------- the four invariants with calc_predict=True (GRU scorer)
+
+
+def test_gru_dl_match_equals_the_scorer_per_row(spark, seeded_artifact):
+    """Each dl_match from the post-cut scorer equals the siamese p1 of
+    that row's (query, candidate), computed on the driver."""
+    import pandas as pd
+
+    from deezymatch_spark import api
+    from deezymatch_spark.model.scorer_udf import load_artifacts, pair_p1
+
+    store = _vect_store(spark, seeded_artifact, _QKEYS)
+    for metric, thr in (("faiss", 1e9), ("cosine", 1.0)):
+        out = api.candidate_ranker(
+            spark, store, store, artifact_path=seeded_artifact, ranking_metric=metric,
+            selection_threshold=thr, num_candidates=3, calc_predict=True,
+        ).collect()
+        assert len(out) == 3 * len(_QKEYS)
+        model, vocab, cfg = load_artifacts(seeded_artifact)
+        want = pair_p1(
+            model, vocab, cfg,
+            pd.Series([r.query for r in out], dtype=object),
+            pd.Series([r.candidate for r in out], dtype=object),
+        )
+        np.testing.assert_allclose([r.dl_match for r in out], want, rtol=0, atol=1e-6)
+
+
+def test_self_match_zero_under_calc_predict(spark, seeded_artifact):
+    from deezymatch_spark import api
+
+    store = _vect_store(spark, seeded_artifact, _QKEYS)
+    out = api.candidate_ranker(
+        spark, store, store, artifact_path=seeded_artifact, ranking_metric="faiss",
+        selection_threshold=1e9, num_candidates=2, calc_predict=True,
+    ).collect()
+    top = {r.query_id: r for r in out if r.rank == 1}
+    assert top.keys() == set(range(len(_QKEYS)))
+    for qid, r in top.items():
+        assert r.candidate_id == qid and abs(r.faiss_dist) < 1e-9
+        assert r.dl_match is not None
+
+
+def test_length_diff_on_nfkd_lengths_under_calc_predict(spark, seeded_artifact):
+    """length_diff compares NFKD-normalized lengths, not raw ones:
+    'ﬁﬁﬁ' is 3 characters raw and 6 ('fififi') normalized."""
+    from deezymatch_spark import api
+    from deezymatch_spark.text import normalize_string
+
+    keys = ["ﬁﬁﬁ", "abc", "fififi", "abcdef"]
+    store = _vect_store(spark, seeded_artifact, keys)
+    out = api.candidate_ranker(
+        spark, store, store, artifact_path=seeded_artifact, ranking_metric="faiss",
+        selection_threshold=1e9, num_candidates=10, length_diff=1, calc_predict=True,
+    ).collect()
+    n = [len(normalize_string(k)) for k in keys]
+    want = {(i, j) for i in range(4) for j in range(4) if abs(n[i] - n[j]) <= 1}
+    assert {(r.query_id, r.candidate_id) for r in out} == want
+    assert (0, 1) not in want and (0, 3) in want  # raw lengths would say the opposite
+    assert all(r.dl_match is not None for r in out)
+
+
+def test_dedup_by_original_spelling_under_calc_predict(spark):
+    rows = [
+        (0, "london", "london", [0.0] * 4),
+        (1, "london", "london", [10.0] * 4),  # same orig spelling, worse
+        (2, "paris", "paris", [1.0] * 4),
+    ]
+    c = spark.createDataFrame(rows, "id long, key string, key_norm string, vec array<float>")
+    qq = spark.createDataFrame(
+        [(0, "london", "london", [0.0] * 4)],
+        "id long, key string, key_norm string, vec array<float>",
+    )
+    _, scorer, toy = _counting_scorer(spark)
+    out = candidate_ranker(
+        qq, c, ranking_metric="faiss", selection_threshold=1e9, num_candidates=10,
+        calc_predict=True, pair_scorer=scorer,
+    ).collect()
+    assert sorted(r.candidate_id for r in out) == [0, 2]
+    assert {r.candidate_id: r.dl_match for r in out} == {0: 1.0, 2: toy("london", "paris")}
