@@ -377,13 +377,18 @@ def finetune(
     pairs = read_pairs_tsv(spark, dataset) if isinstance(dataset, str) else dataset
     if "original_index" not in pairs.columns:
         pairs = pairs.withColumn("original_index", F.monotonically_increasing_id())
-    pairs = pairs.withColumn("s1_norm", normalize_udf(F.col("s1"))).withColumn(
-        "s2_norm", normalize_udf(F.col("s2"))
-    )
-    ratio = make_missing_ratio_udf(pretrained_path)
-    pairs = pairs.where(
-        (ratio(F.col("s1_norm")) <= missing_char_threshold)
-        & (ratio(F.col("s2_norm")) <= missing_char_threshold)
+    # the ratios get their own projection under the filter, as in
+    # inference's test mode: nondeterministic only so the optimizer keeps
+    # the filter above it; pushed below, it copies normalize_udf into its
+    # condition and each string is normalized twice
+    ratio = make_missing_ratio_udf(pretrained_path).asNondeterministic()
+    pairs = (
+        pairs.withColumns(
+            {"s1_norm": normalize_udf(F.col("s1")), "s2_norm": normalize_udf(F.col("s2"))}
+        )
+        .withColumns({"_r1": ratio(F.col("s1_norm")), "_r2": ratio(F.col("s2_norm"))})
+        .where((F.col("_r1") <= missing_char_threshold) & (F.col("_r2") <= missing_char_threshold))
+        .drop("_r1", "_r2")
     )
     pairs = train_val_test_split(
         pairs, label_col="label", order_col="original_index"

@@ -44,7 +44,7 @@ from .expr import let_
 from .phonetic import soundex_token_keys
 from .pii import mask_pii, pii_stats
 from .urls import TRACKING_PARAM_REGEX, canonical_url
-from .udfs import jaro_winkler, jaro_winkler_udf, make_encode_udf, normalize_udf, tokenize_udf
+from .udfs import jaro_winkler, jaro_winkler_udf, normalize_udf, tokenize_udf
 
 __all__ = [
     "cosine_dist", "cosine_sim", "dot", "l2_norm", "sq_l2",
@@ -60,6 +60,5 @@ __all__ = [
     "bpe_count_expr", "bpe_encode", "bpe_segment_expr", "seed_merges",
     "train_bpe", "train_bpe_from_df",
     "canonical_url", "TRACKING_PARAM_REGEX", "let_", "mask_pii", "pii_stats",
-    "jaro_winkler", "jaro_winkler_udf", "make_encode_udf", "normalize_udf",
-    "tokenize_udf",
+    "jaro_winkler", "jaro_winkler_udf", "normalize_udf", "tokenize_udf",
 ]

@@ -23,15 +23,14 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, StringType
 
-from ..text import encode_tokens, normalize_string, string_split
+from ..text import normalize_string, string_split
 
 __all__ = [
     "normalize_series",
     "normalize_udf",
     "tokenize_udf",
-    "make_encode_udf",
     "jaro_winkler",
     "jaro_winkler_udf",
 ]
@@ -74,16 +73,6 @@ def tokenize_udf(
         )
 
     return _tok
-
-
-def make_encode_udf(tok2index: dict[str, int]):
-    @pandas_udf(ArrayType(IntegerType()))
-    def _enc(tokens: pd.Series) -> pd.Series:
-        return tokens.map(
-            lambda ts: encode_tokens(ts, tok2index) if ts is not None else None
-        )
-
-    return _enc
 
 
 def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:

@@ -27,7 +27,11 @@ The capped key rows become candidate id pairs in one place too,
 ``meta_blocking``, ``linkage`` and ``streaming``) calls it, and it only
 decides how a pair is oriented — ``id1 < id2`` for a self-join,
 ``least``/``greatest`` around a broadcast delta, or left/right for two
-tables. Dedup and gates stay with each caller.
+tables. Dedup and gates stay with each caller; the three fused title
+matchers (``scored_candidate_pairs``, ``linkage.link_records``,
+``streaming_entity_matches``) share theirs: the key rows carrying the
+title (``_key_rows``) and the length → Levenshtein → dedup gate
+(``_gated_pairs``).
 
 Everything is plain DataFrame ops: Catalyst handles pushdown; the only
 shuffles are the explode→join on block_key, sized via
@@ -62,7 +66,9 @@ def _attach_persisted(out: DataFrame, handle: DataFrame) -> DataFrame:
 
 def release_persisted(df: DataFrame) -> None:
     """Unpersist any cache attached by ``_attach_persisted`` (no-op
-    otherwise). Call after the consumer has written/collected ``df``."""
+    otherwise): the key rows ``candidate_pairs`` and
+    ``linkage.link_records`` persist. Call after the consumer has
+    written/collected ``df``."""
     handle = getattr(df, "_dzm_persisted", None)
     if handle is not None:
         handle.unpersist()
@@ -79,7 +85,6 @@ def blocking_keys(
     use_minhash: bool = True,
     use_words: bool = True,
     use_phonetic: bool = False,
-    minhash_grams: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     payload: bool = False,
@@ -89,8 +94,8 @@ def blocking_keys(
     Key families, unioned:
     - ``g:<ngram>`` — char ngrams of the normalized key's prefix
       (high recall for short strings / titles);
-    - ``m:`` LSH band keys over a MinHash signature of all char ngrams
-      (recall for longer strings under edits);
+    - ``m:`` LSH band keys over a MinHash signature of all char
+      3-grams (recall for longer strings under edits);
     - ``w:<word>`` — exact word tokens: an edit corrupts one word, the
       remaining words still collide exactly. Recovers the recall that
       hot-key capping of common ngrams costs at scale.
@@ -137,7 +142,7 @@ def blocking_keys(
         df.select(
             F.col(id_col).alias("id"),
             minhash_base(
-                distinct_char_ngrams(s, minhash_grams), base_hash="xxhash64"
+                distinct_char_ngrams(s, 3), base_hash="xxhash64"
             ).alias("_bh"),
             *pay,
         )
@@ -302,22 +307,61 @@ def _pair_join(
     return joined.select(*cols)
 
 
-def _len_gate(lev_max: int) -> Column:
-    """``_pair_join``'s ``on`` for key rows carrying ``_len``: lossless,
-    since an edit distance of k changes the length by at most k."""
-    return F.abs(F.col("a._len") - F.col("b._len")) <= lev_max
+def _key_rows(
+    df: DataFrame,
+    id_col: str,
+    key_col: str,
+    *,
+    extra_keys: DataFrame | None = None,
+    **key_kwargs,
+) -> DataFrame:
+    """The key rows of the fused matchers → [id, block_key (int64), _k,
+    _len]: ``blocking_keys`` carrying the key string ``_k`` and its
+    length, uncached.
+
+    ``extra_keys``: optional extra key family rows
+    ``[id, block_key(string), _k]`` unioned with the built-in families
+    before hashing — e.g. the ``a:``-prefixed anchor-text keys the ER
+    pipeline adds (keep prefixes disjoint from g:/w:/m:).
+
+    The closing one-row explode hides the key families' union from the
+    optimizer, which would otherwise push a later ``cap_blocks``
+    anti-join into every family branch and plan the over-cap
+    aggregation once per family and join side. Over these rows AQE
+    runs the aggregation once and reuses it for both sides (a cached
+    table would hide that reuse)."""
+    keys = blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
+    if extra_keys is not None:
+        keys = keys.unionByName(extra_keys)
+    keys = _hash_block_keys(keys).withColumn("_len", F.length("_k"))
+    return keys.select(F.explode(F.array(F.struct(*keys.columns))).alias("_r")).select("_r.*")
 
 
-def _lev_gated(pairs: DataFrame, lev_max: int) -> DataFrame:
-    """``_pair_join`` output carrying the key string ``_k`` → the pairs
-    within ``lev_max`` edits, with the strings as ``t1``/``t2`` and
-    ``lev`` = Levenshtein(t1, t2). The budget-bounded codegen form
+def _gated_pairs(
+    a: DataFrame,
+    b: DataFrame | None = None,
+    *,
+    lev_max: int,
+    delta_ids: DataFrame | None = None,
+) -> DataFrame:
+    """``_pair_join`` over capped ``_key_rows`` → [id1, id2, t1, t2,
+    lev], each pair once, with lev = Levenshtein(t1, t2) <= lev_max.
+
+    The length gate ``abs(len1 - len2) <= lev_max`` rides in the join
+    condition (lossless: an edit distance of k changes the length by at
+    most k). The budget-bounded codegen form
     ``levenshtein(t1, t2, lev_max + 1)`` early-exits and returns -1
-    past the budget, so non-candidates cost O(lev_max) per pair."""
+    past the budget, so non-candidates cost O(lev_max) per pair, and it
+    runs map-side before the dedup shuffle."""
+    pairs = _pair_join(
+        a, b, delta_ids=delta_ids, carry=("_k",),
+        on=F.abs(F.col("a._len") - F.col("b._len")) <= lev_max,
+    )
     return (
         pairs.withColumnsRenamed({"_k1": "t1", "_k2": "t2"})
         .withColumn("lev", F.levenshtein(F.col("t1"), F.col("t2"), lev_max + 1))
         .where((F.col("lev") >= 0) & (F.col("lev") <= lev_max))
+        .dropDuplicates(["id1", "id2"])
     )
 
 
@@ -328,7 +372,6 @@ def scored_candidate_pairs(
     *,
     lev_max: int = 2,
     max_block_size: int = 200,
-    persist_keys: bool = True,
     delta_ids: DataFrame | None = None,
     cap_mode: str = "drop",
     **key_kwargs,
@@ -339,17 +382,14 @@ def scored_candidate_pairs(
     Why fused (measured at 1M docs): the unfused plan materializes the
     full blocked pair set (~43M rows), distincts it, then joins the
     strings back twice — three full-size shuffles. Here the key rows
-    CARRY the (short) key string, the join condition pre-filters on
-    ``abs(len1-len2) <= lev_max`` (lossless: an edit distance of k
-    changes length by at most k), and the codegen Levenshtein gate runs
-    map-side BEFORE the dedup shuffle — so the only full-size work is
-    map-side expression evaluation and the shuffled dedup sees ~2% of
-    the pairs. Same result set as candidate_pairs + join + lev filter.
+    CARRY the (short) key string (``_key_rows``) and the length and
+    Levenshtein gates run map-side BEFORE the dedup shuffle
+    (``_gated_pairs``), so the only full-size work is map-side
+    expression evaluation and the shuffled dedup sees ~2% of the pairs.
+    Same result set as candidate_pairs + join + lev filter.
 
-    ``extra_keys``: optional extra key family rows
-    ``[id, block_key(string), _k]`` unioned with the built-in families
-    before hashing/capping — e.g. the ``a:``-prefixed anchor-text keys
-    the ER pipeline adds (keep prefixes disjoint from g:/w:/m:).
+    ``extra_keys`` (in ``key_kwargs``): extra key family rows, see
+    ``_key_rows``.
 
     ``delta_ids`` [id]: incremental-ingest mode — return only the pairs
     with at least one side in the delta. Keys and the hot-key cap are
@@ -362,32 +402,14 @@ def scored_candidate_pairs(
     changed size between the old run and the delta (the drop cap has
     the same boundary behavior, just at the cap crossing). The delta's key rows
     are broadcast (``_pair_join``'s delta mode), so the corpus key
-    table never shuffles. Delta mode ignores ``persist_keys``: the
-    corpus key rows feed only the over-cap aggregation and the two join
-    sides once each, and left uncached they let AQE reuse the one
-    aggregation exchange for both sides (a cache is one more job and
-    hides the reuse). ``release_persisted`` is a no-op on the result.
+    table never shuffles.
+
+    Nothing is cached in either mode: the key rows feed the over-cap
+    aggregation and the two join sides once each, and AQE serves both
+    sides from one aggregation. The result holds no cache handle.
     """
-    extra_keys = key_kwargs.pop("extra_keys", None)
-    keys = blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
-    if extra_keys is not None:
-        keys = keys.unionByName(extra_keys)
-    keys = _hash_block_keys(keys).withColumn("_len", F.length("_k"))
-    persisted_handle = None
-    if delta_ids is not None:
-        # uncached, so AQE can reuse the over-cap aggregation between
-        # the join sides. The one-row explode hides the key families'
-        # union from the optimizer, which would otherwise push the cap's
-        # anti-join into every family branch and plan the aggregation
-        # once per family and side
-        keys = keys.select(F.explode(F.array(F.struct(*keys.columns))).alias("_r")).select("_r.*")
-    elif persist_keys:
-        keys = keys.persist()
-        persisted_handle = keys
-    good = cap_blocks(keys, max_block_size, cap_mode)
-    pairs = _pair_join(good, delta_ids=delta_ids, carry=("_k",), on=_len_gate(lev_max))
-    out = _lev_gated(pairs, lev_max).dropDuplicates(["id1", "id2"])
-    return _attach_persisted(out, persisted_handle) if persisted_handle is not None else out
+    good = cap_blocks(_key_rows(df, id_col, key_col, **key_kwargs), max_block_size, cap_mode)
+    return _gated_pairs(good, lev_max=lev_max, delta_ids=delta_ids)
 
 
 def candidate_pairs(

@@ -184,7 +184,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint: bool = True,
     driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """→ DataFrame[node, component] — component = min node id reachable.
@@ -195,12 +194,12 @@ def connected_components(
     their own components — callers union them back if needed.
 
     Size-adaptive execution (same principle as Spark's broadcast-join
-    threshold): the canonical edges are checkpointed (when
-    ``checkpoint``), then one job collects at most ``driver_threshold +
-    1`` of them (~16 bytes/edge → tens of MB). If that is all of them,
-    the distributed rounds would be pure scheduling latency — ~10 jobs
-    x log n rounds on a graph that fits in one task — so the collected
-    edges close on the driver instead (:func:`_driver_components`;
+    threshold): the canonical edges are checkpointed, then one job
+    collects at most ``driver_threshold + 1`` of them (~16 bytes/edge →
+    tens of MB). If that is all of them, the distributed rounds would
+    be pure scheduling latency — ~10 jobs x log n rounds on a graph
+    that fits in one task — so the collected edges close on the driver
+    instead (:func:`_driver_components`;
     measured: 12s → ~1s at 300k edges). Graphs above the threshold —
     the 10^12-doc regime this module targets — take the
     large-star/small-star rounds, whose per-round cost is two bounded
@@ -213,19 +212,16 @@ def connected_components(
     neighbourhood too.
     """
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    if checkpoint:
-        # materialize before the size probe: the probe and the rounds
-        # after it must not compute the canonical-edge plan twice
-        e = e.localCheckpoint()
+    # materialize before the size probe: the probe and the rounds after
+    # it must not compute the canonical-edge plan twice
+    e = e.localCheckpoint()
     local = _driver_sized(e, driver_threshold)
     if local is not None:
         return _driver_components(e, local)
 
     prev_sig = None
     for _ in range(max_iterations):
-        e = _small_star(_large_star(e))
-        if checkpoint:
-            e = e.localCheckpoint()
+        e = _small_star(_large_star(e)).localCheckpoint()
         # pmod before summing keeps the signature sum overflow-free
         # under ANSI mode even at 10^12 edges
         sig = e.select(

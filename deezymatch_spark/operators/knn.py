@@ -286,7 +286,6 @@ def brute_force_topk(
     q_vec: str = "vec",
     c_id: str = "id",
     c_vec: str = "vec",
-    broadcast_queries: bool = True,
     partial_topk: bool = True,
 ) -> DataFrame:
     """→ [query_id, candidate_id, dist, rank] exact top-k per query.
@@ -308,9 +307,7 @@ def brute_force_topk(
     dist_fn = _METRICS[metric]
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
     c = candidates.select(F.col(c_id).alias("candidate_id"), F.col(c_vec).alias("_cv"))
-    if broadcast_queries:
-        q = F.broadcast(q)
-    scored = q.crossJoin(c).select(
+    scored = F.broadcast(q).crossJoin(c).select(
         "query_id",
         "candidate_id",
         dist_fn(F.col("_qv"), F.col("_cv")).alias("dist"),

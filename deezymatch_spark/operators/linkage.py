@@ -106,48 +106,37 @@ def link_records(
     Both tables need (``id_col``, ``key_col``); ids should come from
     disjoint spaces (an accidental left_id == right_id pair is treated
     as a self-pair and dropped by the one-to-one step). The join is the
-    fused shape of ``scored_candidate_pairs`` through
+    fused shape of ``scored_candidate_pairs`` (its key rows,
+    ``blocking._key_rows``, and gate, ``blocking._gated_pairs``) in
     ``blocking._pair_join``'s two-table mode:
 
     - blocking keys built PER SIDE (same g:/w:/m:/p: families via
-      ``**key_kwargs``), unioned under a side tag and persisted once so
-      sizing and both join branches reuse one computation;
+      ``**key_kwargs``), unioned under a side tag and persisted once:
+      the inputs may carry a caller's unmaterialized lineage, which the
+      sizing and both join branches would otherwise each re-run;
     - the hot-key cap (``cap_blocks``, drop mode) is decided on the
       UNION count of both sides (a key only a million LEFT rows share
       is just as quadratic as a shared one);
-    - the length gate rides in the join condition and the
-      budget-bounded ``levenshtein(t1, t2, lev_max+1)`` gate runs
-      map-side BEFORE the dedup shuffle, so the Python JW UDF sees only
-      gated survivors of the distinct (left_id, right_id) set.
+    - the length and Levenshtein gates run map-side BEFORE the dedup
+      shuffle, so the Python JW UDF sees only gated survivors of the
+      distinct (left_id, right_id) set.
 
     ``one_to_one=True`` finishes with ``mutual_best_matches(directed)``
     — at most one partner per record on either side, ties toward the
     smaller partner id. Call ``release_persisted`` (operators.blocking)
     on the result when done, as with candidate_pairs."""
     from ..functions.udfs import jaro_winkler_udf
-    from .blocking import (
-        _attach_persisted, _hash_block_keys, _len_gate, _lev_gated, _pair_join,
-        blocking_keys, cap_blocks,
-    )
+    from .blocking import _attach_persisted, _gated_pairs, _key_rows, cap_blocks
 
     def side_keys(df, tag):
-        return (
-            _hash_block_keys(
-                blocking_keys(df, id_col, key_col, payload=True, **key_kwargs)
-            )
-            .withColumn("_len", F.length("_k"))
-            .withColumn("_side", F.lit(tag))
-        )
+        return _key_rows(df, id_col, key_col, **key_kwargs).withColumn("_side", F.lit(tag))
 
     keys = side_keys(left, 0).unionByName(side_keys(right, 1)).persist()
     good = cap_blocks(keys, max_block_size)
-    pairs = _pair_join(
-        good.where(F.col("_side") == 0), good.where(F.col("_side") == 1),
-        carry=("_k",), on=_len_gate(lev_max),
-    ).withColumnsRenamed({"id1": "left_id", "id2": "right_id"})
+    side = F.col("_side")
     scored = (
-        _lev_gated(pairs, lev_max)
-        .dropDuplicates(["left_id", "right_id"])
+        _gated_pairs(good.where(side == 0), good.where(side == 1), lev_max=lev_max)
+        .withColumnsRenamed({"id1": "left_id", "id2": "right_id"})
         .withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
         .where(F.col("jw") >= jw_threshold)
         .select("left_id", "right_id", "lev", "jw")

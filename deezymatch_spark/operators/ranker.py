@@ -68,7 +68,6 @@ def candidate_ranker(
     calc_cosine: bool = False,
     pair_scorer: Callable[[F.Column, F.Column], F.Column] | None = None,
     pairs: DataFrame | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """→ [query_id, query, query_orig, rank, candidate, candidate_orig,
     candidate_id, faiss_dist, cosine_dist, dl_match, num_all_searches].
@@ -124,7 +123,7 @@ def candidate_ranker(
             c, "candidate_id"
         )
     else:
-        joined = (F.broadcast(q) if broadcast_queries else q).crossJoin(c)
+        joined = F.broadcast(q).crossJoin(c)
 
     scored = joined.withColumn("faiss_dist", sq_l2(F.col("_qv"), F.col("_cv")))
     if calc_cosine or metric == "cosine":

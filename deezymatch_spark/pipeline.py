@@ -46,7 +46,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.udfs import jaro_winkler_udf, normalize_udf
-from .operators.blocking import candidate_pairs, release_persisted, scored_candidate_pairs
+from .operators.blocking import candidate_pairs, scored_candidate_pairs
 from .operators.cc import connected_components
 from .operators.incremental import remove_nodes, update_clusters
 from .sources.pages import extract_anchor_texts, extract_title, generate_pages
@@ -333,7 +333,6 @@ def er_stages(
     scorer: str = "jw",
     fs_threshold_bits: float = 2.0,
     fs_fit_fraction: float = 1.0,
-    fs_iters: int = 30,
     clustering: str = "cc",
     spark: SparkSession | None = None,
     work_dir: str | None = None,
@@ -443,7 +442,7 @@ def er_stages(
         use_phonetic=use_phonetic, cap_mode=cap_mode,
         extra_keys=_anchor_key_rows(docs) if use_anchors else None,
     )
-    scored_raw = scored_candidate_pairs(docs, "id", "title_norm", lev_max=lev_max, **key_kw)
+    scored = scored_candidate_pairs(docs, "id", "title_norm", lev_max=lev_max, **key_kw)
     if scorer == "fs":
         from .operators.fs_linkage import (
             collect_pattern_counts,
@@ -471,9 +470,9 @@ def er_stages(
                 F.length("t1"), F.length("t2"), fuzzy_max_diff=1
             ),
         }
-        scored = comparison_vectors(scored_raw, fields)
+        scored = comparison_vectors(scored, fields)
     else:
-        scored = scored_raw.withColumn(
+        scored = scored.withColumn(
             "jw", jaro_winkler_udf(F.col("t1"), F.col("t2"))
         )
     if pair_scorer is not None:
@@ -483,10 +482,6 @@ def er_stages(
     # doubles the checkpoint's bytes for inspection-only value
     scored = scored.drop("t1", "t2")
     scored = _materialize(spark, scored, work_dir, "s2_scored")
-    # s2 holds the pairs now — drop blocking's persisted keys cache so
-    # eval loops calling er_stages repeatedly don't accumulate dead
-    # RDD storage
-    release_persisted(scored_raw)
     if scorer == "fs":
         # Splink's two-step estimation, because blocked+lev-gated pairs
         # are nearly all matches and a free two-class EM over them
@@ -517,7 +512,7 @@ def er_stages(
             else hash_sample(scored, "id1", fs_fit_fraction, salt="fsfit")
         )
         params = fs_fit(
-            fit_cv, list(fields), [3, 3, 3], iters=fs_iters, fixed_u=u_probs
+            fit_cv, list(fields), [3, 3, 3], iters=30, fixed_u=u_probs
         )
         scored = fs_score(scored, fs_match_weights(params))
 
@@ -645,9 +640,11 @@ def incremental_er(
     ``edges``, and only the touched components re-close
     (``remove_nodes`` — the same delta-neighborhood bound as inserts).
     Deleting an unknown id is a no-op; delete + re-ingest of the same
-    url re-clusters it from scratch. Requires the ``edges`` table
-    (states bootstrapped before edge lineage existed must re-bootstrap
-    to become deletable).
+    url re-clusters it from scratch.
+
+    Every call past the bootstrap requires the ``edges`` table: a state
+    written before edge lineage existed raises at the start of the call
+    and must be re-bootstrapped.
 
     Equals batch re-clustering of the surviving corpus whenever no
     blocking key exceeds ``max_block_size`` (asserted in tests); with
@@ -665,19 +662,16 @@ def incremental_er(
     idempotent, so the state is never bricked — deletion re-runs see
     already-filtered tables and re-filter them to the same result.
 
-    Two durable markers in ``state_dir`` keep DELETIONS from running
-    against an edge table that does not reflect the clustering:
-    ``_PARTIAL_EDGES`` (the edges table was started from a delta over a
-    pre-lineage state, so it misses the bootstrap-era edges — deletions
-    raise until re-bootstrap) and ``_INGEST_PENDING`` (set before an
-    ingest's edge append, cleared after its cluster swap — a deletion
-    attempted in that crashed window raises and tells the caller to
-    re-run the ingest, which heals idempotently and clears the marker).
+    A durable marker in ``state_dir``, ``_INGEST_PENDING``, keeps
+    DELETIONS from running against an edge table that does not reflect
+    the clustering: it is set before an ingest's edge append and cleared
+    after its cluster swap, so a deletion attempted in that crashed
+    window raises and tells the caller to re-run the ingest, which
+    heals idempotently and clears the marker.
     """
     docs_path = os.path.join(state_dir, "docs")
     edges_path = os.path.join(state_dir, "edges")
     clusters_path = os.path.join(state_dir, "clusters")
-    partial_marker = os.path.join(state_dir, "_PARTIAL_EDGES")
     pending_marker = os.path.join(state_dir, "_INGEST_PENDING")
 
     for p in (clusters_path, edges_path, docs_path):
@@ -703,27 +697,21 @@ def incremental_er(
         st["docs"].select("id", "url", "title", "title_norm").write.mode(
             "overwrite"
         ).parquet(docs_path)
-        # a fresh bootstrap has complete lineage and no ingest in
-        # flight — clear stale markers from any previous life of the dir
-        for m in (partial_marker, pending_marker):
-            _drop_marker(spark, m)
+        # a fresh bootstrap has no ingest in flight — clear a stale
+        # marker from any previous life of the dir
+        _drop_marker(spark, pending_marker)
         return st["clusters"]
 
+    # the bootstrap writes edges before its docs commit and the swap
+    # recovery above heals a half-done swap, so only a state written
+    # before edge lineage existed lacks the table
+    if not _is_done(spark, edges_path):
+        raise RuntimeError(
+            "incremental_er: this state has no edge lineage table "
+            f"({edges_path}) — it predates edge lineage; re-bootstrap it"
+        )
+
     if deleted_ids is not None:
-        if not _is_done(spark, edges_path):
-            raise RuntimeError(
-                "incremental_er: this state has no edge lineage table "
-                f"({edges_path}) — it predates deletion support; "
-                "re-bootstrap to make it deletable"
-            )
-        if _marker_exists(spark, partial_marker):
-            raise RuntimeError(
-                "incremental_er: the edge lineage table is PARTIAL — it "
-                "was started from a delta over a pre-lineage state, so "
-                "it misses the bootstrap-era edges and deletions would "
-                "silently split components; re-bootstrap to make this "
-                "state deletable"
-            )
         if _marker_exists(spark, pending_marker):
             raise RuntimeError(
                 "incremental_er: a previous ingest crashed between its "
@@ -779,12 +767,10 @@ def incremental_er(
     lookup = docs_prev.join(ids, "id", "left_semi").select(
         F.col("id").alias("src"), F.lit(None).cast("bigint").alias("dst")
     )
-    has_edges = _is_done(spark, edges_path)
-    if has_edges:
-        eprev = spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
-        lookup = lookup.unionByName(
-            eprev.join(ids, eprev.src == new_ids.id, "left_semi")
-        ).unionByName(eprev.join(ids, eprev.dst == new_ids.id, "left_semi"))
+    eprev = spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
+    lookup = lookup.unionByName(
+        eprev.join(ids, eprev.src == new_ids.id, "left_semi")
+    ).unionByName(eprev.join(ids, eprev.dst == new_ids.id, "left_semi"))
     found = lookup.toArrow()
     is_doc = pc.is_null(found["dst"])
     dup_ids = found.filter(is_doc)["src"].combine_chunks()
@@ -818,15 +804,7 @@ def incremental_er(
     # the same batch: any already-present edge incident to a delta id
     # (the known list looked up above) is skipped, so re-running the
     # call can't grow the table
-    if has_edges:
-        fresh = delta_edges.join(known, ["src", "dst"], join_type="left anti")
-    else:
-        # pre-lineage state: start the table from this delta onward.
-        # Such a state is non-deletable until re-bootstrapped — the
-        # durable marker makes the deletion guard enforce that even
-        # after this write gives the table a _SUCCESS stamp
-        _touch_marker(spark, partial_marker)
-        fresh = delta_edges
+    fresh = delta_edges.join(known, ["src", "dst"], join_type="left anti")
     # edges-append → cluster-swap is not atomic; the pending marker
     # (set before the append, cleared after the swap) fences deletions
     # out of the crashed window in between

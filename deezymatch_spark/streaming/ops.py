@@ -18,10 +18,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.textstats import doc_fingerprint
 from ..functions.udfs import jaro_winkler_udf
 from ..operators.blocking import (
+    _gated_pairs,
     _hash_block_keys,
-    _len_gate,
-    _lev_gated,
-    _pair_join,
+    _key_rows,
     blocking_keys,
     cap_blocks,
     over_cap_block_keys,
@@ -501,9 +500,10 @@ def streaming_entity_matches(
 ):
     """Continuously match incoming pages against a static candidate
     table (id, title_norm): per micro-batch (``foreachBatch``), the
-    fused blocking + scoring join of ``scored_candidate_pairs`` in
-    ``_pair_join``'s two-table mode (key rows carry the titles, so
-    nothing joins back), then the JW gate, writing
+    fused blocking + scoring join of ``scored_candidate_pairs`` (its
+    ``_key_rows`` and ``_gated_pairs``) in ``_pair_join``'s two-table
+    mode (key rows carry the titles, so nothing joins back), then the
+    JW gate, writing
     ``[cand_id, id, title_norm, cand_title, lev, jw]`` to Parquet
     partitioned by ``batch_id`` with DYNAMIC partition overwrite —
     foreachBatch alone is only at-least-once (a batch retried after a
@@ -525,17 +525,13 @@ def streaming_entity_matches(
     # emitted), carry the title, and the capped static side is
     # persisted so micro-batches don't rebuild it.
     def keys(df: DataFrame) -> DataFrame:
-        return _hash_block_keys(
-            blocking_keys(df, "id", "title_norm", use_minhash=use_minhash, payload=True)
-        ).withColumn("_len", F.length("_k"))
+        return _key_rows(df, "id", "title_norm", use_minhash=use_minhash)
 
     cand_keys = cap_blocks(keys(candidates), max_block_size).persist()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = _pair_join(keys(batch_df), cand_keys, carry=("_k",), on=_len_gate(lev_max))
         scored = (
-            _lev_gated(pairs, lev_max)
-            .dropDuplicates(["id1", "id2"])
+            _gated_pairs(keys(batch_df), cand_keys, lev_max=lev_max)
             .withColumn("jw", jaro_winkler_udf(F.col("t1"), F.col("t2")))
             .where(F.col("jw") >= jw_threshold)
             .select(

@@ -33,10 +33,7 @@ def _candidate_pairs(spark, n):
 
 
 def _scored_candidate_pairs(spark, n):
-    out = scored_candidate_pairs(_docs(spark, n), "id", "key", max_block_size=CAP)
-    count = out.count()
-    release_persisted(out)
-    return count
+    return scored_candidate_pairs(_docs(spark, n), "id", "key", max_block_size=CAP).count()
 
 
 def _link_records(spark, n):

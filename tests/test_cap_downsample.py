@@ -57,7 +57,7 @@ def test_scored_pairs_downsample_recall_floor(spark):
     def pairs(mode):
         out = scored_candidate_pairs(
             docs, "id", "t", lev_max=2, max_block_size=10,
-            cap_mode=mode, use_minhash=False, persist_keys=False,
+            cap_mode=mode, use_minhash=False,
         )
         return {(r.id1, r.id2) for r in out.collect()}
 

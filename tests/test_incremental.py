@@ -403,28 +403,35 @@ def test_incremental_er_five_successive_folds_equal_batch(spark, tmp_path):
         assert set(edges) == {tuple(r) for r in st["matches"].select("id1", "id2").collect()}
 
 
-def test_incremental_er_fold_over_a_pre_lineage_state(spark, tmp_path):
-    """A state without an ``edges`` table (from before edge lineage)
-    still folds like batch; the edges table it starts holds only the
-    delta's edges, and the fold marks it partial."""
+def test_incremental_er_pre_lineage_state_raises_and_is_left_unchanged(spark, tmp_path):
+    """A state whose ``docs`` is committed but which has no ``edges``
+    table (from before edge lineage) is refused at the start of every
+    call, fold or deletion, with a re-bootstrap hint, and not a file of
+    it changes."""
+    import hashlib
     import os
+    import pathlib
     import shutil
 
-    from deezymatch_spark.pipeline import er_stages, incremental_er
+    from deezymatch_spark.pipeline import incremental_er
 
-    pages, first, second = _split(spark, 300)
+    def snapshot(root):
+        return {
+            str(f.relative_to(root)): hashlib.sha256(f.read_bytes()).hexdigest()
+            for f in pathlib.Path(root).rglob("*")
+            if f.is_file()
+        }
+
+    _, first, second = _split(spark, 300)
     state = str(tmp_path / "er_state")
     incremental_er(spark, first, state, **NO_CAP)
     shutil.rmtree(os.path.join(state, "edges"))
-    got = _assignment(incremental_er(spark, second, state, **NO_CAP))
-
-    st = er_stages(pages, spark=spark, **NO_CAP)
-    assert got == _assignment(st["clusters"])
-    assert os.path.exists(os.path.join(state, "_PARTIAL_EDGES"))
-    assert not os.path.exists(os.path.join(state, "_INGEST_PENDING"))
-    delta_ids = {r.id for r in second.select(F.xxhash64("url").alias("id")).collect()}
-    edges = _table(spark, state, "edges")
-    assert edges and all(a in delta_ids or b in delta_ids for a, b in edges)
+    before = snapshot(state)
+    some_ids = first.select(F.xxhash64("url").alias("id")).limit(3)
+    for pages_new, deleted_ids in ((second, None), (None, some_ids), (second, some_ids)):
+        with pytest.raises(RuntimeError, match="no edge lineage table.*re-bootstrap"):
+            incremental_er(spark, pages_new, state, deleted_ids=deleted_ids, **NO_CAP)
+    assert snapshot(state) == before
 
 
 def test_incremental_er_pair_scorer_equals_batch(spark, tmp_path):
@@ -539,14 +546,11 @@ def test_incremental_er_delete_then_reingest_equals_batch(spark, tmp_path):
 
 
 def test_incremental_er_delete_guards(spark, tmp_path):
-    """Deletions are fenced out of states whose edge lineage does not
-    reflect the clustering: (a) a lineage started from a delta over a
-    pre-lineage state (misses bootstrap-era edges) raises until
-    re-bootstrap; (b) an ingest crashed between its edge append and
-    cluster swap raises until that ingest is re-run, and the re-run
+    """Deletions are fenced out of a state whose edge lineage does not
+    reflect the clustering: an ingest crashed between its edge append
+    and cluster swap raises until that ingest is re-run, and the re-run
     heals and clears the fence."""
     import os
-    import shutil
 
     from deezymatch_spark.pipeline import incremental_er
     from deezymatch_spark.sources.pages import generate_pages
@@ -557,33 +561,21 @@ def test_incremental_er_delete_guards(spark, tmp_path):
     some_ids = pages.where(h == 1).select(F.xxhash64("url").alias("id"))
     kw = dict(max_block_size=1_000_000)
 
-    # (a) pre-lineage state: bootstrap, drop edges (simulating a state
-    # from before edge lineage existed), ingest a delta — the delta
-    # seeds a PARTIAL edges table, so deletion must refuse even though
-    # the table now exists with a _SUCCESS stamp
-    state_a = str(tmp_path / "state_a")
-    incremental_er(spark, first, state_a, **kw)
-    shutil.rmtree(os.path.join(state_a, "edges"))
-    incremental_er(spark, second, state_a, **kw)
-    assert os.path.exists(os.path.join(state_a, "edges", "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="PARTIAL"):
-        incremental_er(spark, None, state_a, deleted_ids=some_ids, **kw)
-
-    # (b) crashed ingest window: edges appended, clusters not swapped —
+    # crashed ingest window: edges appended, clusters not swapped —
     # simulated by the durable _INGEST_PENDING fence the ingest sets
     # before its append and clears after its swap
-    state_b = str(tmp_path / "state_b")
-    incremental_er(spark, first, state_b, **kw)
-    incremental_er(spark, second, state_b, **kw)
-    assert not os.path.exists(os.path.join(state_b, "_INGEST_PENDING"))
-    with open(os.path.join(state_b, "_INGEST_PENDING"), "w"):
+    state = str(tmp_path / "state")
+    incremental_er(spark, first, state, **kw)
+    incremental_er(spark, second, state, **kw)
+    assert not os.path.exists(os.path.join(state, "_INGEST_PENDING"))
+    with open(os.path.join(state, "_INGEST_PENDING"), "w"):
         pass
     with pytest.raises(RuntimeError, match="re-run that ingest"):
-        incremental_er(spark, None, state_b, deleted_ids=some_ids, **kw)
+        incremental_er(spark, None, state, deleted_ids=some_ids, **kw)
     # re-running the crashed ingest is idempotent, heals, and unfences
-    incremental_er(spark, second, state_b, **kw)
-    assert not os.path.exists(os.path.join(state_b, "_INGEST_PENDING"))
-    incremental_er(spark, None, state_b, deleted_ids=some_ids, **kw)
+    incremental_er(spark, second, state, **kw)
+    assert not os.path.exists(os.path.join(state, "_INGEST_PENDING"))
+    incremental_er(spark, None, state, deleted_ids=some_ids, **kw)
 
 
 def test_bcubed_scaled_range_guard(spark):

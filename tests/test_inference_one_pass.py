@@ -101,3 +101,39 @@ def test_test_mode_is_one_python_pass_and_unchanged(spark, seeded_artifact, kw):
         if abs(w.p1 - 0.5) > 1e-6:
             assert g.prediction == int(w.p1 > 0.5)
         assert abs(g.p0 - (1.0 - g.p1)) < 1e-12
+
+
+def test_finetune_p4_runs_each_udf_once_per_column(spark, seeded_artifact, tmp_path, monkeypatch):
+    """``finetune``'s P4 filter keeps normalization and the missing-char
+    ratios in their own projection under the filter, so in the frame it
+    hands to the split each UDF runs once per column (the filter pushed
+    below the projection normalized every string twice), and the rows
+    kept are those whose ratios pass on both sides."""
+
+    class Captured(Exception):
+        pass
+
+    seen = {}
+
+    def capture(df, **_):
+        seen["p4"] = df
+        raise Captured
+
+    monkeypatch.setattr(api, "train_val_test_split", capture)
+    df = _pairs(spark)
+    with pytest.raises(Captured):
+        api.finetune(spark, df, "m", seeded_artifact, models_dir=str(tmp_path))
+    got = sorted(r.original_index for r in seen["p4"].collect())
+    plan = seen["p4"]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("normalize_udf(") == 2, final
+    assert final.count("missing_ratio(") == 2, final
+
+    ratio = make_missing_ratio_udf(seeded_artifact)
+    rows = df.select(
+        "original_index",
+        ratio(normalize_udf(F.col("s1"))).alias("r1"),
+        ratio(normalize_udf(F.col("s2"))).alias("r2"),
+    ).collect()
+    want = sorted(r.original_index for r in rows if r.r1 <= 0.5 and r.r2 <= 0.5)
+    assert got == want and 0 < len(got) < 40

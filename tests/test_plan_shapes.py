@@ -8,6 +8,7 @@ import contextlib
 import io
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -211,16 +212,40 @@ def _titles(spark):
 def test_scored_candidate_pairs_batch_plan(spark):
     """The fused blocking self-join stays JVM-only and shuffles five
     times: the key rows once per pair-join side, the over-cap key-size
-    aggregation once per side (map-combined, so only distinct keys
-    move; the list itself is broadcast), and the pair dedup."""
-    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+    aggregation once per side in this initial plan (map-combined, so
+    only distinct keys move; the list itself is broadcast; AQE reuses
+    one at run time, pinned below), and the pair dedup."""
+    from deezymatch_spark.operators.blocking import scored_candidate_pairs
 
     out = scored_candidate_pairs(_titles(spark), "id", "t")
     with _no_size_broadcast(spark):
         ops = _ops(out)
-    release_persisted(out)
     assert not _python(ops), ops
     assert _shuffles(ops) == 5, ops
+
+
+def _final_plan(out) -> str:
+    """The final (AQE) executed plan, read after ``out`` has run."""
+    out.collect()
+    return out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("cap_mode, aggregations", [("drop", 1), ("downsample", 2)])
+def test_scored_candidate_pairs_batch_reuses_the_over_cap_aggregation(spark, cap_mode, aggregations):
+    """Batch mode caches nothing either: the key rows are not persisted,
+    so AQE serves both join sides' over-cap key list from one
+    aggregation (a ``ReusedExchange``) instead of aggregating again per
+    side over an in-memory scan. Downsample adds one aggregation, for
+    the over-cap rows it thins, and reuses it the same way. The cap of
+    20 leaves over-cap keys in this corpus."""
+    from deezymatch_spark.operators.blocking import scored_candidate_pairs
+
+    out = scored_candidate_pairs(_titles(spark), "id", "t", max_block_size=20, cap_mode=cap_mode)
+    assert getattr(out, "_dzm_persisted", None) is None
+    final = _final_plan(out)
+    assert "InMemoryTableScan" not in final, final
+    assert final.count("functions=[count(1)]") == aggregations, final
+    assert any("ReusedExchange [block_key" in line for line in final.splitlines()), final
 
 
 def test_scored_candidate_pairs_delta_never_shuffles_the_corpus_keys(spark):
@@ -228,7 +253,7 @@ def test_scored_candidate_pairs_delta_never_shuffles_the_corpus_keys(spark):
     build side is the delta's key rows (the corpus keys semi-joined with
     the broadcast delta ids), so the corpus key table never shuffles.
     Only the over-cap aggregation and the pair dedup shuffle."""
-    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+    from deezymatch_spark.operators.blocking import scored_candidate_pairs
 
     titles = _titles(spark)
     delta = titles.where(F.pmod("id", F.lit(10)) == 0).select("id")
@@ -236,7 +261,6 @@ def test_scored_candidate_pairs_delta_never_shuffles_the_corpus_keys(spark):
     with _no_size_broadcast(spark):
         ops = _ops(out)
         plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
-    release_persisted(out)
     assert "SortMergeJoin" not in ops, ops
     assert not _python(ops), ops
     assert _shuffles(ops) == 3, ops
@@ -256,16 +280,13 @@ def test_scored_candidate_pairs_delta_reuses_the_over_cap_aggregation(spark):
     in-memory scan. The cap of 20 leaves over-cap keys in this corpus;
     with none, AQE drops the empty anti-joins and there is nothing to
     reuse."""
-    from deezymatch_spark.operators.blocking import release_persisted, scored_candidate_pairs
+    from deezymatch_spark.operators.blocking import scored_candidate_pairs
 
     titles = _titles(spark)
     delta = titles.where(F.pmod("id", F.lit(10)) == 0).select("id")
     out = scored_candidate_pairs(titles, "id", "t", delta_ids=delta, max_block_size=20)
     assert getattr(out, "_dzm_persisted", None) is None
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    release_persisted(out)
-    final = plan.split("== Initial Plan ==")[0]
+    final = _final_plan(out)
     assert "InMemoryTableScan" not in final, final
     assert final.count("functions=[count(1)]") == 1, final
     assert any("ReusedExchange [block_key" in line for line in final.splitlines()), final
