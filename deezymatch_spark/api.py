@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .functions.udfs import normalize_series, normalize_udf, tokenize_udf
 from .model.numpy_rnn import SiameseRNN
 from .model.scorer_udf import (
+    _encode_batch,
     encode_vectors,
     load_artifacts,
     make_missing_ratio_udf,
@@ -45,7 +46,7 @@ from .model.train_numpy import fit as _fit_encoder
 from .operators.ranker import candidate_ranker as _ranker
 from .operators.split import train_val_test_split
 from .sources.tsv import read_pairs_tsv
-from .text import Vocabulary, encode_tokens, pad_sequence, string_split
+from .text import Vocabulary
 
 SEED = 1364  # DeezyMatch.py:33
 
@@ -152,23 +153,8 @@ def _collect_encoded(df: DataFrame, vocab: dict[str, int], cfg: dict, limit: int
         return (np.zeros((0, 1), dtype=np.int64), np.zeros(0, dtype=np.int64),
                 np.zeros((0, 1), dtype=np.int64), np.zeros(0, dtype=np.int64),
                 np.zeros(0, dtype=np.int64))
-    maxlen = cfg.get("max_seq_len", 120)
-    tk = {k: cfg[k] for k in ("tokenize", "min_gram", "max_gram",
-                              "token_sep", "prefix_suffix")}
-
-    def enc(strings):
-        X = np.zeros((len(strings), maxlen), dtype=np.int64)
-        L = np.zeros(len(strings), dtype=np.int64)
-        for i, s in enumerate(strings):
-            toks = string_split(s or "", **tk)
-            idx = encode_tokens(toks, vocab)
-            padded, nlen = pad_sequence(idx, maxlen)
-            X[i] = padded
-            L[i] = max(nlen, 1)
-        return X, L
-
-    X1, l1 = enc([r.s1_norm for r in rows])
-    X2, l2 = enc([r.s2_norm for r in rows])
+    X1, l1 = _encode_batch(pd.Series([r.s1_norm for r in rows], dtype=object), vocab, cfg)
+    X2, l2 = _encode_batch(pd.Series([r.s2_norm for r in rows], dtype=object), vocab, cfg)
     y = np.array([int(r.label) for r in rows], dtype=np.int64)
     return X1, l1, X2, l2, y
 
@@ -243,13 +229,15 @@ def train(
     cfg = dict(DEFAULT_TOKENIZE, **(tokenize_cfg or {}))
 
     pairs = read_pairs_tsv(spark, dataset) if isinstance(dataset, str) else dataset
+    # normalized once: the split's two branches, the vocab build, both
+    # encoder collects and the head features all read this checkpoint
+    pairs = pairs.withColumns(
+        {"s1_norm": normalize_udf(F.col("s1")), "s2_norm": normalize_udf(F.col("s2"))}
+    ).localCheckpoint()
     pairs = train_val_test_split(
         pairs, label_col="label", order_col="original_index",
         n_train_examples=n_train_examples,
         train_prop=train_prop, val_prop=val_prop, test_prop=test_prop,
-    )
-    pairs = pairs.withColumn("s1_norm", normalize_udf(F.col("s1"))).withColumn(
-        "s2_norm", normalize_udf(F.col("s2"))
     )
 
     # A2 vocab build over the train split, both columns, insertion order
@@ -380,7 +368,9 @@ def finetune(
     # the ratios get their own projection under the filter, as in
     # inference's test mode: nondeterministic only so the optimizer keeps
     # the filter above it; pushed below, it copies normalize_udf into its
-    # condition and each string is normalized twice
+    # condition and each string is normalized twice. Checkpointed once:
+    # the split's two branches and every later read (both encoder
+    # collects, the head features) would each run the UDFs again.
     ratio = make_missing_ratio_udf(pretrained_path).asNondeterministic()
     pairs = (
         pairs.withColumns(
@@ -389,6 +379,7 @@ def finetune(
         .withColumns({"_r1": ratio(F.col("s1_norm")), "_r2": ratio(F.col("s2_norm"))})
         .where((F.col("_r1") <= missing_char_threshold) & (F.col("_r2") <= missing_char_threshold))
         .drop("_r1", "_r2")
+        .localCheckpoint()
     )
     pairs = train_val_test_split(
         pairs, label_col="label", order_col="original_index"

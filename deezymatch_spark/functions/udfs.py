@@ -20,7 +20,6 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, StringType
@@ -136,12 +135,3 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
             jaro_winkler(a[i], b[i]) if a[i] is not None and b[i] is not None else np.nan
         )
     return pd.Series(out)
-
-
-def normalized(col: Column) -> Column:
-    """Convenience: full-parity normalization of a string column."""
-    return normalize_udf(col)
-
-
-def nfkd_lower_strip(col: Column) -> Column:
-    return normalize_udf(col)

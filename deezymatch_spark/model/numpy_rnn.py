@@ -21,6 +21,11 @@ PyTorch cell equations and packed-sequence semantics:
   (rnn_networks.py:891-918), concatenated fwd‖bwd downstream exactly as
   candidateRanker.py:313,350.
 
+Training (model/train_numpy.py) runs this same forward —
+``_encode_all`` → ``_pool`` → ``head`` — with a ``cache`` dict that
+records the per-step values its BPTT backward reads; every inference
+call passes no cache.
+
 Since torch is absent in this environment, weights are either loaded
 from an .npz artifact or initialized deterministically from a seed with
 torch's init distribution (U(-1/sqrt(H), 1/sqrt(H)) for RNN mats,
@@ -41,13 +46,16 @@ def _sigmoid(x):
 
 _GATES = {"gru": 3, "lstm": 4, "rnn": 1}
 
-FC1_MULTIPLIER = {
-    "attention": 4, "average": 4, "max": 4, "maximum": 4, "hstates": 4,
-    "hstates_layers": None,  # 4 * n_layers
-    "hstates_layers_simple": None,  # 2 * n_layers
-    "hstates_subtract": None,  # 1 * n_layers
-    "hstates_l2_distance": None,  # 1 * n_layers
+# the per-step values ``_gate_step`` returns next to (h, c), by name:
+# what a BPTT cache records and the backward pass reads
+GATE_CACHE = {
+    "gru": ("r", "z", "n", "ghn"),
+    "lstm": ("i", "f", "g", "o", "cprev", "cnew"),
+    "rnn": ("h2",),
 }
+
+# poolings whose head combines the two sides as [v1, v2, v1*v2, v1-v2]
+COMBINE_4X = ("attention", "average", "max", "maximum", "hstates", "hstates_layers")
 
 
 class SiameseRNN:
@@ -220,33 +228,39 @@ class SiameseRNN:
 
     # ------------------------------------------------------- recurrence
 
-    def _cell_step(self, x, h, c, Wih, Whh, bih, bhh):
-        return self._gate_step(x @ Wih.T + bih, h, c, Whh, bhh)
-
     def _gate_step(self, gi, h, c, Whh, bhh):
+        """One timestep → (h', c', gates): ``gates`` are the values
+        ``GATE_CACHE[arch]`` names, already computed for h'."""
         gh = h @ Whh.T + bhh
         H = self.hidden
         if self.arch == "gru":
             r = _sigmoid(gi[:, :H] + gh[:, :H])
             z = _sigmoid(gi[:, H : 2 * H] + gh[:, H : 2 * H])
-            n = np.tanh(gi[:, 2 * H :] + r * gh[:, 2 * H :])
-            return (1 - z) * n + z * h, c
+            ghn = gh[:, 2 * H :]
+            n = np.tanh(gi[:, 2 * H :] + r * ghn)
+            return (1 - z) * n + z * h, c, (r, z, n, ghn)
         if self.arch == "lstm":
             i = _sigmoid(gi[:, :H] + gh[:, :H])
             f = _sigmoid(gi[:, H : 2 * H] + gh[:, H : 2 * H])
             g = np.tanh(gi[:, 2 * H : 3 * H] + gh[:, 2 * H : 3 * H])
             o = _sigmoid(gi[:, 3 * H :] + gh[:, 3 * H :])
             c2 = f * c + i * g
-            return o * np.tanh(c2), c2
-        return np.tanh(gi + gh), c  # vanilla rnn
+            return o * np.tanh(c2), c2, (i, f, g, o, c, c2)
+        h2 = np.tanh(gi + gh)  # vanilla rnn
+        return h2, c, (h2,)
 
-    def _run_direction(self, inp, lengths, layer, d):
+    def _run_direction(self, inp, lengths, layer, d, cache=None):
         """inp [B,T,D] already direction-adjusted; returns (outputs
         [B,T,H] aligned to inp order, h_n [B,H]).
 
         The input-to-hidden projection for ALL timesteps is one batched
         matmul hoisted out of the recurrence — only the (small)
-        hidden-to-hidden matmul stays in the loop."""
+        hidden-to-hidden matmul stays in the loop.
+
+        ``cache`` is None at inference. A training step passes a dict,
+        which receives what the BPTT backward reads: ``inp``,
+        ``lengths``, ``hprev`` (the state entering each step) and one
+        [B,T,H] array per ``GATE_CACHE[arch]`` gate value."""
         B, T, _ = inp.shape
         H = self.hidden
         p = f"l{layer}d{d}"
@@ -257,8 +271,15 @@ class SiameseRNN:
         h = np.zeros((B, H), dtype=dt)
         c = np.zeros((B, H), dtype=dt)
         outs = np.zeros((B, T, H), dtype=dt)
+        if cache is not None:
+            names = ("hprev",) + GATE_CACHE[self.arch]
+            cache.update(inp=inp, lengths=lengths)
+            cache.update({nm: np.zeros((B, T, H), dtype=dt) for nm in names})
         for t in range(T):
-            h2, c2 = self._gate_step(gi_all[:, t, :], h, c, Whh, bhh)
+            h2, c2, gates = self._gate_step(gi_all[:, t, :], h, c, Whh, bhh)
+            if cache is not None:
+                for nm, v in zip(names, (h,) + gates):
+                    cache[nm][:, t] = v
             mask = (t < lengths)[:, None]
             h = np.where(mask, h2, h)
             c = np.where(mask, c2, c)
@@ -277,31 +298,40 @@ class SiameseRNN:
         )
         return x[np.arange(B)[:, None], idx]
 
-    def _encode_all(self, X, lengths):
-        """→ (outputs [B,T,H*dirs], h_n dict[(layer,dir)] = [B,H]).
+    def _encode_all(self, X, lengths, cache=None):
+        """→ (outputs [B,T,H*dirs], h_n dict[(layer,dir)] = [B,H], lengths).
 
         T is truncated to the batch max length — exactly torch's
         pack_padded/pad_packed semantics (the reference's pooled
         outputs have T = batch max, rnn_networks.py:878-890), and ~6x
         fewer recurrence steps when rows are much shorter than the
-        config maxlen."""
+        config maxlen.
+
+        With a ``cache`` dict (training), it receives the truncated
+        token ids ``X``, ``lengths`` and ``layers``: per layer the
+        (forward, backward) ``_run_direction`` caches."""
         lengths = np.asarray(lengths, dtype=np.int64)
         t_max = max(int(lengths.max(initial=1)), 1)
         if t_max < X.shape[1]:
             X = X[:, :t_max]
+        if cache is not None:
+            cache.update(X=X, lengths=lengths, layers=[])
         inp = self.w["emb"][X]  # [B,T,E]
         h_n: dict[tuple[int, int], np.ndarray] = {}
         for layer in range(self.n_layers):
-            out_f, h_f = self._run_direction(inp, lengths, layer, 0)
+            cf, cb = (None, None) if cache is None else ({}, {})
+            out_f, h_f = self._run_direction(inp, lengths, layer, 0, cf)
             h_n[(layer, 0)] = h_f
             if self.bidi:
                 rev = self._reverse_padded(inp, lengths)
-                out_b_rev, h_b = self._run_direction(rev, lengths, layer, 1)
+                out_b_rev, h_b = self._run_direction(rev, lengths, layer, 1, cb)
                 out_b = self._reverse_padded(out_b_rev, lengths)
                 h_n[(layer, 1)] = h_b
                 inp = np.concatenate([out_f, out_b], axis=2)
             else:
                 inp = out_f
+            if cache is not None:
+                cache["layers"].append((cf, cb))
         return inp, h_n, lengths
 
     # ---------------------------------------------------------- public
@@ -315,9 +345,15 @@ class SiameseRNN:
             return np.concatenate([h_n[(last, 0)], h_n[(last, 1)]], axis=1)
         return h_n[(last, 0)]
 
-    def _pool(self, outputs, h_n, lengths):
+    def _pool(self, outputs, h_n, lengths, cache=None):
+        """One side's pooled vector. A training ``cache`` receives the
+        ``outputs`` and what their pooling's backward reads: the
+        attention activations ``attn_a1`` and weights ``attn_wts``, or
+        the max-pool argmax ``max_idx``."""
         last = self.n_layers - 1
         p = self.pooling
+        if cache is not None:
+            cache["outputs"] = outputs
         if p == "attention":
             # per-timestep 2-layer MLP → softmax over TIME → weighted
             # sum of outputs (rnn_networks.py:920-940). The reference
@@ -330,6 +366,8 @@ class SiameseRNN:
             logits = logits - logits.max(axis=1, keepdims=True)
             e = np.exp(logits)
             wts = e / e.sum(axis=1, keepdims=True)
+            if cache is not None:
+                cache.update(attn_a1=a1, attn_wts=wts)
             return (wts[:, :, None] * outputs).sum(axis=1)
         if p in ("average", "max", "maximum"):
             # adaptive pool over the TIME axis of padded outputs — the
@@ -337,6 +375,8 @@ class SiameseRNN:
             # the batch max length, zeros beyond each row's length
             if p == "average":
                 return outputs.sum(axis=1) / outputs.shape[1]
+            if cache is not None:
+                cache["max_idx"] = outputs.argmax(axis=1)
             return outputs.max(axis=1)
         if p == "hstates":
             v = h_n[(last, 0)]
@@ -359,12 +399,15 @@ class SiameseRNN:
         row's vector depends on the longest row it is batched with."""
         return self._pool(*self._encode_all(X, lengths))
 
-    def head(self, v1, v2):
+    def head(self, v1, v2, cache=None):
         """Combine two sides' pooled vectors and classify (N1-N4):
         → (p0, p1, pred) arrays. Softmax over the 2 fc2 logits;
-        p1 = match confidence."""
+        p1 = match confidence. A training ``cache`` receives the
+        ``combined`` vector, the fc1 activation ``fc1`` and the softmax
+        ``sm`` (not filled for ``hstates_cosine``, which has no fc
+        layers)."""
         p = self.pooling
-        if p in ("attention", "average", "max", "maximum", "hstates", "hstates_layers"):
+        if p in COMBINE_4X:
             combined = np.concatenate([v1, v2, v1 * v2, v1 - v2], axis=1)
         elif p == "hstates_layers_simple":
             combined = np.concatenate([v1, v2], axis=1)
@@ -388,6 +431,8 @@ class SiameseRNN:
         logits = logits - logits.max(axis=1, keepdims=True)
         e = np.exp(logits)
         sm = e / e.sum(axis=1, keepdims=True)
+        if cache is not None:
+            cache.update(combined=combined, fc1=y, sm=sm)
         return sm[:, 0], sm[:, 1], sm.argmax(axis=1)
 
     def classify(self, X1, len1, X2, len2):

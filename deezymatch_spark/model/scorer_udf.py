@@ -49,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.udfs import normalize_series
-from ..text import encode_tokens, pad_sequence, string_split
+from ..text import encode_tokens, missing_char_ratio, pad_sequence, string_split
 from .numpy_rnn import SiameseRNN
 
 __all__ = [
@@ -100,6 +100,22 @@ def load_artifacts(path: str) -> tuple[SiameseRNN, dict[str, int], dict]:
     return _CACHE[key]
 
 
+def _tokenized(s, vocab, cfg) -> Iterator[tuple[int, list[int]]]:
+    """(token count, encoded ids) per string of ``s``: the artifact's
+    ``string_split`` tokenization, then ``encode_tokens`` (unknown
+    tokens dropped). None tokenizes as the empty string."""
+    tk = {
+        "tokenize": cfg.get("tokenize", ["char"]),
+        "min_gram": cfg.get("min_gram", 1),
+        "max_gram": cfg.get("max_gram", 3),
+        "token_sep": cfg.get("token_sep", "default"),
+        "prefix_suffix": cfg.get("prefix_suffix", ["|", "|"]),
+    }
+    for x in s:
+        toks = string_split(x if x is not None else "", **tk)
+        yield len(toks), encode_tokens(toks, vocab)
+
+
 def _encode_batch(
     s: pd.Series, vocab, cfg, return_ratio: bool = False
 ):
@@ -108,20 +124,10 @@ def _encode_batch(
     SAME tokenization pass — a separate ratio UDF would double the
     Python tokenization work, measured 2x slower end-to-end)."""
     maxlen = cfg.get("max_seq_len", 120)
-    tok_cfg = cfg.get("tokenize", ["char"])
     rows, lens, ratios = [], [], []
-    for x in s:
-        toks = string_split(
-            x if x is not None else "",
-            tokenize=tok_cfg,
-            min_gram=cfg.get("min_gram", 1),
-            max_gram=cfg.get("max_gram", 3),
-            token_sep=cfg.get("token_sep", "default"),
-            prefix_suffix=cfg.get("prefix_suffix", ["|", "|"]),
-        )
-        idx = encode_tokens(toks, vocab)
+    for n_toks, idx in _tokenized(s, vocab, cfg):
         if return_ratio:
-            ratios.append(1.0 - len(idx) / max(1, len(toks)) if toks else 1.0)
+            ratios.append(missing_char_ratio(len(idx), n_toks))
         padded, n = pad_sequence(idx, maxlen)
         rows.append(padded)
         lens.append(max(n, 1))  # packed seqs need len >= 1; all-pad row is inert
@@ -327,24 +333,13 @@ def make_missing_ratio_udf(artifact_path: str):
     @pandas_udf(DoubleType())
     def missing_ratio(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         _, vocab, cfg = load_artifacts(artifact_path)
-        tok_cfg = cfg.get("tokenize", ["char"])
         for s in batches:
-            out = np.empty(len(s))
-            for i, x in enumerate(s.tolist()):
-                toks = string_split(
-                    x if x is not None else "",
-                    tokenize=tok_cfg,
-                    min_gram=cfg.get("min_gram", 1),
-                    max_gram=cfg.get("max_gram", 3),
-                    token_sep=cfg.get("token_sep", "default"),
-                    prefix_suffix=cfg.get("prefix_suffix", ["|", "|"]),
-                )
-                enc = encode_tokens(toks, vocab)
-                # len==0 → ratio 1.0 (reference removes empty rows too)
-                out[i] = (
-                    1.0 - len(enc) / max(1, len(toks)) if toks else 1.0
-                )
-            yield pd.Series(out)
+            # no tokens (empty string) → ratio 1.0: the reference
+            # removes empty rows too
+            yield pd.Series(np.fromiter(
+                (missing_char_ratio(len(idx), n) for n, idx in _tokenized(s, vocab, cfg)),
+                dtype=np.float64, count=len(s),
+            ))
 
     return missing_ratio
 

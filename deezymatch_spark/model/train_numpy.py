@@ -3,9 +3,10 @@
 Re-implements the reference's training stack without torch
 (absent in this environment):
 
-- forward = exactly ``numpy_rnn.SiameseRNN`` semantics (torch cell
-  equations, packed-sequence masking, all pooling/combine families),
-  with per-step caches for reverse-mode differentiation;
+- forward = ``numpy_rnn.SiameseRNN``'s own ``_encode_all`` → ``_pool``
+  → ``head``, the code inference runs, called with a ``cache`` dict
+  that records the per-step values reverse-mode differentiation reads
+  (this module writes only the loss and the backward pass);
 - loss = ``nn.CrossEntropyLoss(weight=[1,1], reduction='mean')`` over
   the 2-class logits (rnn_networks.py:164-171);
 - optimizer = Adam (rnn_networks.py:147-151; lr default 0.001,
@@ -40,7 +41,7 @@ import os
 
 import numpy as np
 
-from .numpy_rnn import SiameseRNN, _sigmoid
+from .numpy_rnn import _GATES, COMBINE_4X, SiameseRNN
 
 __all__ = ["Adam", "fit", "classify_loss", "forward_backward"]
 
@@ -80,64 +81,7 @@ class Adam:
             ).astype(self.p[k].dtype)
 
 
-# ---------------------------------------------------- cached forward (1 dir)
-
-
-def _forward_direction(model: SiameseRNN, inp, lengths, layer, d):
-    """Like SiameseRNN._run_direction but caching every per-step value
-    the backward pass needs. Returns (outs, h_final, cache)."""
-    B, T, _ = inp.shape
-    H = model.hidden
-    p = f"l{layer}d{d}"
-    Wih, Whh = model.w[f"{p}_Wih"], model.w[f"{p}_Whh"]
-    bih, bhh = model.w[f"{p}_bih"], model.w[f"{p}_bhh"]
-    dt = model.w["emb"].dtype  # float32 in production; float64 in gradcheck
-    gi_all = inp @ Wih.T + bih
-    h = np.zeros((B, H), dtype=dt)
-    c = np.zeros((B, H), dtype=dt)
-    outs = np.zeros((B, T, H), dtype=dt)
-    arch = model.arch
-    cache = {"inp": inp, "hprev": np.zeros((B, T, H), dtype=dt)}
-    if arch == "gru":
-        for nm in ("r", "z", "n", "ghn"):
-            cache[nm] = np.zeros((B, T, H), dtype=dt)
-    elif arch == "lstm":
-        for nm in ("i", "f", "g", "o", "cprev", "cnew"):
-            cache[nm] = np.zeros((B, T, H), dtype=dt)
-    else:
-        cache["h2"] = np.zeros((B, T, H), dtype=dt)
-    for t in range(T):
-        gi = gi_all[:, t, :]
-        gh = h @ Whh.T + bhh
-        cache["hprev"][:, t] = h
-        if arch == "gru":
-            r = _sigmoid(gi[:, :H] + gh[:, :H])
-            z = _sigmoid(gi[:, H:2 * H] + gh[:, H:2 * H])
-            n = np.tanh(gi[:, 2 * H:] + r * gh[:, 2 * H:])
-            h2 = (1 - z) * n + z * h
-            c2 = c
-            cache["r"][:, t], cache["z"][:, t] = r, z
-            cache["n"][:, t], cache["ghn"][:, t] = n, gh[:, 2 * H:]
-        elif arch == "lstm":
-            i = _sigmoid(gi[:, :H] + gh[:, :H])
-            f = _sigmoid(gi[:, H:2 * H] + gh[:, H:2 * H])
-            g = np.tanh(gi[:, 2 * H:3 * H] + gh[:, 2 * H:3 * H])
-            o = _sigmoid(gi[:, 3 * H:] + gh[:, 3 * H:])
-            c2 = f * c + i * g
-            h2 = o * np.tanh(c2)
-            cache["i"][:, t], cache["f"][:, t] = i, f
-            cache["g"][:, t], cache["o"][:, t] = g, o
-            cache["cprev"][:, t], cache["cnew"][:, t] = c, c2
-        else:
-            h2 = np.tanh(gi + gh)
-            c2 = c
-            cache["h2"][:, t] = h2
-        mask = (t < lengths)[:, None]
-        h = np.where(mask, h2, h)
-        c = np.where(mask, c2, c)
-        outs[:, t, :] = np.where(mask, h2, 0.0)
-    cache["lengths"] = lengths
-    return outs, h, cache
+# ------------------------------------------------------------ backward
 
 
 def _backward_direction(model: SiameseRNN, cache, douts, dh_final, layer, d, grads):
@@ -150,7 +94,7 @@ def _backward_direction(model: SiameseRNN, cache, douts, dh_final, layer, d, gra
     p = f"l{layer}d{d}"
     Wih, Whh = model.w[f"{p}_Wih"], model.w[f"{p}_Whh"]
     dt = model.w["emb"].dtype
-    g_n = {"gru": 3, "lstm": 4, "rnn": 1}[model.arch]
+    g_n = _GATES[model.arch]
     dgi_all = np.zeros((B, T, g_n * H), dtype=dt)
     dgh_all = np.zeros((B, T, g_n * H), dtype=dt)
     dh = dh_final.astype(dt).copy()
@@ -213,72 +157,9 @@ def _backward_direction(model: SiameseRNN, cache, douts, dh_final, layer, d, gra
     return dgi_all @ Wih
 
 
-# --------------------------------------------------- cached forward (1 side)
-
-
-def _encode_side(model: SiameseRNN, X, lengths):
-    """Cached version of SiameseRNN._encode_all (same truncation)."""
-    lengths = np.asarray(lengths, dtype=np.int64)
-    t_max = max(int(lengths.max(initial=1)), 1)
-    if t_max < X.shape[1]:
-        X = X[:, :t_max]
-    inp = model.w["emb"][X]
-    layers = []
-    h_n = {}
-    cur = inp
-    for layer in range(model.n_layers):
-        out_f, h_f, cf = _forward_direction(model, cur, lengths, layer, 0)
-        h_n[(layer, 0)] = h_f
-        if model.bidi:
-            rev = SiameseRNN._reverse_padded(cur, lengths)
-            out_b_rev, h_b, cb = _forward_direction(model, rev, lengths, layer, 1)
-            out_b = SiameseRNN._reverse_padded(out_b_rev, lengths)
-            h_n[(layer, 1)] = h_b
-            nxt = np.concatenate([out_f, out_b], axis=2)
-        else:
-            cb = None
-            nxt = out_f
-        layers.append((cf, cb))
-        cur = nxt
-    return {"X": X, "lengths": lengths, "outputs": cur, "h_n": h_n,
-            "layer_caches": layers}
-
-
-def _pool_cached(model: SiameseRNN, side):
-    """SiameseRNN._pool with intermediates cached on ``side``."""
-    outputs, h_n = side["outputs"], side["h_n"]
-    last = model.n_layers - 1
-    p = model.pooling
-    if p == "attention":
-        a1 = np.maximum(outputs @ model.w["attn1_W"].T + model.w["attn1_b"], 0.0)
-        logits = (a1 @ model.w["attn2_W"].T + model.w["attn2_b"])[:, :, 0]
-        logits = logits - logits.max(axis=1, keepdims=True)
-        e = np.exp(logits)
-        wts = e / e.sum(axis=1, keepdims=True)
-        side["attn_a1"], side["attn_wts"] = a1, wts
-        return (wts[:, :, None] * outputs).sum(axis=1)
-    if p == "average":
-        return outputs.sum(axis=1) / outputs.shape[1]
-    if p in ("max", "maximum"):
-        side["max_idx"] = outputs.argmax(axis=1)
-        return outputs.max(axis=1)
-    if p == "hstates":
-        v = h_n[(last, 0)]
-        if model.bidi:
-            v = np.concatenate([v, h_n[(last, 1)]], axis=1)
-        return v
-    v = np.concatenate([h_n[(layer, 0)] for layer in range(model.n_layers)], axis=1)
-    if model.bidi:
-        vb = np.concatenate(
-            [h_n[(layer, 1)] for layer in range(model.n_layers)], axis=1
-        )
-        v = np.concatenate([v, vb], axis=1)
-    return v
-
-
 def _pool_backward(model: SiameseRNN, side, dv):
     """→ (douts [B,T,H*dirs] or None, dh_n dict, attn_grads dict)."""
-    outputs, h_n = side["outputs"], side["h_n"]
+    outputs = side["outputs"]
     last = model.n_layers - 1
     H = model.hidden
     p = model.pooling
@@ -336,7 +217,7 @@ def _side_backward(model: SiameseRNN, side, dv, grads):
     lengths = side["lengths"]
     dcur = douts  # grad wrt top layer's concat outputs (may be None)
     for layer in range(model.n_layers - 1, -1, -1):
-        cf, cb = side["layer_caches"][layer]
+        cf, cb = side["layers"][layer]
         B, T, _ = cf["inp"].shape
         if dcur is None:
             dcur = np.zeros(
@@ -366,17 +247,21 @@ def _side_backward(model: SiameseRNN, side, dv, grads):
 # --------------------------------------------------------- classify fwd/bwd
 
 
-_COMBINE_4X = ("attention", "average", "max", "maximum", "hstates", "hstates_layers")
+def _cached_side(model: SiameseRNN, X, lengths):
+    """One side's pooled vector via the inference forward, and the
+    BPTT cache that forward filled."""
+    side: dict = {}
+    return model._pool(*model._encode_all(X, lengths, side), side), side
 
-# benchmark escape hatch: False forces the two-pass side encoding even
-# for padding-invariant poolings (used to A/B the stacked fast path
-# within one process — host tenancy makes cross-run timing useless)
-_STACK_SIDES = True
+
+def _cross_entropy(p0, p1, y) -> float:
+    """Batch-mean CE of the 2-class softmax (clamped at 1e-12)."""
+    p_true = np.where(np.asarray(y, dtype=np.int64) == 1, p1, p0)
+    return float(-np.log(np.maximum(p_true, 1e-12)).mean())
 
 
-def forward_backward(model: SiameseRNN, X1, l1, X2, l2, y,
-                     compute_grads: bool = True):
-    """One training step's forward (+ optional backward).
+def forward_backward(model: SiameseRNN, X1, l1, X2, l2, y):
+    """One training step's forward and backward.
 
     Returns (loss, p1, pred, grads) where grads maps weight name →
     gradient of the mean cross-entropy over the batch.
@@ -397,7 +282,7 @@ def forward_backward(model: SiameseRNN, X1, l1, X2, l2, y,
     # padded positions, mirroring the reference's torch behavior — so
     # stacking to the joint t_max would change their numerics vs the
     # inference forward; they keep the per-side passes.
-    stacked = _STACK_SIDES and p not in ("attention", "average", "max", "maximum")
+    stacked = p not in ("attention", "average", "max", "maximum")
     if stacked:
         B1 = len(np.atleast_1d(l1))
         X1 = np.asarray(X1)
@@ -407,54 +292,34 @@ def forward_backward(model: SiameseRNN, X1, l1, X2, l2, y,
             X1 = np.pad(X1, ((0, 0), (0, w - X1.shape[1])))
         if X2.shape[1] != w:
             X2 = np.pad(X2, ((0, 0), (0, w - X2.shape[1])))
-        s12 = _encode_side(
+        v12, s12 = _cached_side(
             model,
             np.concatenate([X1, X2], axis=0),
             np.concatenate([np.atleast_1d(l1), np.atleast_1d(l2)], axis=0),
         )
-        v12 = _pool_cached(model, s12)
         v1, v2 = v12[:B1], v12[B1:]
     else:
-        s1 = _encode_side(model, X1, l1)
-        s2 = _encode_side(model, X2, l2)
-        v1 = _pool_cached(model, s1)
-        v2 = _pool_cached(model, s2)
-    if p in _COMBINE_4X:
-        combined = np.concatenate([v1, v2, v1 * v2, v1 - v2], axis=1)
-    elif p == "hstates_layers_simple":
-        combined = np.concatenate([v1, v2], axis=1)
-    elif p == "hstates_subtract":
-        combined = 1.0 - np.abs(v1 - v2)
-    elif p == "hstates_l2_distance":
-        combined = 1.0 - np.abs(v1 - v2) ** 2
-    else:
-        raise ValueError(f"pooling_mode {p} not supported")
-    z1 = combined @ model.w["fc1_W"].T + model.w["fc1_b"]
-    y1 = np.maximum(z1, 0.0)
-    logits = y1 @ model.w["fc2_W"].T + model.w["fc2_b"]
-    shifted = logits - logits.max(axis=1, keepdims=True)
-    e = np.exp(shifted)
-    sm = e / e.sum(axis=1, keepdims=True)
-    B = len(y)
-    y = np.asarray(y, dtype=np.int64)
-    loss = float(-np.log(np.maximum(sm[np.arange(B), y], 1e-12)).mean())
-    pred = sm.argmax(axis=1)
-    if not compute_grads:
-        return loss, sm[:, 1], pred, {}
+        v1, s1 = _cached_side(model, X1, l1)
+        v2, s2 = _cached_side(model, X2, l2)
+    head: dict = {}
+    p0, p1, pred = model.head(v1, v2, head)
+    loss = _cross_entropy(p0, p1, y)
 
     grads: dict[str, np.ndarray] = {}
-    dlogits = sm.copy()
-    dlogits[np.arange(B), y] -= 1.0
+    B = len(y)
+    dlogits = head["sm"].copy()
+    dlogits[np.arange(B), np.asarray(y, dtype=np.int64)] -= 1.0
     dlogits /= B
+    y1 = head["fc1"]
     grads["fc2_W"] = dlogits.T @ y1
     grads["fc2_b"] = dlogits.sum(0)
     dy1 = dlogits @ model.w["fc2_W"]
-    dz1 = dy1 * (z1 > 0)
-    grads["fc1_W"] = dz1.T @ combined
+    dz1 = dy1 * (y1 > 0)
+    grads["fc1_W"] = dz1.T @ head["combined"]
     grads["fc1_b"] = dz1.sum(0)
     dcomb = dz1 @ model.w["fc1_W"]
     D = v1.shape[1]
-    if p in _COMBINE_4X:
+    if p in COMBINE_4X:
         dv1 = dcomb[:, :D] + dcomb[:, 2 * D:3 * D] * v2 + dcomb[:, 3 * D:]
         dv2 = dcomb[:, D:2 * D] + dcomb[:, 2 * D:3 * D] * v1 - dcomb[:, 3 * D:]
     elif p == "hstates_layers_simple":
@@ -476,21 +341,16 @@ def forward_backward(model: SiameseRNN, X1, l1, X2, l2, y,
     else:
         _side_backward(model, s1, dv1.astype(dt), grads)
         _side_backward(model, s2, dv2.astype(dt), grads)
-    return loss, sm[:, 1], pred, grads
+    return loss, p1, pred, grads
 
 
 def classify_loss(model: SiameseRNN, X1, l1, X2, l2, y):
-    """Evaluation loss + predictions (no grads) via the cache-free
-    inference forward — identical arithmetic to the training forward
-    (asserted in the gradcheck tests) without allocating the per-step
-    BPTT caches."""
+    """Evaluation loss + predictions (no grads): the training forward
+    without a cache, so no per-step BPTT values are kept."""
     if model.pooling == "hstates_cosine":
         raise ValueError("hstates_cosine has no CE loss path")
     p0, p1, pred = model.classify(X1, l1, X2, l2)
-    y = np.asarray(y, dtype=np.int64)
-    p_true = np.where(y == 1, p1, p0)
-    loss = float(-np.log(np.maximum(p_true, 1e-12)).mean())
-    return loss, p1, pred
+    return _cross_entropy(p0, p1, y), p1, pred
 
 
 # -------------------------------------------------------------- metrics

@@ -56,6 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .cc import _driver_frame, _driver_sized
+
 __all__ = ["canopy_clusters"]
 
 
@@ -133,6 +135,17 @@ def canopy_clusters(
         .agg(F.max("_s").alias("_s"))
         .localCheckpoint()
     )
+    # the tight test stays a Spark comparison (NaN >= x holds in Spark)
+    local = _driver_sized(
+        e.select("src", "dst", (F.col("_s") >= tight).alias("tight")), driver_threshold
+    )
+    if local is not None:
+        loose_rows = list(zip(local["src"].to_pylist(), local["dst"].to_pylist()))
+        tight_rows = [r for r, t in zip(loose_rows, local["tight"].to_pylist()) if t]
+        ranks = {v: v for r in loose_rows for v in r}
+        out = sorted(set(_driver_canopies(loose_rows, tight_rows, ranks, max_iterations)))
+        return _driver_frame(e, node=[v for v, _ in out], canopy=[c for _, c in out])
+
     loose_adj = e.select("src", "dst").unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
@@ -141,24 +154,6 @@ def canopy_clusters(
         tight_e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     nodes = loose_adj.select(F.col("src").alias("a")).distinct()
-
-    if driver_threshold and e.count() <= driver_threshold:
-        ranks = {r.a: r.a for r in nodes.collect()}
-        out = _driver_canopies(
-            [(r.src, r.dst) for r in e.collect()],
-            [(r.src, r.dst) for r in tight_e.collect()],
-            ranks,
-            max_iterations,
-        )
-        import pandas as pd
-        from pyspark.sql.types import StructField, StructType
-
-        t = e.schema["src"].dataType
-        schema = StructType(
-            [StructField("node", t), StructField("canopy", t)]
-        )
-        pdf = pd.DataFrame(sorted(set(out)), columns=["node", "canopy"])
-        return e.sparkSession.createDataFrame(pdf, schema)
 
     # distributed rounds; rank == node id (hash-random by pipeline
     # convention), carried inline so rounds never re-join a rank table

@@ -157,25 +157,32 @@ def _driver_sized(edges: DataFrame, driver_threshold: int = DRIVER_THRESHOLD):
     return local if local.num_rows <= driver_threshold else None
 
 
+def _driver_frame(edges: DataFrame, **columns) -> DataFrame:
+    """Driver-side node-id ``columns`` as a frame whose columns take the
+    type of ``edges.src``, shipped as one Arrow batch (one partition the
+    JVM reads without a Python worker)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    t = edges.schema["src"].dataType
+    at = to_arrow_type(t)
+    table = pa.table({k: pa.array(v, at) for k, v in columns.items()})
+    schema = StructType([StructField(k, t) for k in columns])
+    return edges.sparkSession.createDataFrame(table, schema)
+
+
 def _driver_components(edges: DataFrame, local) -> DataFrame:
     """Close ``local`` — the collected ``[src, dst]`` rows of ``edges``
     (see :func:`_driver_sized`) — with :func:`_union_find`, self-loops
     dropped as ``connected_components`` drops them, and ship the
-    components back as one Arrow batch (one partition the JVM reads
-    without a Python worker). ``node``/``component`` take the type of
-    ``edges.src``."""
-    import pyarrow as pa
+    components back with :func:`_driver_frame`. ``node``/``component``
+    take the type of ``edges.src``."""
     import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType
 
     local = local.filter(pc.not_equal(local["src"], local["dst"]))
     node, comp = _union_find(local["src"].to_numpy(), local["dst"].to_numpy())
-    t = edges.schema["src"].dataType
-    at = to_arrow_type(t)
-    table = pa.table({"node": pa.array(node, at), "component": pa.array(comp, at)})
-    schema = StructType([StructField("node", t), StructField("component", t)])
-    return edges.sparkSession.createDataFrame(table, schema)
+    return _driver_frame(edges, node=node, component=comp)
 
 
 def connected_components(

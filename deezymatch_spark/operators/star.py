@@ -47,9 +47,11 @@ identical rule on the driver (collect is bounded by
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, functions as F
 
-from .cc import _canonical
+from .cc import _canonical, _driver_frame, _driver_sized
 
 __all__ = ["center_clusters", "star_clusters"]
 
@@ -106,6 +108,19 @@ def _round_clusters(
     e = _canonical(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint()
+    local = _driver_sized(e, driver_threshold)
+    if local is not None:
+        a, b = local["src"].to_pylist(), local["dst"].to_pylist()
+        pairs = list(zip(a + b, b + a))
+        # the ranks the distributed rounds below build: (-degree, id)
+        # for star, (0, id) for center
+        deg = Counter(a + b)
+        ranks = {v: (-n if by_degree else 0, v) for v, n in deg.items()}
+        out = _driver_rounds(pairs, ranks, max_iterations)
+        return _driver_frame(
+            e, node=[v for v, _ in out], cluster=[c for _, c in out]
+        )
+
     adj = _both_directions(e)
 
     if by_degree:
@@ -116,19 +131,6 @@ def _round_clusters(
         ranks = adj.select("a").distinct().select(
             "a", F.struct(F.lit(0).cast("long").alias("d"), F.col("a").alias("i")).alias("r")
         )
-
-    if driver_threshold and e.count() <= driver_threshold:
-        rank_map = {row.a: (row.r.d, row.r.i) for row in ranks.collect()}
-        pairs = [(row.a, row.b) for row in adj.collect()]
-        out = _driver_rounds(pairs, rank_map, max_iterations)
-        from pyspark.sql.types import StructField, StructType
-
-        t = e.schema["src"].dataType
-        schema = StructType([StructField("node", t), StructField("cluster", t)])
-        import pandas as pd
-
-        pdf = pd.DataFrame(out, columns=["node", "cluster"])
-        return e.sparkSession.createDataFrame(pdf, schema)
 
     # distributed rounds: adjacency carries both endpoints' ranks so no
     # round re-joins the rank table

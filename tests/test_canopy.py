@@ -103,3 +103,20 @@ def test_guards_and_empty(spark):
     assert run(spark, [], loose=0.3, tight=0.7) == set()
     # below-loose pairs are invisible
     assert run(spark, [(1, 2, 0.1)], loose=0.3, tight=0.7) == set()
+
+
+def test_driver_path_runs_three_jobs(spark):
+    """Under ``driver_threshold`` the canopies come from one size probe
+    that also fetches the pairs (``cc._driver_sized``) after the pair
+    checkpoint; no adjacency is checkpointed and nothing else is
+    counted or collected."""
+    df = pairs_df(spark, _random_rows(3))
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-canopy", "driver-canopy")
+    try:
+        canopy_clusters(df, loose=0.3, tight=0.7)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("driver-canopy"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 3

@@ -103,25 +103,25 @@ def test_test_mode_is_one_python_pass_and_unchanged(spark, seeded_artifact, kw):
         assert abs(g.p0 - (1.0 - g.p1)) < 1e-12
 
 
+class _Captured(Exception):
+    pass
+
+
 def test_finetune_p4_runs_each_udf_once_per_column(spark, seeded_artifact, tmp_path, monkeypatch):
     """``finetune``'s P4 filter keeps normalization and the missing-char
     ratios in their own projection under the filter, so in the frame it
-    hands to the split each UDF runs once per column (the filter pushed
-    below the projection normalized every string twice), and the rows
-    kept are those whose ratios pass on both sides."""
-
-    class Captured(Exception):
-        pass
-
+    checkpoints before the split each UDF runs once per column (the
+    filter pushed below the projection normalized every string twice),
+    and the rows kept are those whose ratios pass on both sides."""
     seen = {}
 
-    def capture(df, **_):
+    def capture(df, *_, **__):
         seen["p4"] = df
-        raise Captured
+        raise _Captured
 
-    monkeypatch.setattr(api, "train_val_test_split", capture)
     df = _pairs(spark)
-    with pytest.raises(Captured):
+    monkeypatch.setattr(type(df), "localCheckpoint", capture)
+    with pytest.raises(_Captured):
         api.finetune(spark, df, "m", seeded_artifact, models_dir=str(tmp_path))
     got = sorted(r.original_index for r in seen["p4"].collect())
     plan = seen["p4"]._jdf.queryExecution().executedPlan().toString()
@@ -137,3 +137,26 @@ def test_finetune_p4_runs_each_udf_once_per_column(spark, seeded_artifact, tmp_p
     ).collect()
     want = sorted(r.original_index for r in rows if r.r1 <= 0.5 and r.r2 <= 0.5)
     assert got == want and 0 < len(got) < 40
+
+
+@pytest.mark.parametrize("fn", ["train", "finetune"])
+def test_encoder_collect_runs_no_python(spark, seeded_artifact, tmp_path, monkeypatch, fn):
+    """``train`` and ``finetune`` checkpoint the normalized (and, in
+    ``finetune``, P4-filtered) pairs before the split, so the frame the
+    encoder collect reads runs no Python UDF: neither both branches of
+    the split nor every later read normalizes the dataset again."""
+    seen = {}
+
+    def capture(df, *_):
+        seen["df"] = df
+        raise _Captured
+
+    monkeypatch.setattr(api, "_collect_encoded", capture)
+    df = _pairs(spark)
+    with pytest.raises(_Captured):
+        if fn == "train":
+            api.train(spark, df, "m", models_dir=str(tmp_path))
+        else:
+            api.finetune(spark, df, "m", seeded_artifact, models_dir=str(tmp_path))
+    assert seen["df"].collect()
+    assert _python_nodes(seen["df"]) == 0

@@ -127,3 +127,24 @@ def test_er_pipeline_clustering_modes(spark):
     assert len(set(star_cl.values())) >= len(set(cc_cl.values()))
     with pytest.raises(ValueError, match="clustering"):
         er_stages(pages, spark=spark, clustering="bogus")
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("fn", [center_clusters, star_clusters])
+def test_driver_path_runs_three_jobs(spark, fn):
+    """Under ``driver_threshold`` a clustering checkpoints the canonical
+    edges and fetches them with one size probe (``cc._driver_sized``);
+    the ranks and adjacency come from the fetched edges on the driver,
+    with no count and no collect of ranks or adjacency."""
+    e = _edges(spark, _random_graph())
+    assert len(_jobs(spark, f"driver-{fn.__name__}", lambda: fn(e))) <= 3
